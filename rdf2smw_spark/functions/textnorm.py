@@ -1,17 +1,14 @@
 """Byte-exact string normalization (reference parity layer).
 
 Single source of truth for every character-level transform the reference
-performs, exposed three ways:
+performs, exposed two ways:
 
 1. SQL-expression generators with a ``dialect`` flag ('spark' | 'duckdb') —
    the SAME generator builds the Spark plan (via F.expr) and the DuckDB
    oracle SQL, so the driver's side-by-side comparison is exact by
    construction. All Spark-side execution stays JVM/codegen (no Python).
-2. Plain-Python reference implementations (suffix ``py_``) used by the
-   byte-exact pandas UDF for title truncation and by unit tests.
-3. A vectorized pandas UDF for the one transform built-ins can't express:
-   Go byte-length word-drop truncation (reference
-   triplestowikipageconv.go:243-252).
+2. Plain-Python reference implementations (prefix ``py_``) used by
+   unit tests as the reference for the SQL forms.
 
 Transform provenance (all /root/reference/components/):
 - P2 literal cleanup regexes: triplestowikipageconv.go:71-75 (applied to
@@ -21,14 +18,11 @@ Transform provenance (all /root/reference/components/):
 - P5 title truncation (byte semantics): triplestowikipageconv.go:243-252,302-306
 - P6 upperCaseFirst (first BYTE, i.e. ASCII-only): triplestowikipageconv.go:294-300
 - P7 local-name fallback: triplestowikipageconv.go:216-221
-- P9 spacesToUnderscores: mwxmlcreator.go:160-162
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # Ordered replacement tables — order matters, mirror the reference exactly.
 TITLE_REPLACEMENTS: list[tuple[str, str]] = [
@@ -107,11 +101,6 @@ def sql_escape_wiki_chars(expr: str, dialect: str = "spark") -> str:
     return _replace_chain(expr, ESCAPE_REPLACEMENTS)
 
 
-def sql_spaces_to_underscores(expr: str) -> str:
-    """P9: template argument names."""
-    return f"replace({expr}, ' ', '_')"
-
-
 def sql_local_name(expr: str, dialect: str = "spark") -> str:
     """P7: URI → local name (split '#' take last, split '/' take last)."""
     if dialect == "duckdb":
@@ -132,10 +121,8 @@ def sql_upper_first(expr: str, dialect: str = "spark") -> str:
 def sql_wiki_title_clean(expr: str, dialect: str = "spark") -> str:
     """P4 char cleanup → P2 regex cleanup → P6 upper-first.
 
-    Truncation (P5) is intentionally NOT part of this expression: it needs
-    a byte-length loop (pandas UDF, see truncate_long_titles); callers
-    route only titles with octet_length >= TITLE_MAX through that UDF so
-    the hot path stays JVM-side.
+    Truncation (P5) is NOT part of this expression; sql_wiki_title_full
+    adds it.
     """
     out = _replace_chain(expr, TITLE_REPLACEMENTS)
     out = _regexp_strip(out, dialect)
@@ -157,31 +144,6 @@ def sql_smw_type(is_iri_expr: str, datatype_expr: str) -> str:
         "'http://www.w3.org/2001/XMLSchema#integer',"
         "'http://www.w3.org/2001/XMLSchema#float') THEN 'Number' "
         "ELSE NULL END"
-    )
-
-
-def spark_truncate_title(expr: str) -> str:
-    """P5 as a pure-JVM expression (Spark dialect only) — no Python UDF in
-    the hot path. Semantics: largest whole-word prefix with utf-8 byte
-    length < TITLE_MAX, ' ...' appended when anything was dropped; a
-    single >=TITLE_MAX-byte word truncates to ' ...' (matches Go's
-    strings.Split/Join round trip on bits[:0]).
-
-    Prefix byte lengths are monotone nondecreasing in word count, so the
-    last qualifying prefix found by a left fold is the maximum.
-    """
-    words = f"split({expr}, ' ')"
-    folded = (
-        f"aggregate({words}, named_struct('k', 0, 'len', 0, 'best', 0), "
-        f"(acc, w) -> named_struct("
-        f"'k', acc.k + 1, "
-        f"'len', acc.len + octet_length(w) + IF(acc.k = 0, 0, 1), "
-        f"'best', IF(acc.len + octet_length(w) + IF(acc.k = 0, 0, 1) < {TITLE_MAX}, acc.k + 1, acc.best)), "
-        f"acc -> acc.best)"
-    )
-    return (
-        f"IF(octet_length({expr}) < {TITLE_MAX}, {expr}, "
-        f"concat(array_join(slice({words}, 1, {folded}), ' '), ' ...'))"
     )
 
 
@@ -315,18 +277,3 @@ def py_wiki_title_clean(s: str) -> str:
     s = py_clean_literal(s)
     s = py_truncate_title(s)
     return py_upper_first(s)
-
-
-# --- pandas UDF for the slow path (long titles only) -------------------------
-
-@F.pandas_udf(StringType())
-def truncate_title_udf(titles: pd.Series) -> pd.Series:
-    return titles.map(py_truncate_title)
-
-
-def clean_title_col(colname: str, dialect: str = "spark") -> F.Column:
-    """Spark Column: P4+P2 cleanup WITHOUT upper-first/truncation — the
-    pieces callers compose with the truncation split (operators/convert.py)."""
-    out = _replace_chain(colname, TITLE_REPLACEMENTS)
-    out = _regexp_strip(out, dialect)
-    return F.expr(out)

@@ -58,15 +58,6 @@ def bgp_star(patterns: list[DataFrame], key: str) -> DataFrame:
     return out
 
 
-def bgp_path(edges: list[tuple[DataFrame, str, str]]) -> DataFrame:
-    """Chain patterns obj→subj: edges is [(df, join_col, next_col), ...]
-    where each df joins the accumulated result on join_col."""
-    out, _, _ = edges[0]
-    for df, col, _nxt in edges[1:]:
-        out = out.join(df, col)
-    return out
-
-
 def bgp_not_exists(positive: DataFrame, negated: DataFrame, key: str) -> DataFrame:
     """SPARQL FILTER NOT EXISTS / MINUS (SPARQL 1.1 §8.1): keep the
     positive pattern's solutions whose key never appears in the negated

@@ -26,10 +26,9 @@ cross-validates the distributed loop against the textbook definition.
 Scale shape: the vocabulary (one row per distinct word) is the working
 set — 10^7-10^8 rows for web corpora, orders of magnitude under the
 corpus. Per round: one in-row pair explode + one slim (l, r) count
-shuffle + one TakeOrderedAndProject top-1 + a map-side replace; the
-loop localCheckpoints the vocab each round (lineage discipline,
-VERDICT r3 #6). Nothing touches the documents after the initial
-word-count shuffle.
+shuffle + one TakeOrderedAndProject top-1 + a map-side replace, each
+round through session.fixpoint. Nothing touches the documents after
+the initial word-count shuffle.
 """
 
 from __future__ import annotations
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdf2smw_spark.operators.text_analysis import _tokens
+from rdf2smw_spark.session import fixpoint
 
 BPE_MERGES = 6  # rounds trained by the registered query
 
@@ -81,30 +81,34 @@ def bpe_train(docs: DataFrame, k: int = BPE_MERGES) -> DataFrame:
     from the corpus, step starting at 1. Deterministic: ties broken by
     (left, right) ascending. Stops early (fewer rows) if the vocabulary
     runs out of pairs — the registered corpus always sustains k."""
-    spark = docs.sparkSession
-    vocab = (
-        word_freqs(docs)
-        .withColumn("seq", F.expr(_init_seq_spark()))
-        .select("freq", "seq")
-        .localCheckpoint()
-    )
     merges = []
-    for step in range(1, k + 1):
+
+    def step(vocab: DataFrame):
         best = (
             _pair_counts(vocab)
             .orderBy(F.col("cnt").desc(), "l", "r")
             .limit(1)
             .collect()
         )
-        if not best:
-            break
+        if not best:  # no pair left: nothing changes, the loop stops
+            return vocab, F.lit(False)
         l, r, cnt = best[0]["l"], best[0]["r"], best[0]["cnt"]
-        merges.append((step, l, r, int(cnt)))
-        vocab = vocab.withColumn(
-            "seq",
-            F.expr(f"replace(seq, ' {l} {r} ', ' {l}{r} ')"),
-        ).localCheckpoint()
-    return spark.createDataFrame(
+        merges.append((len(merges) + 1, l, r, int(cnt)))
+        return vocab.withColumn(
+            "seq", F.expr(f"replace(seq, ' {l} {r} ', ' {l}{r} ')")
+        ), None
+
+    # persisted so round 1's pair count and checkpoint share one
+    # corpus-wide word count
+    vocab0 = (
+        word_freqs(docs)
+        .withColumn("seq", F.expr(_init_seq_spark()))
+        .select("freq", "seq")
+        .persist()
+    )
+    fixpoint(vocab0, step, k)
+    vocab0.unpersist()
+    return docs.sparkSession.createDataFrame(
         merges, "step long, left string, right string, pair_count long"
     )
 

@@ -22,7 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdf2smw_spark.session import scoped_persist
+from rdf2smw_spark.session import (
+    fixpoint,
+    guarded_collect,
+    scoped_persist,
+    small_local_df,
+)
 
 # --- normalization / shingling ----------------------------------------------
 
@@ -479,9 +484,7 @@ def dedup_clusters(
     O(log diameter) — max_iter=15 covers components with diameter well
     past 2^15, i.e. any graph that fits on disk. Per round: one
     edge⋈label shuffle (|edges| slim (src, lbl) rows — pairs, not the
-    corpus) plus one label⋈label shuffle (|nodes| rows); each round
-    localCheckpoints to truncate the lineage a loop would otherwise
-    stack up.
+    corpus) plus one label⋈label shuffle (|nodes| rows).
 
     This is an ITERATIVE algorithm: it runs bounded Spark jobs while
     composing (the convergence test), like the class-depth fixpoint —
@@ -494,10 +497,11 @@ def dedup_clusters(
     pairs) is broadcast back onto the distributed node set — the
     per-round edge⋈label + label⋈label shuffles disappear. Labels are
     identical (min reachable id per component); over-limit pair lists
-    keep the distributed loop."""
+    keep the distributed loop. This is the one connected-components
+    implementation: sameas.uri_components calls it too."""
     nodes = docs.select(F.col("doc_id").alias("node")).distinct()
-    pdf = edges.select("doc_a", "doc_b").limit(CC_EDGE_COLLECT_LIMIT + 1).toPandas()
-    if len(pdf) <= CC_EDGE_COLLECT_LIMIT:
+    pdf = guarded_collect(edges.select("doc_a", "doc_b"), CC_EDGE_COLLECT_LIMIT)
+    if pdf is not None:
         parent: dict = {}
 
         def find(x):
@@ -518,8 +522,6 @@ def dedup_clusters(
         mapping = [
             (n, root) for root, ns in members.items() for n in ns if n != root
         ]
-        from rdf2smw_spark.session import small_local_df
-
         dtype = dict(edges.dtypes)["doc_a"]
         map_df = small_local_df(
             edges.sparkSession, sorted(mapping), f"node {dtype}, lbl {dtype}"
@@ -535,8 +537,8 @@ def dedup_clusters(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     sym = sym.persist()
-    cur = nodes.withColumn("lbl", F.col("node")).localCheckpoint()
-    for _ in range(max_iter):
+
+    def step(cur: DataFrame):
         nbr = (
             sym.join(
                 cur.select(F.col("node").alias("dst"), F.col("lbl").alias("dst_lbl")),
@@ -555,15 +557,13 @@ def dedup_clusters(
         # total; label(lbl) <= lbl by construction, monotone like the
         # min step.
         hop = stepped.select(F.col("node").alias("lnode"), F.col("lbl").alias("llbl"))
-        nxt = stepped.join(hop, stepped["lbl"] == hop["lnode"], "left").select(
+        return stepped.join(hop, stepped["lbl"] == hop["lnode"], "left").select(
             "node",
             F.coalesce("llbl", "lbl").alias("lbl"),
             (F.coalesce("llbl", "lbl") < F.col("prev_lbl")).alias("chg"),
-        ).localCheckpoint()
-        changed = nxt.filter("chg").limit(1).count()
-        cur = nxt.select("node", "lbl")
-        if changed == 0:
-            break
+        ), F.col("chg")
+
+    cur, _ = fixpoint(nodes.withColumn("lbl", F.col("node")), step, max_iter)
     sym.unpersist()
     return cur.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 

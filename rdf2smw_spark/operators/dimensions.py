@@ -29,6 +29,7 @@ from rdf2smw_spark.schemas import (
     URI_TYPE_CLASS,
     URI_TYPE_PREDICATE,
 )
+from rdf2smw_spark.session import fixpoint, guarded_collect
 
 
 def subject_types(triples: DataFrame) -> DataFrame:
@@ -166,18 +167,17 @@ def class_depth_fixpoint(
     while the fixpoint saturates cycle members toward max_depth — the
     documented divergence is confined to garbage ontologies, and the cap
     guarantees termination either way. Cost: one edges-sized shuffle per
-    level of the hierarchy (real ontologies: <20), with localCheckpoint
-    truncating lineage so plans stay constant-size."""
+    level of the hierarchy (real ontologies: <20). The new depth joins
+    onto the previous one, so each row carries its own `chg` flag and
+    the convergence probe needs no extra join."""
     edges_df = edges_df.persist()
     nodes = (
         edges_df.select(F.col("src").alias("uri"))
         .unionByName(edges_df.select(F.col("dst").alias("uri")))
         .distinct()
-        .persist()
     )
-    depth = nodes.withColumn("depth", F.lit(0))
-    prev_ckpt = None  # last iteration's localCheckpoint, released on replace
-    for _ in range(max_depth):
+
+    def step(depth: DataFrame):
         nd = (
             edges_df.join(
                 depth.select(F.col("uri").alias("__dst"), F.col("depth").alias("__dd")),
@@ -187,30 +187,13 @@ def class_depth_fixpoint(
             .groupBy("src")
             .agg((F.max(F.coalesce(F.col("__dd"), F.lit(0))) + 1).alias("__nd"))
         )
-        new_depth = (
-            nodes.join(nd, nodes.uri == nd.src, "left")
-            .select("uri", F.coalesce(F.col("__nd"), F.lit(0)).alias("depth"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_depth.alias("n")
-            .join(depth.alias("o"), "uri")
-            .filter(F.col("n.depth") != F.col("o.depth"))
-            .take(1)
-        )
-        # superseded checkpoint: its storage is dead weight once new_depth
-        # is materialized (localCheckpoint data is unrecoverable after
-        # unpersist, so only ever release the PREVIOUS one)
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
-        prev_ckpt = depth if _ > 0 else None
-        depth = new_depth
-        if not changed:
-            break
+        new = F.coalesce(F.col("__nd"), F.lit(0))
+        return depth.join(nd, depth.uri == nd.src, "left").select(
+            "uri", new.alias("depth"), (new != F.col("depth")).alias("chg")
+        ), F.col("chg")
+
+    depth, _ = fixpoint(nodes.withColumn("depth", F.lit(0)), step, max_depth)
     edges_df.unpersist()
-    nodes.unpersist()
-    if prev_ckpt is not None:
-        prev_ckpt.unpersist()
     return depth.select("uri", F.col("depth").cast("int").alias("depth"))
 
 
@@ -270,8 +253,8 @@ def class_depth(
             edges = raw.toPandas()  # Arrow transfer of a known-small slice
         else:
             edges_df = class_edges(triples)
-            edges = edges_df.limit(collect_limit + 1).toPandas()
-            if len(edges) > collect_limit:
+            edges = guarded_collect(edges_df, collect_limit)
+            if edges is None:
                 return class_depth_fixpoint(spark, edges_df, max_depth)
             class_layer_collected = True
     else:

@@ -15,11 +15,3 @@ def filter_pages_by_category(pages: DataFrame, allow_list: list[str]) -> DataFra
     assembly when possible, no shuffle."""
     allow = F.array(*[F.lit(c) for c in allow_list])
     return pages.filter(F.arrays_overlap(F.col("categories"), allow))
-
-
-def filter_pages_sql(page_cat_rows_sql: str, allow_list: list[str]) -> str:
-    """Oracle form over (page_title, category) rows."""
-    lst = ", ".join("'" + c.replace("'", "''") + "'" for c in allow_list)
-    return f"""
-    SELECT DISTINCT page_title FROM ({page_cat_rows_sql}) WHERE category IN ({lst})
-    """

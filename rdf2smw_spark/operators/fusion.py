@@ -30,14 +30,15 @@ Scale shape (per iteration, `iters` fixed and small):
             number of DISTINCT objects claimed for one fact slot
             (bounded), never a global window;
   - trust:  one groupBy (source) with integer AVG (SUM DIV COUNT).
-The trust frame is localCheckpoint'ed per iteration so lineage stays
-flat if callers raise `iters` (the ivf_train / fixpoint lesson).
+The trust iteration runs through session.fixpoint.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from rdf2smw_spark.session import fixpoint
 
 E6 = 1_000_000
 FUSION_ITERS = 2
@@ -115,24 +116,26 @@ def fuse_trust(claims: DataFrame, iters: int = FUSION_ITERS) -> DataFrame:
     iterations — the table a production pipeline refreshes on a slow
     batch cadence and FREEZES between refreshes so incremental claim
     deltas don't require a global re-iteration."""
-    trust = (
-        claims.select("source").distinct()
-        .withColumn("trust_e6", F.lit(E6).cast("bigint"))
-    )
     w = Window.partitionBy("subj", "pred")
-    for _ in range(iters):
+
+    def step(trust: DataFrame):
         share = (
             _conf(claims, trust)
             .withColumn("__tot", F.sum("conf").over(w))
             .withColumn("share_e6", F.expr(f"conf * {E6} DIV __tot"))
         )
-        trust = (
+        return (
             claims.join(share.select("subj", "pred", "obj", "share_e6"),
                         ["subj", "pred", "obj"])
             .groupBy("source")
             .agg(F.expr("sum(share_e6) DIV count(*)").alias("trust_e6"))
-        )
-        trust = trust.localCheckpoint(eager=False)
+        ), None
+
+    trust0 = (
+        claims.select("source").distinct()
+        .withColumn("trust_e6", F.lit(E6).cast("bigint"))
+    )
+    trust, _ = fixpoint(trust0, step, iters)
     return trust
 
 

@@ -18,8 +18,8 @@ diverges from IEEE).
 Plan shape per iteration: one (src)-keyed broadcast-or-shuffle join of
 ranks onto edges, one (dst)-keyed exact-sum aggregation, one 1-row
 dangling-mass aggregate (a bounded driver scalar, like the fixpoint
-convergence probes), and a localCheckpoint to truncate lineage. No
-vector of ranks ever collects to the driver.
+convergence probes). Every iterative operator here runs through
+session.fixpoint. No vector of ranks ever collects to the driver.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from rdf2smw_spark.session import scoped_persist
+from rdf2smw_spark.session import fixpoint, scoped_persist, small_local_df
 
 PR_ITERS = 3
 PR_DAMPING = 0.85
@@ -56,6 +56,25 @@ def link_edges(triples: DataFrame) -> DataFrame:
     )
 
 
+def _nodes(e: DataFrame) -> DataFrame:
+    """(uri): every endpoint of an (src, dst) edge frame."""
+    return (
+        e.select(F.col("src").alias("uri"))
+        .unionByName(e.select(F.col("dst").alias("uri")))
+        .distinct()
+    )
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(a, b): both directions of every (src, dst) edge, distinct and
+    persisted (scoped) — each round of the undirected loops joins it."""
+    return scoped_persist(
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
+        .distinct()
+    )
+
+
 def pagerank(
     edges: DataFrame, iters: int = PR_ITERS, damping: float = PR_DAMPING
 ) -> DataFrame:
@@ -63,25 +82,27 @@ def pagerank(
     power iterations, emitted as the exact scaled-BIGINT rank (rank ×
     1e12, half-away rounded) so the oracle compare is integer-exact.
 
-    Dangling-node mass (out-degree 0) redistributes uniformly each
-    iteration — a 1-row exact-integer aggregate broadcast INSIDE the
-    plan (no per-iteration driver collect). Ranks stay distributed;
-    the per-iteration localCheckpoint keeps the plan flat at any
-    iteration count (same discipline as ivf_train/CC)."""
-    e = scoped_persist(edges.select("src", "dst").distinct())
-    nodes = scoped_persist(
-        e.select(F.col("src").alias("uri"))
-        .unionByName(e.select(F.col("dst").alias("uri")))
-        .distinct()
-    )
-    n = nodes.count()
-    outdeg = scoped_persist(e.groupBy("src").agg(F.count("*").alias("od")))
-    base = (1 - damping) / n  # python IEEE: (1-d) then /n — mirrored in SQL
-    # rank_0 is a literal column over the already-persisted nodes frame:
-    # checkpointing it only copied the node set (one extra job per call)
-    rank = nodes.withColumn("rank", F.lit(1.0 / n))
-    prev_ckpt = None
-    for _ in range(iters):
+    This is personalized_pagerank with every node a seed: the literal
+    is_seed column makes each seed-gated term reduce to plain
+    PageRank's IEEE expression (s = n), so both share one loop."""
+    e = edges.select("src", "dst").distinct().persist()
+    nodes = _nodes(e).withColumn("is_seed", F.lit(True)).persist()
+    return _power_iteration(e, nodes, nodes.count(), iters, damping)
+
+
+def _power_iteration(
+    e: DataFrame, nodes: DataFrame, s: int, iters: int, damping: float
+) -> DataFrame:
+    """The PageRank power iteration over persisted edges `e` and nodes
+    (uri, is_seed) with `s` seeds: the reset mass and each iteration's
+    dangling mass return uniformly to the seeds. Dangling-node mass
+    (out-degree 0) is a 1-row exact-integer aggregate broadcast INSIDE
+    the plan (no per-iteration driver collect). Releases `e` and
+    `nodes` once the final ranks are checkpointed."""
+    outdeg = e.groupBy("src").agg(F.count("*").alias("od")).persist()
+    base = (1 - damping) / s  # python IEEE: (1-d) then /s — mirrored in SQL
+
+    def step(rank: DataFrame):
         r_od = rank.join(outdeg, rank.uri == outdeg.src, "left")
         contrib = (
             e.join(
@@ -95,35 +116,40 @@ def pagerank(
             .agg(F.sum("qc").alias("s"))
         )
         # dangling mass stays IN the plan as a 1-row exact-integer
-        # aggregate broadcast to every row (same arithmetic as the old
-        # driver collect: BIGINT sum, /1e12 then /n in doubles) — one
-        # job per iteration instead of two (collect + checkpoint)
+        # aggregate broadcast to every row (BIGINT sum, /1e12 then /s in
+        # doubles) — one job per iteration instead of two
         dm_f = r_od.filter(F.col("od").isNull()).agg(
             F.coalesce(F.sum(F.expr(_quant("rank"))), F.lit(0)).alias("__dm")
         )
-        new_rank = (
-            nodes.join(contrib, nodes.uri == contrib.dst, "left")
-            .crossJoin(F.broadcast(dm_f))
-            .select(
-                "uri",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0)).cast("double")
+        return nodes.join(contrib, nodes.uri == contrib.dst, "left").crossJoin(
+            F.broadcast(dm_f)
+        ).select(
+            "uri",
+            "is_seed",
+            (
+                F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0.0))
+                + F.lit(damping)
+                * (
+                    F.coalesce(F.col("s"), F.lit(0)).cast("double")
+                    / F.lit(float(_Q))
+                    + F.when(
+                        F.col("is_seed"),
+                        F.col("__dm").cast("double")
                         / F.lit(float(_Q))
-                        + F.col("__dm").cast("double")
-                        / F.lit(float(_Q))
-                        / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
-        prev_ckpt = new_rank
-        rank = new_rank
+                        / F.lit(float(s)),
+                    ).otherwise(F.lit(0.0))
+                )
+            ).alias("rank"),
+        ), None
+
+    # rank_0 is a literal column over the persisted nodes frame: the
+    # kernel never checkpoints init, which only copied the node set
+    rank0 = nodes.withColumn(
+        "rank", F.when(F.col("is_seed"), F.lit(1.0 / s)).otherwise(F.lit(0.0))
+    )
+    rank, _ = fixpoint(rank0, step, iters)
+    for df in (e, nodes, outdeg):
+        df.unpersist()
     return rank.select("uri", F.expr(_quant("rank")).alias("rank_e12"))
 
 
@@ -288,45 +314,35 @@ def bfs_hops(edges: DataFrame, max_hops: int = BFS_MAX_HOPS) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps, k=1) and the only
     driver-side value is that single row — the pattern every bounded
     scalar in this codebase follows (pagerank's dangling mass, the
-    fixpoint convergence probes). localCheckpoint per hop keeps the
-    lineage flat, exactly like the pagerank/CC/ivf_train loops. Hop
-    count is bounded a priori (no data-dependent driver loop), so the
-    plan is cycle-safe by construction — the same argument class_depth
-    makes against the reference's unguarded recursion
-    (triplestowikipageconv.go:278-292)."""
-    und = scoped_persist(
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    )
+    fixpoint convergence probes). Hop count is bounded a priori (no
+    data-dependent driver loop), so the plan is cycle-safe by
+    construction — the same argument class_depth makes against the
+    reference's unguarded recursion (triplestowikipageconv.go:278-292).
+    The visited set carries a `new` flag marking the last hop's
+    frontier, so one frame is the whole loop state."""
+    und = _undirected(edges)
     deg = und.groupBy("a").agg(F.count("*").alias("deg"))
     seed_rows = deg.orderBy(F.col("deg").desc(), F.col("a")).limit(1).collect()
     spark = edges.sparkSession
     if not seed_rows:  # empty edge set -> empty result, same schema
         return spark.createDataFrame([], "uri string, hops long")
-    seed = seed_rows[0]["a"]
-    dist = spark.createDataFrame(
-        [(seed, 0)], "uri string, hops int"
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        new = (
-            und.join(frontier.select(F.col("uri").alias("a")), "a")
-            .select(F.col("b").alias("uri"))
+
+    def step(dist: DataFrame):
+        frontier = dist.filter("new")
+        reached = (
+            und.join(frontier.select(F.col("uri").alias("a"), "hops"), "a")
+            .select(F.col("b").alias("uri"), (F.col("hops") + 1).alias("hops"))
             .distinct()
-            .join(dist, "uri", "left_anti")
-            .withColumn("hops", F.lit(h))
-            .localCheckpoint(eager=True)
+            .join(dist.select("uri"), "uri", "left_anti")
         )
-        # release superseded checkpoints only AFTER their successor is
-        # eagerly materialized (localCheckpoint data is unrecoverable
-        # once released — the pagerank/ivf_train discipline)
-        prev_dist, prev_frontier = dist, frontier
-        dist = prev_dist.unionByName(new).localCheckpoint(eager=True)
-        prev_dist.unpersist()
-        if prev_frontier is not prev_dist:
-            prev_frontier.unpersist()
-        frontier = new
+        return dist.select("uri", "hops", F.lit(False).alias("new")).unionByName(
+            reached.withColumn("new", F.lit(True))
+        ), None
+
+    seed = small_local_df(
+        spark, [(seed_rows[0]["a"], 0, True)], "uri string, hops int, new boolean"
+    )
+    dist, _ = fixpoint(seed, step, max_hops)
     return dist.select("uri", F.col("hops").cast("long").alias("hops"))
 
 
@@ -383,32 +399,23 @@ def lp_communities(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
 
     Scale shape per round: labels⋈edges equi-join on the node key, a
     (node, label) partial-agg shuffle, and a partitionBy(node) window
-    for the argmax — never a global window. localCheckpoint per round
-    flattens the lineage exactly like pagerank/BFS/ivf_train. At 10^12
-    edges each round is two slim shuffles; iters is a constant."""
-    und = scoped_persist(
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    )
-    labels = (
-        und.select(F.col("a").alias("uri")).distinct()
-        .withColumn("lbl", F.col("uri"))
-        .localCheckpoint(eager=True)
-    )
+    for the argmax — never a global window. At 10^12 edges each round
+    is two slim shuffles; iters is a constant."""
+    und = _undirected(edges)
     w = Window.partitionBy("a").orderBy(F.col("c").desc(), F.col("lbl"))
-    for _ in range(iters):
+
+    def step(labels: DataFrame):
         nb = und.join(
             labels.select(F.col("uri").alias("b"), "lbl"), "b"
         ).groupBy("a", "lbl").agg(F.count("*").alias("c"))
-        new = (
+        return (
             nb.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select(F.col("a").alias("uri"), "lbl")
-            .localCheckpoint(eager=True)
-        )
-        labels.unpersist()
-        labels = new
+        ), None
+
+    labels0 = und.select(F.col("a").alias("uri")).distinct().withColumn("lbl", F.col("uri"))
+    labels, _ = fixpoint(labels0, step, iters)
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("community_size"))
     return labels.join(sizes, "lbl").select(
         "uri", F.col("lbl").alias("community"), "community_size"
@@ -467,59 +474,47 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     exact integer at any parallelism; each normalization total is ONE
     bounded driver scalar per half-iteration (the dangling-mass
     pattern), and the renormalized score is a single IEEE division of
-    the same two integers in both engines. localCheckpoint per
-    iteration keeps the plan flat.
+    the same two integers in both engines.
 
     Scale shape per half-iteration: one equi-join of scores onto edges
     (node key) + one slim groupBy shuffle — identical to one pagerank
-    round; iters is a small constant."""
+    round; iters is a small constant. The loop state is one (uri, h, a)
+    frame over all nodes and each kernel round is ONE half-iteration
+    (authority from hub, then hub from authority), so every half reads
+    the other's checkpointed scores instead of recomputing them."""
     e = scoped_persist(edges.select("src", "dst").distinct())
-    nodes = scoped_persist(
-        e.select(F.col("src").alias("uri"))
-        .unionByName(e.select(F.col("dst").alias("uri")))
-        .distinct()
-    )
-    hub = nodes.withColumn("h", F.lit(1.0)).localCheckpoint(eager=True)
-    auth = None
-    prev = [hub]
-    for _ in range(iters):
-        aq = (
-            e.join(hub.select(F.col("uri").alias("src"), F.expr(_quant("h")).alias("qh")), "src")
-            .groupBy("dst")
-            .agg(F.sum("qh").alias("s"))
+    nodes = scoped_persist(_nodes(e))
+    rounds = 0
+
+    def step(scores: DataFrame):
+        nonlocal rounds
+        # even rounds: a <- in-sum of h over src->dst; odd: h <- out-sum of a
+        frm, to, old, new = (
+            ("src", "dst", "h", "a") if rounds % 2 == 0 else ("dst", "src", "a", "h")
+        )
+        rounds += 1
+        q = (
+            e.join(scores.select(F.col("uri").alias(frm), F.expr(_quant(old)).alias("q")), frm)
+            .groupBy(to)
+            .agg(F.sum("q").alias("s"))
         )
         # L1 normalizer stays IN the plan as a broadcast 1-row exact-
         # integer aggregate (same arithmetic as a driver collect would
-        # produce: BIGINT total, one double division) — one job per
-        # half-iteration instead of two
-        at = aq.agg(F.coalesce(F.sum("s"), F.lit(1)).alias("__t"))
-        new_auth = aq.crossJoin(F.broadcast(at)).select(
-            F.col("dst").alias("uri"),
-            (F.col("s").cast("double") / F.col("__t").cast("double")).alias("a"),
-        ).localCheckpoint(eager=True)
-        hq = (
-            e.join(new_auth.select(F.col("uri").alias("dst"), F.expr(_quant("a")).alias("qa")), "dst")
-            .groupBy("src")
-            .agg(F.sum("qa").alias("s"))
+        # produce: BIGINT total, one double division)
+        t = q.agg(F.coalesce(F.sum("s"), F.lit(1)).alias("__t"))
+        half = q.crossJoin(F.broadcast(t)).select(
+            F.col(to).alias("uri"),
+            (F.col("s").cast("double") / F.col("__t").cast("double")).alias(new),
         )
-        ht = hq.agg(F.coalesce(F.sum("s"), F.lit(1)).alias("__t"))
-        new_hub = hq.crossJoin(F.broadcast(ht)).select(
-            F.col("src").alias("uri"),
-            (F.col("s").cast("double") / F.col("__t").cast("double")).alias("h"),
-        ).localCheckpoint(eager=True)
-        for p in prev:
-            p.unpersist()
-        prev, hub, auth = [new_auth, new_hub], new_hub, new_auth
-    out = (
-        nodes.join(hub.select("uri", F.expr(_quant("h")).alias("hub_e12")), "uri", "left")
-        .join(auth.select("uri", F.expr(_quant("a")).alias("auth_e12")), "uri", "left")
-        .select(
-            "uri",
-            F.coalesce("hub_e12", F.lit(0)).alias("hub_e12"),
-            F.coalesce("auth_e12", F.lit(0)).alias("auth_e12"),
-        )
+        return scores.drop(new).join(half, "uri", "left"), None
+
+    scores0 = nodes.withColumn("h", F.lit(1.0)).withColumn("a", F.lit(None).cast("double"))
+    scores, _ = fixpoint(scores0, step, 2 * iters)
+    return scores.select(
+        "uri",
+        F.coalesce(F.expr(_quant("h")), F.lit(0)).alias("hub_e12"),
+        F.coalesce(F.expr(_quant("a")), F.lit(0)).alias("auth_e12"),
     )
-    return out
 
 
 def hits_sql(edges_sql: str, iters: int = HITS_ITERS) -> str:
@@ -584,24 +579,19 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
     as round-`rounds` survivors either way.
 
     Scale shape per round: one degree aggregation + two semi-joins, all
-    on the node key; survivors localCheckpoint so lineage stays flat."""
-    und = scoped_persist(
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    )
-    cur = und.localCheckpoint(eager=True)
-    for _ in range(rounds):
+    on the node key."""
+    und = _undirected(edges)
+
+    def step(cur: DataFrame):
         deg = cur.groupBy("a").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("a")
-        nxt = (
+        return (
             cur.join(keep, "a")
             .join(keep.select(F.col("a").alias("b")), "b")
             .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        cur.unpersist()
-        cur = nxt
+        ), None
+
+    cur, _ = fixpoint(und, step, rounds)
     return cur.groupBy("a").agg(F.count("*").alias("degree")).select(
         F.col("a").alias("uri"), "degree"
     )
@@ -974,78 +964,25 @@ def personalized_pagerank(
     entities (the standard entity-relatedness / retrieval-expansion
     primitive; Jeh & Widom 2003). `seeds` carries one `uri` column.
 
-    Same execution discipline as pagerank: exact scaled-BIGINT
-    contribution sums, the dangling scalar as a broadcast 1-row
-    aggregate inside the plan, per-iteration localCheckpoint. The seed
-    count is the only driver scalar (bounded, computed once)."""
-    e = scoped_persist(edges.select("src", "dst").distinct())
-    nodes = scoped_persist(
-        e.select(F.col("src").alias("uri"))
-        .unionByName(e.select(F.col("dst").alias("uri")))
-        .distinct()
+    Same power iteration as pagerank; the seed count is the only driver
+    scalar (bounded, computed once)."""
+    e = edges.select("src", "dst").distinct().persist()
+    nodes = (
+        _nodes(e)
         .join(
             seeds.select("uri").distinct().withColumn("__seed", F.lit(True)),
             "uri",
             "left",
         )
         .select("uri", F.coalesce("__seed", F.lit(False)).alias("is_seed"))
+        .persist()
     )
     s = nodes.filter("is_seed").count()
     if s == 0:
+        e.unpersist()
+        nodes.unpersist()
         raise ValueError("personalized_pagerank needs >= 1 seed in the graph")
-    outdeg = scoped_persist(e.groupBy("src").agg(F.count("*").alias("od")))
-    base = (1 - damping) / s  # python IEEE: (1-d) then /s — mirrored in SQL
-    # rank_0 is a literal column over the persisted nodes frame:
-    # checkpointing it only copied the node set (one extra job per call)
-    rank = nodes.withColumn(
-        "rank",
-        F.when(F.col("is_seed"), F.lit(1.0 / s)).otherwise(F.lit(0.0)),
-    )
-    prev_ckpt = None
-    for _ in range(iters):
-        r_od = rank.join(outdeg, rank.uri == outdeg.src, "left")
-        contrib = (
-            e.join(
-                r_od.select(
-                    F.col("src").alias("__src"),
-                    F.expr(_quant("rank / CAST(od AS DOUBLE)")).alias("qc"),
-                ).filter(F.col("__src").isNotNull()),
-                e.src == F.col("__src"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("qc").alias("s"))
-        )
-        dm_f = r_od.filter(F.col("od").isNull()).agg(
-            F.coalesce(F.sum(F.expr(_quant("rank"))), F.lit(0)).alias("__dm")
-        )
-        new_rank = (
-            nodes.join(contrib, nodes.uri == contrib.dst, "left")
-            .crossJoin(F.broadcast(dm_f))
-            .select(
-                "uri",
-                "is_seed",
-                (
-                    F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0.0))
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0)).cast("double")
-                        / F.lit(float(_Q))
-                        + F.when(
-                            F.col("is_seed"),
-                            F.col("__dm").cast("double")
-                            / F.lit(float(_Q))
-                            / F.lit(float(s)),
-                        ).otherwise(F.lit(0.0))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
-        prev_ckpt = new_rank
-        rank = new_rank
-    return rank.select("uri", F.expr(_quant("rank")).alias("rank_e12"))
+    return _power_iteration(e, nodes, s, iters, damping)
 
 
 def personalized_pagerank_sql(

@@ -37,7 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdf2smw_spark.schemas import SUBCLASS_PROPERTY_URI, TYPE_PROPERTY_URI
-from rdf2smw_spark.session import maybe_broadcast, scoped_persist, small_local_df
+from rdf2smw_spark.session import (
+    fixpoint,
+    guarded_collect,
+    maybe_broadcast,
+    scoped_persist,
+    small_local_df,
+)
 
 SUBPROPERTY_URI = "http://www.w3.org/2000/01/rdf-schema#subPropertyOf"
 DOMAIN_URI = "http://www.w3.org/2000/01/rdf-schema#domain"
@@ -158,8 +164,8 @@ def _transitive_closure(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int
     layers fall back to the distributed frontier iteration; both paths
     yield exactly {(u, v): v reachable from u in <= max_iter+1 edges}."""
     edges = edges.distinct()
-    pdf = edges.limit(CLOSURE_COLLECT_LIMIT + 1).toPandas()
-    if len(pdf) <= CLOSURE_COLLECT_LIMIT:
+    pdf = guarded_collect(edges, CLOSURE_COLLECT_LIMIT)
+    if pdf is not None:
         pairs = _closure_pairs(list(zip(pdf["uri"], pdf["anc"])), max_iter)
         if pairs is not None:
             return _local_closure_df(edges.sparkSession, pairs), len(pairs)
@@ -167,45 +173,48 @@ def _transitive_closure(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int
 
 
 def _transitive_closure_distributed(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Distributed fallback — frontier iteration with per-round
-    localCheckpoint (the class_ancestors loop without the depth column;
-    depths are a path property, plain reachability dedups harder)."""
-    edges = scoped_persist(edges)
-    closure = edges.localCheckpoint()
-    frontier = closure
-    for _ in range(max_iter):
-        stepped = frontier.join(
-            edges.select(F.col("uri").alias("anc"), F.col("anc").alias("__up")),
-            "anc",
-        ).select("uri", F.col("__up").alias("anc"))
-        fresh = stepped.join(closure, ["uri", "anc"], "anti").distinct().localCheckpoint()
-        if fresh.limit(1).count() == 0:
-            break
-        closure = closure.unionByName(fresh).localCheckpoint()
-        frontier = fresh
-    return closure
+    """Distributed fallback — semi-naive frontier iteration (the
+    class_ancestors loop without the depth column; depths are a path
+    property, plain reachability dedups harder). The `new` flag marks
+    the last round's pairs, which are the next frontier."""
+    edges = edges.persist()
+    up = edges.select(F.col("uri").alias("anc"), F.col("anc").alias("__up"))
+
+    def step(closure: DataFrame):
+        fresh = (
+            closure.filter("new")
+            .join(up, "anc")
+            .select("uri", F.col("__up").alias("anc"))
+            .join(closure.select("uri", "anc"), ["uri", "anc"], "anti")
+            .distinct()
+        )
+        return closure.select("uri", "anc", F.lit(False).alias("new")).unionByName(
+            fresh.withColumn("new", F.lit(True))
+        ), F.col("new")
+
+    closure, _ = fixpoint(edges.withColumn("new", F.lit(True)), step, max_iter)
+    edges.unpersist()
+    return closure.drop("new")
 
 
 def _collect_small(
     df: DataFrame, limit: int = CLOSURE_COLLECT_LIMIT
 ) -> tuple[DataFrame, int | None]:
     """Guarded-collect of a schema-sized frame to a LocalRelation
-    (limit probe, Arrow transfer) so downstream broadcasts build from
-    local rows instead of re-running the distributed plan per consumer;
-    oversized frames return unchanged with unknown count."""
-    pdf = df.limit(limit + 1).toPandas()
-    if len(pdf) <= limit:
-        from rdf2smw_spark.session import small_local_df
-
-        return (
-            small_local_df(
-                df.sparkSession,
-                [tuple(r) for r in pdf.itertuples(index=False)],
-                df.schema,
-            ),
-            len(pdf),
-        )
-    return df, None
+    (Arrow transfer) so downstream broadcasts build from local rows
+    instead of re-running the distributed plan per consumer; oversized
+    frames return unchanged with unknown count."""
+    pdf = guarded_collect(df, limit)
+    if pdf is None:
+        return df, None
+    return (
+        small_local_df(
+            df.sparkSession,
+            [tuple(r) for r in pdf.itertuples(index=False)],
+            df.schema,
+        ),
+        len(pdf),
+    )
 
 
 def _broadcast_known(df: DataFrame, n: int | None) -> DataFrame:
@@ -239,14 +248,13 @@ def rdfs_entail(triples: DataFrame, max_iter: int = 10) -> DataFrame:
     # each re-scanned the raw corpus (~1s apiece at sf0.1, guide §2.4:
     # don't repeat passes whose union is one predicate-pushed scan).
     spark = triples.sparkSession
-    probe = (
+    probe = guarded_collect(
         triples.filter(F.col("pred").isin(list(SCHEMA_PREDS)) & F.col("obj_is_iri"))
-        .select("pred", "subj", "obj")
-        .limit(CLOSURE_COLLECT_LIMIT + 1)
-        .toPandas()
+        .select("pred", "subj", "obj"),
+        CLOSURE_COLLECT_LIMIT,
     )
     fused = None
-    if len(probe) <= CLOSURE_COLLECT_LIMIT:
+    if probe is not None:
         def _edges_of(pred_uri: str) -> list[tuple[str, str]]:
             sel = probe[probe["pred"] == pred_uri]
             return list(dict.fromkeys(zip(sel["subj"], sel["obj"])))
@@ -529,13 +537,12 @@ def rdfs_entail_incremental(
     # rdfs_entail: four separate guarded collects each re-scanned the
     # base corpus)
     spark = base.sparkSession
-    probe = (
+    probe = guarded_collect(
         base.filter(F.col("pred").isin(list(SCHEMA_PREDS)) & F.col("obj_is_iri"))
-        .select("pred", "subj", "obj")
-        .limit(CLOSURE_COLLECT_LIMIT + 1)
-        .toPandas()
+        .select("pred", "subj", "obj"),
+        CLOSURE_COLLECT_LIMIT,
     )
-    if len(probe) <= CLOSURE_COLLECT_LIMIT:
+    if probe is not None:
         def _edges_of(pred_uri: str) -> list[tuple[str, str]]:
             sel = probe[probe["pred"] == pred_uri]
             return list(dict.fromkeys(zip(sel["subj"], sel["obj"])))
@@ -668,9 +675,8 @@ def owl_entail(triples: DataFrame, max_iter: int = OWL_MAX_ITER) -> DataFrame:
     derive — never the whole corpus; declaration frames are schema-
     sized broadcasts. The transitive step self-joins the closure, so
     path length doubles per round (pointer-doubling bound: max_iter=8
-    reaches 2^8-hop chains); per round one localCheckpoint truncates
-    lineage. Only IRI-object triples participate (object properties
-    by definition).
+    reaches 2^8-hop chains). Only IRI-object triples participate
+    (object properties by definition).
 
     r6: when the relevant edge set fits the guarded-collect limit the
     joint fixpoint runs on the DRIVER (one probe for declarations, one
@@ -721,10 +727,11 @@ def owl_entail(triples: DataFrame, max_iter: int = OWL_MAX_ITER) -> DataFrame:
         .join(maybe_broadcast(relevant, SCHEMA_BROADCAST_LIMIT), "pred", "semi")
         .select("subj", "pred", "obj")
         .distinct()
-        .localCheckpoint()
+        .persist()
     )
-    closure = base
-    for _ in range(max_iter):
+    spo = ["subj", "pred", "obj"]
+
+    def step(closure: DataFrame):
         d_inv = closure.join(b_inv, closure.pred == b_inv.p).select(
             F.col("obj").alias("subj"), F.col("q").alias("pred"),
             F.col("subj").alias("obj"),
@@ -739,16 +746,15 @@ def owl_entail(triples: DataFrame, max_iter: int = OWL_MAX_ITER) -> DataFrame:
         ).select(F.col("l.subj").alias("subj"), F.col("l.pred").alias("pred"),
                  F.col("r.obj").alias("obj"))
         stepped = d_inv.unionByName(d_sym).unionByName(d_trans).distinct()
-        fresh = stepped.join(
-            closure, ["subj", "pred", "obj"], "anti"
-        ).localCheckpoint()
-        if fresh.limit(1).count() == 0:
-            break
-        closure = closure.unionByName(fresh).localCheckpoint()
-    return (
-        closure.join(base, ["subj", "pred", "obj"], "anti")
-        .withColumn("obj_is_iri", F.lit(True))
-    )
+        fresh = stepped.join(closure.select(*spo), spo, "anti")
+        return closure.select(*spo, "derived", F.lit(False).alias("new")).unionByName(
+            fresh.withColumn("derived", F.lit(True)).withColumn("new", F.lit(True))
+        ), F.col("new")
+
+    init = base.withColumn("derived", F.lit(False)).withColumn("new", F.lit(False))
+    closure, _ = fixpoint(init, step, max_iter)
+    base.unpersist()
+    return closure.filter("derived").select(*spo, F.lit(True).alias("obj_is_iri"))
 
 
 def _owl_entail_local(triples: DataFrame, max_iter: int) -> DataFrame | None:
@@ -758,7 +764,7 @@ def _owl_entail_local(triples: DataFrame, max_iter: int) -> DataFrame | None:
     inverse/symmetric/transitive step over the WHOLE closure, same
     early break when a round adds nothing, same round bound."""
     # probe 1: the declaration layer (schema-sized)
-    decl_pdf = (
+    decl_pdf = guarded_collect(
         triples.filter(
             F.col("obj_is_iri")
             & (
@@ -768,12 +774,10 @@ def _owl_entail_local(triples: DataFrame, max_iter: int) -> DataFrame | None:
                     & F.col("obj").isin([OWL_SYMMETRIC_URI, OWL_TRANSITIVE_URI])
                 )
             )
-        )
-        .select("subj", "pred", "obj")
-        .limit(CLOSURE_COLLECT_LIMIT + 1)
-        .toPandas()
+        ).select("subj", "pred", "obj"),
+        CLOSURE_COLLECT_LIMIT,
     )
-    if len(decl_pdf) > CLOSURE_COLLECT_LIMIT:
+    if decl_pdf is None:
         return None
     inv: dict[str, set[str]] = {}
     sym: set[str] = set()
@@ -794,13 +798,12 @@ def _owl_entail_local(triples: DataFrame, max_iter: int) -> DataFrame | None:
         )
     # probe 2: the relevant edge set (guarded — corpus-sized on
     # adversarial data, where the distributed loop takes over)
-    base_pdf = (
+    base_pdf = guarded_collect(
         triples.filter(F.col("obj_is_iri") & F.col("pred").isin(sorted(relevant)))
-        .select("subj", "pred", "obj")
-        .limit(CLOSURE_COLLECT_LIMIT + 1)
-        .toPandas()
+        .select("subj", "pred", "obj"),
+        CLOSURE_COLLECT_LIMIT,
     )
-    if len(base_pdf) > CLOSURE_COLLECT_LIMIT:
+    if base_pdf is None:
         return None
     base = set(zip(base_pdf["subj"], base_pdf["pred"], base_pdf["obj"]))
     closure = set(base)

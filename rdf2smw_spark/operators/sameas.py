@@ -12,9 +12,10 @@ parallelism). The rewrite then maps subjects and IRI objects of every
 non-sameAs triple through the component map; literals pass through.
 
 Scale shape: the CC runs over |sameAs| edges only — a small fraction of
-the corpus (alias links, not facts) — with the same hash-to-min +
-pointer-doubling loop as operators/dedup.py:dedup_clusters (O(log
-diameter) rounds, localCheckpoint per round), here on string labels.
+the corpus (alias links, not facts) — through operators/dedup.py:
+dedup_clusters, here on string labels (driver union-find when the edge
+list fits its guarded collect, hash-to-min + pointer doubling in
+O(log diameter) rounds otherwise).
 The rewrite is two joins against the component map, broadcast when the
 map is small enough (maybe_broadcast, same 5M guard as fuzzy linking),
 shuffle fallback otherwise — never a corpus self-join.
@@ -38,47 +39,24 @@ CANON_MAP_BROADCAST_LIMIT = 5_000_000  # rows; same guard class as fuzzy linking
 
 def uri_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
     """(uri, canon): connected components over an undirected (a, b) URI
-    edge list; canon = lexicographic MIN reachable URI. Same algorithm
-    as dedup_clusters (hash-to-min + pointer doubling, O(log diameter)
-    iterations, localCheckpoint-truncated lineage) on string node ids —
-    F.least and MIN order strings the same way in Spark and DuckDB
-    (binary collation), so the labels are engine-portable."""
-    sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    edge list; canon = lexicographic MIN reachable URI. This is
+    dedup_clusters over the edge endpoints — F.least, MIN and Python's
+    str order all order strings the same way as DuckDB (binary
+    collation / code point), so the labels are engine-portable. The
+    edges are persisted (scoped) because both the node set and the CC
+    read them."""
+    from rdf2smw_spark.operators.dedup import dedup_clusters
+    from rdf2smw_spark.session import scoped_persist
+
+    pairs = scoped_persist(
+        edges.select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
     )
-    sym = sym.persist()
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    cur = nodes.withColumn("lbl", F.col("node")).localCheckpoint()
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(
-                cur.select(F.col("node").alias("dst"), F.col("lbl").alias("dst_lbl")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("dst_lbl").alias("nbr_lbl"))
-        )
-        stepped = cur.join(nbr, cur["node"] == nbr["src"], "left").select(
-            "node",
-            F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-            cur["lbl"].alias("prev_lbl"),
-        )
-        hop = stepped.select(F.col("node").alias("lnode"), F.col("lbl").alias("llbl"))
-        nxt = (
-            stepped.join(hop, stepped["lbl"] == hop["lnode"], "left")
-            .select(
-                "node",
-                F.coalesce("llbl", "lbl").alias("lbl"),
-                (F.coalesce("llbl", "lbl") < F.col("prev_lbl")).alias("chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = nxt.filter("chg").limit(1).count()
-        cur = nxt.select("node", "lbl")
-        if changed == 0:
-            break
-    sym.unpersist()
-    return cur.select(F.col("node").alias("uri"), F.col("lbl").alias("canon"))
+    nodes = pairs.select(F.col("doc_a").alias("doc_id")).unionByName(
+        pairs.select(F.col("doc_b").alias("doc_id"))
+    )
+    return dedup_clusters(nodes, pairs, max_iter).select(
+        F.col("doc_id").alias("uri"), F.col("cluster_id").alias("canon")
+    )
 
 
 def sameas_canonicalize(
@@ -236,11 +214,14 @@ def class_ancestors(triples, max_iter: int = 10):
     """(uri, ancestor, depth): the rdfs:subClassOf transitive closure
     with MINIMUM hop depth — the materialized path table SPARQL property
     paths (subClassOf+) and reasoners query against. Iterative frontier
-    extension over the CLASS layer only (a sliver of the corpus);
-    per round one join + a min-depth dedup + localCheckpoint, stopping
-    when a round adds nothing — O(hierarchy height) rounds, and real
-    ontologies are shallow (<20)."""
+    extension over the CLASS layer only (a sliver of the corpus); per
+    round one join + an anti-join against the closure, stopping when a
+    round adds nothing — O(hierarchy height) rounds, and real
+    ontologies are shallow (<20). Every pair found in round k is first
+    reached at depth k + 1, so a pair's first depth is its minimum; the
+    `new` flag marks the last round's pairs (the next frontier)."""
     from rdf2smw_spark.schemas import SUBCLASS_PROPERTY_URI
+    from rdf2smw_spark.session import fixpoint
 
     edges = (
         triples.filter(
@@ -250,32 +231,24 @@ def class_ancestors(triples, max_iter: int = 10):
         .distinct()
         .persist()
     )
-    closure = edges.withColumn("depth", F.lit(1).cast("long")).localCheckpoint()
-    frontier = closure
-    for _ in range(max_iter):
-        stepped = (
-            frontier.join(
-                edges.select(
-                    F.col("uri").alias("ancestor"), F.col("ancestor").alias("__up")
-                ),
-                "ancestor",
-            )
+    up = edges.select(F.col("uri").alias("ancestor"), F.col("ancestor").alias("__up"))
+
+    def step(closure: DataFrame):
+        fresh = (
+            closure.filter("new")
+            .join(up, "ancestor")
             .select("uri", F.col("__up").alias("ancestor"), (F.col("depth") + 1).alias("depth"))
+            .join(closure.select("uri", "ancestor"), ["uri", "ancestor"], "anti")
+            .distinct()
         )
-        fresh = stepped.join(
-            closure.select("uri", "ancestor"), ["uri", "ancestor"], "anti"
-        ).localCheckpoint()
-        if fresh.limit(1).count() == 0:
-            break
-        closure = (
-            closure.unionByName(fresh)
-            .groupBy("uri", "ancestor")
-            .agg(F.min("depth").alias("depth"))
-            .localCheckpoint()
-        )
-        frontier = fresh
+        return closure.select(
+            "uri", "ancestor", "depth", F.lit(False).alias("new")
+        ).unionByName(fresh.withColumn("new", F.lit(True))), F.col("new")
+
+    init = edges.withColumn("depth", F.lit(1).cast("long")).withColumn("new", F.lit(True))
+    closure, _ = fixpoint(init, step, max_iter)
     edges.unpersist()
-    return closure
+    return closure.drop("new")
 
 
 def class_ancestors_sql(triples_sql: str) -> str:

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdf2smw_spark.session import scoped_persist
+from rdf2smw_spark.session import fixpoint, scoped_persist
 
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
@@ -523,17 +523,17 @@ def ivf_train(
     from pyspark.sql import Window
 
     e = _with_norm(emb.select("vec_id", "embedding"))
-    cent = e.filter(F.col("vec_id") < n_lists).select(
+    cent0 = e.filter(F.col("vec_id") < n_lists).select(
         F.col("vec_id").alias("list_id"),
         F.col("embedding").alias("cvec"),
         F.col("norm").alias("cnorm"),
     )
-    prev_ckpt = None  # superseded checkpoint, released once replaced
-    for _ in range(iters):
-        score = F.round(
-            F.expr(DOT.format(a="embedding", b="cvec")) / (F.col("norm") * F.col("cnorm")), 6
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("list_id"))
+    w = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("list_id"))
+    score = F.round(
+        F.expr(DOT.format(a="embedding", b="cvec")) / (F.col("norm") * F.col("cnorm")), 6
+    )
+
+    def step(cent: DataFrame):
         assigned = (
             e.join(F.broadcast(cent))
             .select("vec_id", "embedding", "norm", "list_id", score.alias("score"))
@@ -574,24 +574,14 @@ def ivf_train(
             )
         )
         # empty clusters keep the previous centroid (left join old -> new)
-        cent = (
+        kept = (
             cent.select("list_id", F.col("cvec").alias("old_cvec"))
             .join(new_cent, "list_id", "left")
             .select("list_id", F.coalesce("cvec", "old_cvec").alias("cvec"))
         )
-        cent = _with_norm(cent, "cvec").withColumnRenamed("norm", "cnorm")
-        # truncate lineage per iteration (round-3 verdict #6): without
-        # this the centroid plan nests one full assignment+mean subtree
-        # per iteration — harmless at iters=2, plan explosion at 20+.
-        # The table is n_lists rows, so the checkpoint is ~free; same
-        # discipline as the class-depth fixpoint and dedup_clusters.
-        # eager=True materializes the NEW checkpoint before the previous
-        # one is released (localCheckpoint data is unrecoverable after
-        # unpersist); the final iteration's stays — the result reads it.
-        cent = cent.localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
-        prev_ckpt = cent
+        return _with_norm(kept, "cvec").withColumnRenamed("norm", "cnorm"), None
+
+    cent, _ = fixpoint(cent0, step, iters)
     return cent.select("list_id", F.posexplode("cvec").alias("pos", "component"))
 
 

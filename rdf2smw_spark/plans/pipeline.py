@@ -179,7 +179,9 @@ def _side_input_signature(df: DataFrame) -> str:
     form. One map-side pass, a 1-row aggregate, no sort, no collect of
     data — O(|side input|), which is by design tiny next to the corpus
     (eval suites, curated dictionaries). Any single-row change flips the
-    XOR; XOR+SUM together also catch duplicated-row changes."""
+    XOR; XOR+SUM together also catch duplicated-row changes. The sum is
+    exact over DECIMAL(38,0): a BIGINT sum of 64-bit hashes overflows
+    (an ANSI error) within a handful of rows."""
     cols = sorted(df.columns)
     h = F.xxhash64(
         *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols]
@@ -189,7 +191,7 @@ def _side_input_signature(df: DataFrame) -> str:
         .agg(
             F.count("*").alias("n"),
             F.expr("bit_xor(__h)").alias("x"),
-            F.sum("__h").alias("s"),
+            F.sum(F.col("__h").cast("decimal(38,0)")).alias("s"),
         )
         .first()
     )

@@ -21,13 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 # runner, pipeline, tests) call release_scoped_caches() afterwards.
 #
 # Blast radius (ADVICE r3): the registry is PROCESS-GLOBAL, not per-
-# composition — release_scoped_caches() unpersists frames registered by
+# composition — release_scoped_caches() releases entries registered by
 # ANY in-flight composition in the process, including another thread's.
-# The failure mode is recomputation (a released frame re-materializes on
-# next use), never wrong answers, so the single sequential driver this
-# repo runs (CLI, bench, pytest, oracle checker) is safe; a caller
-# interleaving pipelines concurrently in one process must serialize its
-# release points at composition boundaries.
+# A released persist re-materializes on next use; a released checkpoint
+# (scoped_local_checkpoint, a fixpoint's final state) has no lineage to
+# recompute from, so re-using it fails loudly with a SparkException.
+# The single sequential driver this repo runs (CLI, bench, pytest,
+# oracle checker) only releases after its terminal action; a caller
+# interleaving compositions in one process must serialize its release
+# points at composition boundaries.
 
 _SCOPED_CACHES: list[DataFrame] = []
 
@@ -54,18 +56,23 @@ class _CheckpointHandle:
 
     def unpersist(self, blocking: bool = False) -> None:
         lp = self._df._jdf.queryExecution().analyzed()
-        if lp.getClass().getSimpleName() == "LogicalRDD":
-            lp.rdd().unpersist(blocking)
+        kind = lp.getClass().getSimpleName()
+        if kind != "LogicalRDD":
+            raise RuntimeError(
+                f"checkpoint release expected a LogicalRDD plan, got {kind}:"
+                " its backing blocks would stay registered"
+            )
+        lp.rdd().unpersist(blocking)
 
 
-def scoped_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """localCheckpoint + register its backing RDD for bulk release.
+def scoped_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint + register its backing RDD for bulk release.
 
     Unlike a scoped persist, a released checkpoint is UNRECOVERABLE (no
     lineage to recompute from): callers must only release at composition
     boundaries, after the terminal action — which is the existing
     release_scoped_caches contract."""
-    ck = df.localCheckpoint(eager=eager)
+    ck = df.localCheckpoint(eager=True)
     _SCOPED_CACHES.append(_CheckpointHandle(ck))  # type: ignore[arg-type]
     return ck
 
@@ -74,8 +81,9 @@ def release_scoped_caches(blocking: bool = False) -> int:
     """Unpersist every scoped cache; returns how many were released.
     Safe to call repeatedly; recomputation (not wrong answers) is the
     worst case if a released persisted frame is re-used afterwards
-    (a released scoped_local_checkpoint frame instead fails loudly —
-    release only at composition boundaries)."""
+    (a released checkpoint instead fails loudly — release only at
+    composition boundaries). An entry whose release raises is dropped
+    from the registry and not counted."""
     n = 0
     while _SCOPED_CACHES:
         df = _SCOPED_CACHES.pop()
@@ -85,6 +93,56 @@ def release_scoped_caches(blocking: bool = False) -> int:
         except Exception:
             pass
     return n
+
+
+def guarded_collect(df: DataFrame, limit: int):
+    """The driver-side size guard: df as a pandas frame when it has at
+    most `limit` rows, None when it has more. One job — the
+    limit(limit + 1) probe IS the transfer, so an oversized frame never
+    ships more than limit + 1 rows and a small one is not scanned
+    twice."""
+    pdf = df.limit(limit + 1).toPandas()
+    return pdf if len(pdf) <= limit else None
+
+
+def fixpoint(init: DataFrame, step, max_rounds: int):
+    """Iterate state <- step(state) at most `max_rounds` times ->
+    (state, converged).
+
+    step(state) returns (next_state, changed): `changed` is None for a
+    fixed-round loop, or a boolean Column expression over next_state's
+    columns by name (e.g. F.col("new")) marking the rows this round
+    changed; the loop converges (and stops) on the first round whose
+    changed rows are empty. `converged` is True only then — a
+    fixed-round loop, or one stopped by its cap, returns False.
+
+    Materialization policy, shared by every iterative operator: each
+    round's state is localCheckpointed eagerly, so the plan handed to
+    the next round is constant-size however many rounds run (without
+    it round k nests k copies of the step's subtree), and the
+    convergence probe (one limit(1) count over the checkpoint) never
+    recomputes the round. A superseded checkpoint is released only
+    after its successor is materialized (checkpoint blocks have no
+    lineage to recompute from), and only checkpoints made here are
+    released: `init` is never checkpointed or released — the caller
+    owns it. The final state's checkpoint is registered with the scoped
+    registry, so release_scoped_caches() frees it after the terminal
+    action."""
+    state, held, converged = init, None, False
+    try:
+        for _ in range(max_rounds):
+            nxt, changed = step(state)
+            ck = nxt.localCheckpoint(eager=True)
+            if held is not None:
+                held.unpersist()
+            state, held = ck, _CheckpointHandle(ck)
+            if changed is not None and ck.filter(changed).limit(1).count() == 0:
+                converged = True
+                break
+    finally:  # a failing round still leaves its predecessor releasable
+        if held is not None:
+            _SCOPED_CACHES.append(held)  # type: ignore[arg-type]
+    return state, converged
 
 
 def get_spark(

@@ -123,6 +123,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdf2smw_spark.session import fixpoint
+
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -1222,12 +1224,12 @@ def _path_closure(
     rel: DataFrame, max_iter: int = 30, with_g: bool = False
 ) -> DataFrame:
     """Transitive closure of a path relation (OneOrMorePath, SPARQL
-    §9.3: a SET of term pairs). Frontier extension — one join + one
-    anti-join per round, localCheckpoint to truncate lineage, O(graph
-    diameter) rounds. Paths traverse the schema/class layer in
-    practice (a sliver of a 10^12-triple corpus), so each round's
-    frontier is small; the anti-join keys co-partition with the
-    closure across rounds.
+    §9.3: a SET of term pairs). Semi-naive frontier extension — one
+    join + one anti-join per round, O(graph diameter) rounds; the `new`
+    flag marks the last round's pairs, which are the next frontier.
+    Paths traverse the schema/class layer in practice (a sliver of a
+    10^12-triple corpus), so each round's frontier is small; the
+    anti-join keys co-partition with the closure across rounds.
 
     with_g: the relation carries a named-graph column `g` (GRAPH ?var
     scope) — g rides the pair key through the fixpoint, so the closure
@@ -1235,59 +1237,52 @@ def _path_closure(
     (per-graph closures without a per-graph driver loop)."""
     cols = _PATH_COLS + (["g"] if with_g else [])
     rel = rel.select(*cols).distinct().persist()
-    closure = rel.localCheckpoint(eager=True)
-    frontier = closure
-    for _ in range(max_iter):
-        sel = [
-            F.col("f.s").alias("s"), F.col("f.s_iri").alias("s_iri"),
-            F.col("f.s_dt").alias("s_dt"),
-            F.col("e.o").alias("o"), F.col("e.o_iri").alias("o_iri"),
-            F.col("e.o_dt").alias("o_dt"),
-        ] + ([F.col("f.g").alias("g")] if with_g else [])
+    sel = [
+        F.col("f.s").alias("s"), F.col("f.s_iri").alias("s_iri"),
+        F.col("f.s_dt").alias("s_dt"),
+        F.col("e.o").alias("o"), F.col("e.o_iri").alias("o_iri"),
+        F.col("e.o_dt").alias("o_dt"),
+    ] + ([F.col("f.g").alias("g")] if with_g else [])
+
+    # anti-join on FULL term identity: lexical + kind + datatype. The
+    # dt columns join through never-NULL sentinel keys computed in the
+    # same name-keyed join shape that the rest of the loop uses ("\x00"
+    # = no datatype; no RDF datatype IRI contains it) — a fresh pair
+    # differing from a seen one only in literal datatype is NOT dropped.
+    # The seen side is column-RENAMED (not aliased) — dataset aliases
+    # over a unioned lineage trip Catalyst's Union constraint rewrite.
+    def with_dt_keys(frame: DataFrame) -> DataFrame:
+        return frame.withColumn(
+            "s_dtk", F.coalesce(F.col("s_dt"), F.lit("\x00"))
+        ).withColumn("o_dtk", F.coalesce(F.col("o_dt"), F.lit("\x00")))
+
+    anti_keys = ["s", "s_iri", "s_dtk", "o", "o_iri", "o_dtk"] + (
+        ["g"] if with_g else []
+    )
+
+    def step(closure: DataFrame):
         stepped = (
-            frontier.alias("f")
+            closure.filter("new").alias("f")
             .join(rel.alias("e"), _term_eq("f", "e", with_g))
             .select(*sel)
             .distinct()
         )
-        # anti-join on FULL term identity (datatypes null-safe): keying
-        # on lexical+kind alone would drop a fresh pair that differs
-        # from a seen one only in literal datatype. The seen side is
-        # column-RENAMED (not aliased) — dataset aliases over a unioned
-        # checkpoint lineage trip Catalyst's Union constraint rewrite.
-        # anti-join on FULL term identity: lexical + kind + datatype.
-        # The dt columns join through never-NULL sentinel keys computed
-        # in the same name-keyed join shape that the rest of the loop
-        # uses ("\x00" = no datatype; no RDF datatype IRI contains it) —
-        # a fresh pair differing from a seen one only in literal
-        # datatype is NOT dropped.
-        def with_dt_keys(frame: DataFrame) -> DataFrame:
-            return frame.withColumn(
-                "s_dtk", F.coalesce(F.col("s_dt"), F.lit("\x00"))
-            ).withColumn("o_dtk", F.coalesce(F.col("o_dt"), F.lit("\x00")))
-
-        anti_keys = ["s", "s_iri", "s_dtk", "o", "o_iri", "o_dtk"] + (
-            ["g"] if with_g else []
-        )
         fresh = (
             with_dt_keys(stepped)
-            .join(
-                with_dt_keys(closure).select(*anti_keys),
-                anti_keys,
-                "left_anti",
-            )
+            .join(with_dt_keys(closure).select(*anti_keys), anti_keys, "left_anti")
             .drop("s_dtk", "o_dtk")
-            .localCheckpoint(eager=True)
         )
-        if fresh.limit(1).count() == 0:
-            rel.unpersist()
-            return closure
-        closure = closure.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = fresh
+        return closure.select(*cols, F.lit(False).alias("new")).unionByName(
+            fresh.withColumn("new", F.lit(True))
+        ), F.col("new")
+
+    closure, converged = fixpoint(rel.withColumn("new", F.lit(True)), step, max_iter)
     rel.unpersist()
-    raise SparqlSyntaxError(
-        f"property-path closure did not converge in {max_iter} rounds"
-    )
+    if not converged:
+        raise SparqlSyntaxError(
+            f"property-path closure did not converge in {max_iter} rounds"
+        )
+    return closure.drop("new")
 
 
 def _graph_terms(triples: DataFrame, with_g: bool = False) -> DataFrame:
@@ -2278,35 +2273,36 @@ class _Compiler:
         res = res.distinct()
         if q.where is None:
             res = F.broadcast(res)  # a literal IRI list is always tiny
-        desc = self.triples.join(
-            res, self.triples["subj"] == res["r"], "left_semi"
-        )
         # CBD closure over blank-node objects (term model: blank =
-        # not-IRI with NULL datatype and a '_:' lexical form)
-        seen = res.select("r")
-        for _i in range(32):
-            blanks = (
-                desc.filter(
-                    ~F.col("obj_is_iri") & F.col("obj_datatype").isNull()
-                    & F.col("obj").startswith("_:")
-                )
-                .select(F.col("obj").alias("r")).distinct()
-                .join(seen, "r", "left_anti")
-                .localCheckpoint()
-            )
-            if not blanks.limit(1).count():
-                return desc
-            seen = seen.unionByName(blanks).localCheckpoint()
-            desc = desc.unionByName(
-                self.triples.join(
-                    F.broadcast(blanks),
-                    self.triples["subj"] == blanks["r"], "left_semi",
-                )
-            ).localCheckpoint()
-        raise RuntimeError(
-            "DESCRIBE: blank-node chain deeper than 32 levels — "
-            "refusing to truncate the bounded description silently"
+        # not-IRI with NULL datatype and a '_:' lexical form): the loop
+        # state is the set of described resources, `new` marking the
+        # last level; the description is every triple whose subject is
+        # in that set (the levels are disjoint, so this equals the union
+        # of per-level semi-joins)
+        blank_obj = (
+            ~F.col("obj_is_iri") & F.col("obj_datatype").isNull()
+            & F.col("obj").startswith("_:")
         )
+
+        def step(seen: DataFrame):
+            level = seen.filter("new")
+            blanks = (
+                self.triples.join(level, self.triples["subj"] == level["r"], "left_semi")
+                .filter(blank_obj)
+                .select(F.col("obj").alias("r")).distinct()
+                .join(seen.select("r"), "r", "left_anti")
+            )
+            return seen.select("r", F.lit(False).alias("new")).unionByName(
+                blanks.withColumn("new", F.lit(True))
+            ), F.col("new")
+
+        seen, converged = fixpoint(res.withColumn("new", F.lit(True)), step, 32)
+        if not converged:
+            raise RuntimeError(
+                "DESCRIBE: blank-node chain deeper than 32 levels — "
+                "refusing to truncate the bounded description silently"
+            )
+        return self.triples.join(seen, self.triples["subj"] == seen["r"], "left_semi")
 
 
     # -- UPDATE -------------------------------------------------------------------

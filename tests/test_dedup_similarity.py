@@ -292,22 +292,48 @@ def test_ivf_kmeans_trains_and_separates(spark, sf_dir):
     assert assign.select("list_id").distinct().count() > 1
 
 
-def test_cc_driver_union_find_equals_distributed(spark, monkeypatch):
-    """r6: the guarded driver union-find path of dedup_clusters must
-    label exactly like the distributed hash-to-min loop, including
-    transitive chains and singletons."""
-    import rdf2smw_spark.operators.dedup as dd_mod
-
+def _cc_dedup_rows(spark):
     docs = spark.createDataFrame(
         [(i,) for i in range(10)], "doc_id long"
     ).withColumn("text", F.lit("t"))
     edges = spark.createDataFrame(
         [(1, 5), (5, 9), (2, 3), (7, 2)], "doc_a long, doc_b long"
     )
-    fast = {(r.doc_id, r.cluster_id)
-            for r in dd_mod.dedup_clusters(docs, edges).collect()}
-    monkeypatch.setattr(dd_mod, "CC_EDGE_COLLECT_LIMIT", -1)
-    slow = {(r.doc_id, r.cluster_id)
-            for r in dd_mod.dedup_clusters(docs, edges).collect()}
+    return {(r.doc_id, r.cluster_id) for r in dd.dedup_clusters(docs, edges).collect()}
+
+
+def _cc_sameas_rows(spark):
+    from rdf2smw_spark.operators import sameas as sa
+    from rdf2smw_spark.schemas import TRIPLE_SCHEMA
+
+    u = "http://e/{}".format
+    rows = [
+        (u("c"), sa.OWL_SAMEAS, u("b"), True, None, "s"),
+        (u("b"), sa.OWL_SAMEAS, u("a"), True, None, "s"),
+        (u("y"), sa.OWL_SAMEAS, u("x"), True, None, "s"),
+        (u("c"), u("p"), u("y"), True, None, "s"),
+        (u("b"), u("p"), "lit", False, None, "s"),
+        (u("z"), u("p"), u("c"), True, None, "s"),
+    ]
+    out = sa.sameas_canonicalize(spark.createDataFrame(rows, TRIPLE_SCHEMA))
+    return {tuple(r) for r in out.collect()}
+
+
+@pytest.mark.parametrize("rows", [_cc_dedup_rows, _cc_sameas_rows],
+                         ids=["dedup_clusters", "sameas_canonicalize"])
+def test_cc_driver_union_find_equals_distributed(spark, monkeypatch, rows):
+    """r6: the guarded driver union-find path of the one CC
+    implementation (dedup_clusters, which sameAs canonicalization calls)
+    must label exactly like the distributed hash-to-min loop, including
+    transitive chains and singletons."""
+    fast = rows(spark)
+    monkeypatch.setattr(dd, "CC_EDGE_COLLECT_LIMIT", -1)
+    slow = rows(spark)
     assert fast == slow
-    assert (9, 1) in fast and (3, 2) in fast and (7, 2) in fast and (0, 0) in fast
+    if rows is _cc_dedup_rows:
+        assert (9, 1) in fast and (3, 2) in fast and (7, 2) in fast and (0, 0) in fast
+    else:
+        u = "http://e/{}".format
+        assert (u("a"), u("p"), "lit", False, None, "s") in fast
+        assert (u("a"), u("p"), u("x"), True, None, "s") in fast
+        assert (u("z"), u("p"), u("a"), True, None, "s") in fast

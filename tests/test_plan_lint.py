@@ -86,3 +86,61 @@ def test_plan_lint(spark, sf_dir, name):
         )
     finally:
         release_scoped_caches()
+
+
+# --- source lint: one materialization policy ---------------------------------
+#
+# Iterative operators checkpoint through session.fixpoint and size-guard
+# driver collects through session.guarded_collect; a hand-rolled loop
+# checkpoint or limit(L + 1).toPandas() probe anywhere else is a second
+# policy. The non-loop sites below stand in for storage reads (IVM
+# snapshots, streaming micro-batches), each with its expected count.
+_LOCAL_CHECKPOINT_OK = {
+    "session.py": None,  # the kernel itself: any number
+    "queries.py": 2,  # IVM min/max view snapshots
+    "streaming/stream.py": 5,  # micro-batch deltas and page snapshots
+}
+_GUARDED_COLLECT = re.compile(r"limit\([^()]*\+\s*1\)\s*\.toPandas\(\)")
+# Every iterative loop, by file. pagerank and personalized_pagerank share
+# one power iteration, and sameas.uri_components calls
+# dedup.dedup_clusters (the one connected-components loop): a second
+# copy of either would add a site here.
+_FIXPOINT_SITES = {
+    "operators/graph.py": 5,  # power iteration, bfs, lp, hits, kcore
+    "operators/sameas.py": 1,  # class_ancestors
+    "operators/rdfs.py": 2,  # distributed closure, owl_entail
+    "operators/dedup.py": 1,  # connected components
+    "operators/dimensions.py": 1,  # class_depth_fixpoint
+    "sparql.py": 2,  # property-path closure, DESCRIBE blank chains
+    "operators/similarity.py": 1,  # ivf_train
+    "operators/fusion.py": 1,  # fuse_trust
+    "operators/bpe.py": 1,  # bpe_train
+}
+
+
+def test_source_lint_one_fixpoint_and_guarded_collect():
+    import pathlib
+
+    import rdf2smw_spark
+
+    root = pathlib.Path(rdf2smw_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        n = src.count(".localCheckpoint(")
+        allowed = _LOCAL_CHECKPOINT_OK.get(rel, 0)
+        if allowed is not None:
+            assert n == allowed, (
+                f"{rel}: {n} .localCheckpoint( call(s), expected {allowed} — "
+                "iterate through session.fixpoint instead"
+            )
+        n_fix = len(re.findall(r"(?<![\w.])fixpoint\(", src))
+        if rel != "session.py":
+            assert n_fix == _FIXPOINT_SITES.get(rel, 0), (
+                f"{rel}: {n_fix} fixpoint loop(s), expected "
+                f"{_FIXPOINT_SITES.get(rel, 0)} — reuse the existing loop"
+            )
+            assert not _GUARDED_COLLECT.search(src), (
+                f"{rel}: hand-rolled limit(L + 1).toPandas() guard — "
+                "use session.guarded_collect"
+            )

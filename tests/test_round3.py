@@ -5,6 +5,7 @@ ADVICE items)."""
 import os
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from rdf2smw_spark.extract import extract_text, latest_capture
@@ -152,6 +153,76 @@ def test_scoped_local_checkpoint_releases_backing_blocks(spark):
     assert new_ids, "localCheckpoint should register a persistent RDD"
     release_scoped_caches(blocking=True)
     assert not (ids() & new_ids), "checkpoint blocks must be gone after release"
+
+
+def _fixpoint_family(spark, monkeypatch, family):
+    """One call per iterative-loop family, on inputs that take several
+    rounds (and the distributed path where a driver path exists)."""
+    from rdf2smw_spark.schemas import SUBCLASS_PROPERTY_URI, TRIPLE_SCHEMA
+
+    chain = [(f"n{i}", f"n{i + 1}") for i in range(6)]
+    if family == "connected_components":
+        from rdf2smw_spark.operators import dedup as dd
+
+        monkeypatch.setattr(dd, "CC_EDGE_COLLECT_LIMIT", -1)
+        docs = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(6)], "doc_a long, doc_b long"
+        )
+        return dd.dedup_clusters(docs, edges)
+    if family == "rdfs_closure":
+        from rdf2smw_spark.operators.rdfs import _transitive_closure_distributed
+
+        return _transitive_closure_distributed(
+            spark.createDataFrame(chain, "uri string, anc string"), 10
+        )
+    if family == "class_ancestors":
+        from rdf2smw_spark.operators.sameas import class_ancestors
+
+        rows = [(a, SUBCLASS_PROPERTY_URI, b, True, None, "t") for a, b in chain]
+        return class_ancestors(spark.createDataFrame(rows, TRIPLE_SCHEMA))
+    if family == "path_closure":
+        from rdf2smw_spark.sparql import _path_closure
+
+        rel = spark.createDataFrame(
+            [(a, True, None, b, True, None) for a, b in chain],
+            "s string, s_iri boolean, s_dt string, o string, o_iri boolean, o_dt string",
+        )
+        return _path_closure(rel)
+    if family == "power_iteration":
+        from rdf2smw_spark.operators.graph import pagerank
+
+        return pagerank(spark.createDataFrame(chain, "src string, dst string"))
+    assert family == "class_depth"
+    from rdf2smw_spark.operators.dimensions import class_depth_fixpoint
+
+    return class_depth_fixpoint(
+        spark, spark.createDataFrame(chain, "src string, dst string"), max_depth=10
+    )
+
+
+@pytest.mark.parametrize("family", [
+    "connected_components", "rdfs_closure", "class_ancestors",
+    "path_closure", "power_iteration", "class_depth",
+])
+def test_fixpoint_releases_superseded_checkpoints(spark, monkeypatch, family):
+    """session.fixpoint releases every superseded round as soon as its
+    successor is materialized: after the call at most the final state's
+    checkpoint is still registered (loop-local persists are released
+    too), and release_scoped_caches frees that one."""
+    from rdf2smw_spark.session import release_scoped_caches
+
+    def ids() -> set:
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in m.keySet().toArray()}
+
+    release_scoped_caches(blocking=True)
+    base_ids = ids()
+    out = _fixpoint_family(spark, monkeypatch, family)
+    assert len(ids() - base_ids) <= 1, "superseded rounds must be released"
+    assert out.count() > 0
+    assert release_scoped_caches(blocking=True) >= 1
+    assert not (ids() - base_ids), "no checkpoint may outlive release"
 
 
 # --- resume fingerprinting (ADVICE r2, medium) -------------------------------------

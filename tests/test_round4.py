@@ -184,6 +184,11 @@ def test_side_input_signature_properties(spark):
     assert _side_input_signature(
         spark.createDataFrame([(1, "a"), (2, "b"), (3, None), (3, None)], "id long, s string")
     ) != sig
+    # realistic side-input sizes: the hash sum must not overflow
+    big = spark.createDataFrame([(i, f"w{i}") for i in range(200)], "id long, s string")
+    big_sig = _side_input_signature(big)
+    assert big_sig.startswith("200|")
+    assert _side_input_signature(big.repartition(5)) == big_sig
 
 
 def test_changed_benchmark_recomputes_decontam_on_resume(spark, sf_dir, tmp_path):
