@@ -108,27 +108,6 @@ def sql_local_name(expr: str, dialect: str = "spark") -> str:
     return f"element_at(split(element_at(split({expr}, '#'), -1), '/'), -1)"
 
 
-def sql_upper_first(expr: str, dialect: str = "spark") -> str:
-    """P6: uppercase the first byte — Go ToUpper on one byte only affects
-    ASCII a-z, so gate on the first character being ascii lowercase."""
-    return (
-        f"CASE WHEN ascii({expr}) BETWEEN 97 AND 122 "
-        f"THEN concat(upper(substring({expr}, 1, 1)), substring({expr}, 2)) "
-        f"ELSE {expr} END"
-    )
-
-
-def sql_wiki_title_clean(expr: str, dialect: str = "spark") -> str:
-    """P4 char cleanup → P2 regex cleanup → P6 upper-first.
-
-    Truncation (P5) is NOT part of this expression; sql_wiki_title_full
-    adds it.
-    """
-    out = _replace_chain(expr, TITLE_REPLACEMENTS)
-    out = _regexp_strip(out, dialect)
-    return sql_upper_first(out, dialect)
-
-
 def sql_smw_type(is_iri_expr: str, datatype_expr: str) -> str:
     """T2: observed object → SMW 'Has type' value (Page/Text/Number/NULL).
 

@@ -1,28 +1,16 @@
-"""Skew-safe grouped collection (reference A1, tripleaggregator.go:21-31).
+"""Sorted-array dedup for the per-subject aggregation (reference A1,
+tripleaggregator.go:21-31; AddFactUnique / AddCategoryUnique,
+iptypes.go:53-81).
 
-The reference's TripleAggregator is a single in-memory hash aggregation.
-At web scale, `collect_list` over a hot subject (a famous entity with 10^6
-triples) concentrates one key in one reduce task. The north rule demands
-explicit skew handling: we do a two-phase salted aggregation —
-
-    phase 1: groupBy(key, salt) -> partial collect_list   (hot key spread
-             over N_SALT reducers; map-side partial aggregation shrinks
-             shuffle record count)
-    phase 2: groupBy(key)       -> flatten(collect_list(partials))
-
-Phase 2 still materializes the hot key's full array in one task (inherent
-to the operator's contract — the reference keeps every triple too), but it
-receives N_SALT pre-built arrays instead of millions of individual shuffle
-records, and an optional `cap` bounds the final array for pages where
-keeping every fact is not required.
-
-Salt is deterministic (hash of the value struct), so results are stable
-across runs and parallelism levels.
+The aggregation itself lives in convert.triples_to_pages: one two-phase
+salted groupBy(subj) spreads a hot subject over n_salt reducers before
+the final per-subject merge. The collected arrays are sorted there
+(SURVEY.md §4.3 determinism policy) and deduped here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -40,55 +28,4 @@ def dedup_sorted(col: Column) -> Column:
             lambda a: F.filter(a, lambda x, i: (i == 0) | (x != F.element_at(a, i))),
         ),
         1,
-    )
-
-
-def salted_collect_list(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: Column,
-    out_col: str,
-    n_salt: int = 16,
-    sort: bool = True,
-    distinct: bool = False,
-    cap: int | None = None,
-) -> DataFrame:
-    """Two-phase salted collect_list. Returns one row per key with
-    `out_col` as the (optionally sorted / first-occurrence-deduped /
-    capped) array of collected values. Null values are dropped (matching
-    collect_list semantics, used by callers to route rows)."""
-    if distinct and not sort:
-        raise ValueError("distinct=True requires sort=True (adjacent dedup)")
-    tagged = df.select(*key_cols, value_col.alias("__v")).where(F.col("__v").isNotNull())
-    if n_salt and n_salt > 1:
-        tagged = tagged.withColumn("__salt", F.pmod(F.hash(F.col("__v")), F.lit(n_salt)))
-        partial = tagged.groupBy(*key_cols, "__salt").agg(F.collect_list("__v").alias("__part"))
-        merged = partial.groupBy(*key_cols).agg(F.flatten(F.collect_list("__part")).alias(out_col))
-    else:
-        merged = tagged.groupBy(*key_cols).agg(F.collect_list("__v").alias(out_col))
-    col = F.col(out_col)
-    if sort:
-        col = F.sort_array(col)
-    if distinct:
-        # on a sorted array this is exact first-occurrence dedup
-        # (reference AddFactUnique / AddCategoryUnique, iptypes.go:53-81)
-        col = dedup_sorted(col)
-    if cap is not None:
-        col = F.slice(col, 1, cap)
-    return merged.withColumn(out_col, col)
-
-
-def aggregate_triples(triples: DataFrame, n_salt: int = 16) -> DataFrame:
-    """A1: one row per subject with all its (pred, obj, obj_is_iri,
-    obj_datatype) structs, deterministically sorted. The reference's
-    within-group order is file-arrival order and its cross-group order is
-    Go map iteration (nondeterministic); we pin lexicographic order
-    (SURVEY.md §4.3 determinism policy)."""
-    return salted_collect_list(
-        triples,
-        ["subj"],
-        F.struct("pred", "obj", "obj_is_iri", "obj_datatype"),
-        "triples",
-        n_salt=n_salt,
-        sort=True,
     )

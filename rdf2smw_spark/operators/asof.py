@@ -20,7 +20,7 @@ the same semantics, not a mirrored query) is unambiguous.
 
 The reference engine has no time-series operators (its scope ends at
 RDF conversion, rdf2smw.go:1-117); this extends the engine for the
-event-log side of a web-scale corpus, like streaming/stream.py does.
+event-log side of a web-scale corpus.
 """
 
 from __future__ import annotations

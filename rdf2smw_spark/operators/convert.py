@@ -32,7 +32,7 @@ from rdf2smw_spark.functions.textnorm import (
     sql_clean_literal,
     sql_local_name,
     sql_smw_type,
-    sql_wiki_title_full,
+    wiki_title_col,
 )
 from rdf2smw_spark.operators.aggregate import dedup_sorted
 from rdf2smw_spark.operators.dimensions import (
@@ -70,35 +70,17 @@ def _persist_coalesced(df: DataFrame) -> DataFrame:
     return scoped_persist(df)
 
 
-def _title_expr(raw_col: str) -> F.Column:
-    return F.expr(sql_wiki_title_full(raw_col))
-
-
-def pred_titles(triples: DataFrame, bt: DataFrame) -> DataFrame:
-    """factTitle for every distinct predicate (convertUriToWikiTitle with
-    URITypePredicate, :95). Tiny dim — one row per predicate."""
-    preds = triples.select("pred").distinct()
-    return (
-        preds.join(bt, preds.pred == bt.subj, "left")
-        .select(
-            "pred",
-            F.coalesce(F.col("raw_title"), F.expr(sql_local_name("pred"))).alias("__raw"),
-        )
-        .select("pred", _title_expr("__raw").alias("pred_title"))
-    )
-
-
 def conversion_dims(
     spark: SparkSession, triples: DataFrame, cache: bool = True
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """The five conversion dimensions (subject_types, best_titles,
     class_depth, pred_titles, pred_smw_types), derived from the full
-    stream. Exposed so incremental maintenance can MAINTAIN them: every
-    one is a pure function of the schema-ish predicate slice plus the
-    predicate/SMW-type inventory, both of which incremental_kg's
-    delta_forces_rebuild probes — a fast-path delta cannot change any
-    of them, so a standing service reuses stored copies instead of
-    re-deriving five full-stream passes per drain.
+    stream. Exposed so incremental_kg.incremental_pages derives them
+    once and shares them between its title closure and the restricted
+    conversion: every one is a pure function of the schema-ish
+    predicate slice plus the predicate/SMW-type inventory, both of
+    which delta_forces_rebuild probes, so a fast-path delta cannot
+    change any of them.
 
     subject_types / best_titles / class_depth only read rdf:type,
     rdfs:subClassOf and the 6 title predicates — pre-filtered once so
@@ -144,7 +126,7 @@ def conversion_dims(
             "pred",
             F.coalesce(F.col("raw_title"), F.expr(sql_local_name("pred"))).alias("__raw"),
         )
-        .select("pred", _title_expr("__raw").alias("pred_title"))
+        .select("pred", wiki_title_col("__raw").alias("pred_title"))
     )
     return st, bt, cd, pt, pst
 
@@ -225,7 +207,7 @@ def triples_to_pages(
             "__ouri",
             F.coalesce(F.col("raw_title"), F.expr(sql_local_name("__ouri"))).alias("__oraw"),
         )
-        .select("__ouri", _title_expr("__oraw").alias("__otitle"))
+        .select("__ouri", wiki_title_col("__oraw").alias("__otitle"))
     )
     cd_obj = cd.select(F.col("uri").alias("__curi"), "depth")
 
@@ -256,7 +238,12 @@ def triples_to_pages(
         .alias("cat_sel"),
     )
 
-    # two-phase salted aggregation (hot-subject skew; see operators/aggregate.py)
+    # two-phase salted aggregation against hot-subject skew: phase 1
+    # groups by (subj, salt) so one famous entity's rows spread over
+    # n_salt reducers with map-side partial collection; phase 2 merges
+    # n_salt pre-built arrays per subject instead of every row. The
+    # salt hashes the value, so output is stable across runs and
+    # parallelism.
     if n_salt and n_salt > 1:
         salted = rows.withColumn(
             "__salt", F.pmod(F.hash(F.coalesce(F.col("fact.value"), F.col("cat"))), F.lit(n_salt))
@@ -284,7 +271,7 @@ def triples_to_pages(
         .join(bc(bt_subj), F.col("subj") == F.col("__suri"), "left")
         .withColumn("uri_type", F.coalesce(F.col("uri_type"), F.lit(URI_TYPE_UNDEFINED)))
         .withColumn("__traw", F.coalesce(F.col("__sraw"), F.expr(sql_local_name("subj"))))
-        .withColumn("fact_title", _title_expr("__traw"))
+        .withColumn("fact_title", wiki_title_col("__traw"))
         .withColumn("__deduped", dedup_sorted(F.sort_array(F.col("facts_raw"))))
         .withColumn(
             "__equiv",

@@ -244,12 +244,9 @@ def minhash_bands(
     shingles: DataFrame, k: int = MINHASH_K, bands: int = MINHASH_BANDS
 ) -> DataFrame:
     """(doc_id, band, band_hash): the banded LSH signature frame — the
-    join key space of minhash_candidates, exposed separately so the
-    streaming near-dup state table (streaming/stream.py) can key its
-    cross-drain state on the exact same band hashes the batch path
-    joins on. All bands come from ONE pass over the signature
-    aggregation (explode of a band-struct array) — a per-band union
-    would re-run the k-way min-agg once per band."""
+    join key space of minhash_candidates. All bands come from ONE pass
+    over the signature aggregation (explode of a band-struct array) — a
+    per-band union would re-run the k-way min-agg once per band."""
     r = k // bands
     sigs = minhash_signatures(shingles, k)
     band_structs = [
@@ -815,9 +812,8 @@ def incremental_novelty(
     """(doc_id, is_exact_dup, has_near_dup, novel) for every batch doc:
     the admission decision an INCREMENTAL ingest makes against the
     standing corpus — verbatim recrawls and near-duplicate edits are
-    rejected, only novel content enters. This is the batch twin of the
-    streaming band-state dedup (streaming/stream.py), expressed as two
-    membership checks:
+    rejected, only novel content enters. Expressed as two membership
+    checks:
 
     - exact: md5(normalized text) LEFT SEMI against the index
       fingerprint set — one slim 32-byte-key shuffle;

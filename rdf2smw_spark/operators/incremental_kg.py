@@ -103,11 +103,9 @@ def affected_subjects(
     shared with some delta subject. Two semi-joins on the slim
     (subj, title) dim — never the fact stream.
 
-    titles: a MAINTAINED (subj, title) dim from the previous run. On
-    the fast path (no schema predicates in the delta) titles cannot
-    change, so a standing service passes the stored dim and skips the
-    full-stream title pass entirely — see maintained_subject_titles and
-    run_stream_incremental_pages."""
+    titles: a (subj, title) dim the caller already derived from the
+    same full stream (incremental_pages builds it from its conversion
+    dims), so the closure skips a second title pass."""
     from rdf2smw_spark.session import scoped_persist
 
     if titles is None:
@@ -118,58 +116,20 @@ def affected_subjects(
     return titles.join(seed, "title", "semi").select("subj").distinct()
 
 
-def maintained_subject_titles(titles: DataFrame, delta: DataFrame) -> DataFrame:
-    """Advance the maintained (subj, title) dim by a FAST-PATH delta:
-    existing subjects keep their titles (the fast path bars every
-    title-feeding predicate), and delta-new subjects — having no title
-    properties or type declarations by the same guard — title as the
-    plain local-name chain. O(|delta|) work, no full-stream pass."""
-    new_subjs = (
-        delta.select("subj").distinct().join(titles.select("subj"), "subj", "anti")
-    )
-    new_titles = new_subjs.select(
-        "subj",
-        F.expr(sql_wiki_title_full(sql_local_name("subj"))).alias("title"),
-    )
-    return titles.unionByName(new_titles)
-
-
-def delta_forces_rebuild(
-    base: DataFrame, delta: DataFrame, dims: tuple | None = None
-) -> bool:
+def delta_forces_rebuild(base: DataFrame, delta: DataFrame) -> bool:
     """True when the delta invalidates globally (dependency classes 2-3):
     it carries a schema-ish predicate, a predicate the dims have never
     seen (its pred_title would be missing), or a NEW (pred, SMW-type)
     pair whose Property page no affected subject would re-render.
-    Bounded limit(1) probes — collect-is-the-guard discipline. Public so
-    a standing service (run_stream_incremental_pages) can branch on the
-    same decision and keep its maintained dims consistent.
-
-    dims: when the maintained conversion dims are available, the probe
-    checks the delta against the stored pred-title inventory (pt) and
-    SMW-type inventory (pst) — NO base scan at all; otherwise it derives
-    the (pred, type) inventory from base (one distinct-projection
-    scan). New (pred, NULL-type) combinations on a known pred do not
-    rebuild: NULL types never contribute 'Has type' facts."""
+    Bounded limit(1) probes — collect-is-the-guard discipline. The
+    (pred, type) inventory comes from base (one distinct-projection
+    scan)."""
     if delta.filter(F.col("pred").isin(SCHEMA_PREDS)).limit(1).count() > 0:
         return True
     from rdf2smw_spark.functions.textnorm import sql_smw_type
 
     ty = F.expr(sql_smw_type("obj_is_iri", "obj_datatype"))
     d_pairs = delta.select("pred", ty.alias("__ty")).distinct()
-    if dims is not None:
-        _st, _bt, _cd, pt, pst = dims
-        if (
-            d_pairs.select("pred").distinct()
-            .join(pt.select("pred"), "pred", "anti")
-            .limit(1).count() > 0
-        ):
-            return True
-        known = pst.select("pred", F.explode("has_types").alias("__ty"))
-        new_pairs = d_pairs.filter(F.col("__ty").isNotNull()).join(
-            known, ["pred", "__ty"], "anti"
-        )
-        return new_pairs.limit(1).count() > 0
     new_pairs = d_pairs.join(
         base.select("pred", ty.alias("__ty")).distinct(), ["pred", "__ty"], "anti"
     )
@@ -180,8 +140,6 @@ def incremental_pages(
     spark: SparkSession,
     base: DataFrame,
     delta: DataFrame,
-    subject_titles: DataFrame | None = None,
-    dims: tuple | None = None,
     full: DataFrame | None = None,
 ) -> DataFrame:
     """WikiPage rows for every page the delta touches, byte-identical
@@ -191,18 +149,9 @@ def incremental_pages(
     (dependency class 2 above) — detected with one limit(1) probe, the
     collect-is-the-guard discipline.
 
-    subject_titles / dims: MAINTAINED copies of the (subj, title) dim
-    and the five conversion dims from the previous run. Both are pure
-    functions of exactly the inputs delta_forces_rebuild probes, so on
-    the fast path a standing service passes the stored frames and the
-    drain does NO full-stream dimension pass at all — the remaining
-    O(corpus) work is the one columnar scan feeding the subject
-    semi-join.
-
     full: when base and delta are DISJOINT filters of one frame, pass
     that frame to skip the union-of-two-filtered-scans plan (the
-    one-shot registered query does this; a standing service unions
-    its stored table with the drain for real)."""
+    registered query does this)."""
     from rdf2smw_spark.operators.convert import conversion_dims, triples_to_pages
     from rdf2smw_spark.session import scoped_persist
 
@@ -210,21 +159,17 @@ def incremental_pages(
     # the union twice — obj-title dim + enrichment; measured: skipping
     # the persist on the fast path RAISES wall time 14s -> 25s at sf0.1)
     full = scoped_persist(base.unionByName(delta) if full is None else full)
-    # the rebuild probe must see the PREVIOUS state's inventory (base or
-    # maintained dims) — never dims derived from base ∪ delta, which
-    # would contain the delta's own novelties and mask every rebuild
-    if delta_forces_rebuild(base, delta, dims=dims):
+    # the rebuild probe must see the PREVIOUS state's inventory (base) —
+    # never base ∪ delta, which would contain the delta's own novelties
+    # and mask every rebuild
+    if delta_forces_rebuild(base, delta):
         return triples_to_pages(spark, full, cache=False)
-    if dims is None:
-        # fast path established: dims(full) == dims(base-maintained), so
-        # ONE derivation now serves the title closure (st/bt) AND the
-        # restricted conversion — without this, subject_types/best_titles
-        # were derived twice per drain (measured 22s -> 12s at sf0.001)
-        dims = conversion_dims(spark, full, cache=True)
-    if subject_titles is None:
-        subject_titles = scoped_persist(
-            _subject_titles(full, st=dims[0], bt=dims[1])
-        )
+    # fast path established: dims(full) == dims(base), so ONE derivation
+    # serves the title closure (st/bt) AND the restricted conversion —
+    # without this, subject_types/best_titles were derived twice per
+    # call (measured 22s -> 12s at sf0.001)
+    dims = conversion_dims(spark, full, cache=True)
+    subject_titles = scoped_persist(_subject_titles(full, st=dims[0], bt=dims[1]))
     return triples_to_pages(
         spark,
         full,

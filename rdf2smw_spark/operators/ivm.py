@@ -432,12 +432,6 @@ def maintain_join_count_partials(
     return tuple(out)
 
 
-def join_view_pattern_count(query_text: str) -> int:
-    """Number of triple patterns (= partial relations) of a join view —
-    the snapshot layout contract for streaming maintainers."""
-    return len(_join_view_query(query_text)[1])
-
-
 # --------------------------------------------------------------------------
 # SUM views — count-supported additive aggregates (round 5)
 # --------------------------------------------------------------------------
@@ -798,7 +792,7 @@ def maintain_minmax_view(
             from rdf2smw_spark.session import maybe_broadcast, scoped_persist
 
             # touched_keys is bounded by the delta's group count — tiny
-            # for streaming micro-batches, but a BULK delete touching
+            # for small deltas, but a BULK delete touching
             # millions of group extrema would broadcast an unbounded
             # frame; use the repo-standard counted maybe_broadcast so
             # oversized key sets fall back to a shuffle semi-join

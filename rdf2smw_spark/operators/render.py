@@ -209,39 +209,7 @@ def render_all(
 
 def collect_xml_file(xml_pages: DataFrame) -> str:
     """Single-file output with the <mediawiki> envelope
-    (mwxmlcreator.go:59-60,137-140). Driver-side concat — correct for
-    fixture-scale parity; at 100 TB use write_xml_shards instead."""
+    (mwxmlcreator.go:59-60,137-140). Driver-side concat of every page
+    into one document, as the reference writes one file."""
     rows = xml_pages.orderBy("title").select("xml").collect()
     return "<mediawiki>\n" + "".join(r["xml"] for r in rows) + "</mediawiki>\n"
-
-
-def write_xml_shards(xml_pages: DataFrame, path: str) -> None:
-    """Sharded output: each non-empty partition is wrapped in its own
-    <mediawiki> envelope, so every part file is a standalone document
-    importable in parallel by MediaWiki's importDump workers
-    (mwxmlcreator.go:59-60,137-140 emit the envelope once per run; the
-    sharded form repeats it per shard). RDD mapPartitions is the one
-    place per-partition imperative logic is genuinely required — a
-    column expression can't know partition boundaries."""
-
-    def _envelope(it):
-        first = True
-        for row in it:
-            if first:
-                yield "<mediawiki>"
-                first = False
-            # each <page> block already starts/ends with \n; strip the
-            # trailing newline so .text() rows don't double-space
-            yield row.xml.rstrip("\n")
-        if not first:
-            yield "</mediawiki>"
-
-    shard_lines = (
-        xml_pages.select("title", "xml")
-        .sortWithinPartitions("title")
-        .rdd.mapPartitions(_envelope)
-    )
-    spark = xml_pages.sparkSession
-    spark.createDataFrame(shard_lines.map(lambda s: (s,)), "value string").write.mode(
-        "overwrite"
-    ).text(path)

@@ -279,7 +279,7 @@ def graph_diff(old, new):
     graph versions — 'add' for triples only in new, 'remove' for
     triples only in old. Two anti-joins on the full triple key; at
     100 TB both sides are bucketed snapshots of the same table so the
-    anti-joins are bucket-local (sinks.py contract). Multiset semantics
+    anti-joins are bucket-local. Multiset semantics
     via distinct projection (the triple table is a set per the KG
     model)."""
     key = ["subj", "pred", "obj", "obj_is_iri"]

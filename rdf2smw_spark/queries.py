@@ -3364,6 +3364,7 @@ def q_kg_sparql_ivm_minmax(spark, sf_dir):
         minmax_view,
         read_minmax_view,
     )
+    from rdf2smw_spark.session import scoped_local_checkpoint
 
     view_q = _SPARQL_PRE + """
         SELECT ?p (MIN(?len) AS ?min_len) (MAX(?len) AS ?max_len)
@@ -3378,12 +3379,12 @@ def q_kg_sparql_ivm_minmax(spark, sf_dir):
     after_insert = t  # base ⊎ delta
     final = t.filter(~h.startswith("ab"))
     # a deployment reads each maintained snapshot from storage — the
-    # localCheckpoints stand in for that, keeping every maintain step
+    # scoped checkpoints stand in for that, keeping every maintain step
     # a merge over a MATERIALIZED view rather than a lineage replay
-    view = minmax_view(base, view_q).localCheckpoint()
-    view = maintain_minmax_view(
-        view, view_q, after_insert, delta_plus=delta
-    ).localCheckpoint()
+    view = scoped_local_checkpoint(minmax_view(base, view_q))
+    view = scoped_local_checkpoint(
+        maintain_minmax_view(view, view_q, after_insert, delta_plus=delta)
+    )
     view = maintain_minmax_view(view, view_q, final, delta_minus=removed)
     return read_minmax_view(view)
 

@@ -182,7 +182,7 @@ def get_spark(
         .master(master)
         # AQE: runtime coalescing of post-shuffle partitions + skew-join
         # splitting. Complements (does not replace) our explicit salting of
-        # skewed collect_list aggregations (operators/aggregate.py).
+        # the skewed per-subject collect_list (operators/convert.py).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -210,8 +210,8 @@ def get_spark(
 # StructType is memoized per path and re-reads go through
 # spark.read.schema(...) — PLAN metadata only: no rows, no results, no
 # cached data survive between runs (each action still scans parquet).
-# Only used for immutable inputs (testdata); mutable work dirs (streaming
-# snapshots, pipeline checkpoints) keep plain reads.
+# Only used for immutable inputs (testdata); mutable work dirs (pipeline
+# checkpoints) keep plain reads.
 
 _PARQUET_SCHEMAS: dict[str, object] = {}
 

@@ -93,23 +93,20 @@ PARSED_SCHEMA = (
 
 def parse_ntriples_lines(lines: DataFrame, src_url: str | None = None) -> DataFrame:
     """DataFrame[value: string] (one line per row) -> triple DataFrame.
-    Malformed lines produce rows with non-null `error` and null terms.
-    If the input carries a per-row `src_url` column (e.g. streaming
-    ingest tagging input_file_name), it wins over the constant."""
-    per_row_src = "src_url" in lines.columns
+    Malformed lines produce rows with non-null `error` and null terms;
+    every row carries `src_url`."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out: list[tuple] = []
-            srcs = pdf["src_url"] if per_row_src else [src_url] * len(pdf)
-            for line, src in zip(pdf["value"], srcs):
+            for line in pdf["value"]:
                 try:
                     t = parse_ntriples_line(line)
                 except ValueError as exc:
-                    out.append((None, None, None, None, None, src, str(exc)))
+                    out.append((None, None, None, None, None, src_url, str(exc)))
                     continue
                 if t is not None:
-                    out.append((*t, src, None))
+                    out.append((*t, src_url, None))
             yield pd.DataFrame(
                 out,
                 columns=[

@@ -5,7 +5,6 @@ semantics the reference never tested (SURVEY.md §5 gap)."""
 import pytest
 from pyspark.sql import functions as F
 
-from rdf2smw_spark.operators.aggregate import aggregate_triples
 from rdf2smw_spark.operators.convert import triples_to_pages
 from rdf2smw_spark.operators.dimensions import best_titles, class_depth, subject_types
 from rdf2smw_spark.schemas import (
@@ -31,37 +30,6 @@ def _triples(spark, rows):
     return spark.createDataFrame(
         [(s, p, o, iri, dt, None) for (s, p, o, iri, dt) in rows], TRIPLE_SCHEMA
     )
-
-
-def test_aggregate_groups_by_subject(spark):
-    # 6 triples / 2 subjects — the reference fixture pattern
-    # (tripleaggregator_test.go:28-35)
-    t = _triples(
-        spark,
-        [
-            ("http://e/s1", "http://e/p1", "o1", False, DT_STRING),
-            ("http://e/s1", "http://e/p2", "o2", False, DT_STRING),
-            ("http://e/s1", "http://e/p3", "o3", False, DT_STRING),
-            ("http://e/s2", "http://e/p1", "o4", False, DT_STRING),
-            ("http://e/s2", "http://e/p2", "o5", False, DT_STRING),
-            ("http://e/s2", "http://e/p3", "o6", False, DT_STRING),
-        ],
-    )
-    agg = aggregate_triples(t, n_salt=4).collect()
-    assert len(agg) == 2
-    m = {r["subj"]: r["triples"] for r in agg}
-    assert [x["pred"] for x in m["http://e/s1"]] == ["http://e/p1", "http://e/p2", "http://e/p3"]
-    assert [x["obj"] for x in m["http://e/s2"]] == ["o4", "o5", "o6"]
-
-
-def test_salting_invariance(spark):
-    rows = [
-        ("http://e/hot", f"http://e/p{i % 7}", f"o{i}", False, DT_STRING) for i in range(500)
-    ] + [("http://e/cold", "http://e/p1", "x", False, DT_STRING)]
-    t = _triples(spark, rows)
-    a1 = {r["subj"]: r["triples"] for r in aggregate_triples(t, n_salt=1).collect()}
-    a16 = {r["subj"]: r["triples"] for r in aggregate_triples(t, n_salt=16).collect()}
-    assert a1 == a16
 
 
 def test_subject_types_and_precedence(spark):

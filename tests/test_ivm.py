@@ -5,7 +5,6 @@ shapes rejected loudly."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from rdf2smw_spark.operators.ivm import (
     count_view,
@@ -117,37 +116,6 @@ def test_count_view_rejects_non_decomposable(spark, frames):
         """)
 
 
-def test_streaming_sparql_view_across_drains(spark, tmp_path):
-    """Three drains of arriving .nt files: after each, the maintained
-    view equals a recompute over everything ingested so far."""
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    TY = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-
-    def nt(name, lines):
-        (src / name).write_text("".join(lines))
-
-    view_q = PRE + "SELECT ?c (COUNT(?s) AS ?n) WHERE { ?s a ?c . } GROUP BY ?c"
-
-    nt("b1.nt", [f"<{EX}a> {TY} <{EX}X> .\n", f"<{EX}b> {TY} <{EX}X> .\n"])
-    res = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res["batches"] == 1
-    v1 = spark.read.parquet(work + "/view/v=1")
-    assert as_map(v1) == {EX + "X": 2}
-
-    nt("b2.nt", [f"<{EX}c> {TY} <{EX}X> .\n", f"<{EX}d> {TY} <{EX}Y> .\n"])
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    v2 = spark.read.parquet(work + "/view/v=2")
-    assert as_map(v2) == {EX + "X": 3, EX + "Y": 1}
-
-    # drain with nothing new: no-op, view version unchanged
-    res3 = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res3["batches"] == 0 and res3["view_rows"] == 2
-
-
 def test_nested_aggregate_projection_rejected():
     nested = PRE + """
     SELECT ?c (SUM(?s) + 0 AS ?t) WHERE { ?s a ?c . } GROUP BY ?c
@@ -157,86 +125,6 @@ def test_nested_aggregate_projection_rejected():
     SELECT ?c (COUNT(?s) * 2 AS ?t) WHERE { ?s a ?c . } GROUP BY ?c
     """
     assert not is_delta_decomposable(nested_count)
-
-
-def test_streaming_view_replay_is_idempotent(spark, tmp_path):
-    """Simulated at-least-once replay: re-processing data under a FRESH
-    checkpoint (batch ids restart at 0) against an existing view must
-    not double-merge — the snapshot records the batch id it applied."""
-    import shutil
-
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    TY = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    (src / "b1.nt").write_text(f"<{EX}a> {TY} <{EX}X> .\n")
-    view_q = PRE + "SELECT ?c (COUNT(?s) AS ?n) WHERE { ?s a ?c . } GROUP BY ?c"
-
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    # crash-replay simulation: the offsets are lost, the view survived
-    shutil.rmtree(work + "/ckpt")
-    res = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res["view_rows"] == 1
-    v = spark.read.parquet(work + "/view/v=1")
-    assert as_map(v) == {EX + "X": 1}  # still 1, not doubled
-
-
-def test_streaming_view_ckpt_reset_with_new_files(spark, tmp_path):
-    """Checkpoint lost AND a new file arrived: the repacked batch 0
-    must apply ONLY the new file (per-file tracking, not batch ids)."""
-    import shutil
-
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    TY = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    (src / "b1.nt").write_text(f"<{EX}a> {TY} <{EX}X> .\n")
-    view_q = PRE + "SELECT ?c (COUNT(?s) AS ?n) WHERE { ?s a ?c . } GROUP BY ?c"
-    run_stream_sparql_view(spark, str(src), work, view_q)
-
-    shutil.rmtree(work + "/ckpt")                     # checkpoint lost
-    (src / "b2.nt").write_text(f"<{EX}b> {TY} <{EX}Y> .\n")  # new data
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    v = spark.read.parquet(work + "/view/v=2")
-    assert as_map(v) == {EX + "X": 1, EX + "Y": 1}    # b1 once, b2 applied
-
-
-def test_streaming_view_crash_between_parquet_and_marker(spark, tmp_path):
-    """ADVICE r4 crash window: the snapshot parquet (v=N+1) is written
-    but the process dies BEFORE _applied.json. On restart the unmarked
-    snapshot must be discarded (it is not committed) and the replayed
-    batch must rebuild it from the last committed version — not read
-    the remnant as base, not double-merge."""
-    import shutil
-
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    TY = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    view_q = PRE + "SELECT ?c (COUNT(?s) AS ?n) WHERE { ?s a ?c . } GROUP BY ?c"
-
-    (src / "b1.nt").write_text(f"<{EX}a> {TY} <{EX}X> .\n")
-    run_stream_sparql_view(spark, str(src), work, view_q)
-
-    # simulate the crash: v=2 parquet exists (here: a copy of v=1 as a
-    # stand-in for a partially/fully written but UNMARKED snapshot) with
-    # no _applied.json, and the checkpoint lost the offsets
-    shutil.copytree(work + "/view/v=1", work + "/view/v=2")
-    import os
-
-    os.remove(work + "/view/v=2/_applied.json")
-    shutil.rmtree(work + "/ckpt")
-
-    (src / "b2.nt").write_text(f"<{EX}b> {TY} <{EX}Y> .\n")
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    v = spark.read.parquet(work + "/view/v=2")
-    assert as_map(v) == {EX + "X": 1, EX + "Y": 1}  # b1 exactly once
 
 
 def test_non_aggregate_view_not_decomposable(spark, frames):
@@ -379,54 +267,6 @@ def test_join_view_global_zero_row(spark, jframes):
     assert [r["n"] for r in view.collect()] == [0]
 
 
-def test_streaming_join_view_across_drains(spark, tmp_path):
-    """JOIN view maintained by the streaming runner: the partial-count
-    snapshots advance per drain and the derived view equals a recompute
-    over everything ingested — with a ckpt-reset replay in between."""
-    import shutil
-
-    from rdf2smw_spark.sparql import sparql_select
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    TY = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    P = f"<{EX}p>"
-    view_q = PRE + """
-        SELECT ?c (COUNT(?s) AS ?n)
-        WHERE { ?s a ?c . ?s ex:p ?o . } GROUP BY ?c
-    """
-
-    (src / "b1.nt").write_text(
-        f"<{EX}a> {TY} <{EX}X> .\n<{EX}a> {P} <{EX}o1> .\n"
-        f"<{EX}b> {TY} <{EX}X> .\n"
-    )
-    res = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res["batches"] == 1
-    v1 = spark.read.parquet(work + "/view/v=1/view")
-    assert as_map(v1) == {EX + "X": 1}  # only a has both patterns
-
-    # second drain: b gains a p-fact (X: 2 via partial merge), new Y
-    (src / "b2.nt").write_text(
-        f"<{EX}b> {P} <{EX}o2> .\n"
-        f"<{EX}c> {TY} <{EX}Y> .\n<{EX}c> {P} <{EX}o3> .\n"
-        f"<{EX}a> {P} <{EX}o4> .\n"
-    )
-    shutil.rmtree(work + "/ckpt")  # ckpt reset: replay must not double-apply b1
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    v2 = spark.read.parquet(work + "/view/v=2/view")
-    assert as_map(v2) == {EX + "X": 3, EX + "Y": 1}  # a:2 facts + b:1, c:1
-
-    # the maintained view equals a recompute over ALL ingested triples
-    from rdf2smw_spark.sources.ntriples import parse_ntriples_lines
-
-    lines = spark.read.text(str(src)).withColumn("src_url", F.lit("all"))
-    allt = parse_ntriples_lines(lines).filter("error IS NULL")
-    re_m = {r["c"]: r["n"] for r in sparql_select(allt, view_q).collect()}
-    assert as_map(v2) == re_m
-
-
 def test_three_pattern_join_view_maintained(spark):
     """N-pattern counting algorithm: a 3-pattern chain view maintained
     through insert AND delete equals recompute at every step."""
@@ -469,46 +309,6 @@ def test_three_pattern_join_view_maintained(spark):
     )
     got = {r["c"]: r["n"] for r in view.collect()}
     assert got == _recompute(remaining, q3) == {EX + "X": 2, EX + "Y": 1}
-
-
-def test_streaming_three_pattern_join_view(spark, tmp_path):
-    """The streaming runner handles N-pattern join views (pN snapshot
-    layout) across drains."""
-    from rdf2smw_spark.sparql import sparql_select
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in3"
-    src.mkdir()
-    work = str(tmp_path / "work3")
-    TY = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    P, Q = f"<{EX}p>", f"<{EX}q>"
-    q3 = PRE + """
-        SELECT ?c (COUNT(?s) AS ?n)
-        WHERE { ?s a ?c . ?s ex:p ?o . ?o ex:q ?z . } GROUP BY ?c
-    """
-    (src / "b1.nt").write_text(
-        f"<{EX}a> {TY} <{EX}X> .\n<{EX}a> {P} <{EX}o1> .\n"
-        f"<{EX}o1> {Q} <{EX}z1> .\n"
-    )
-    run_stream_sparql_view(spark, str(src), work, q3)
-    (src / "b2.nt").write_text(
-        f"<{EX}b> {TY} <{EX}X> .\n<{EX}b> {P} <{EX}o1> .\n"
-        f"<{EX}o1> {Q} <{EX}z2> .\n"
-    )
-    res = run_stream_sparql_view(spark, str(src), work, q3)
-    assert res["view_rows"] == 1
-    import glob
-    import os
-
-    latest = sorted(
-        glob.glob(os.path.join(work, "view", "v=*")),
-        key=lambda d: int(d.rsplit("=", 1)[1]),
-    )[-1]
-    view = spark.read.parquet(os.path.join(latest, "view"))
-    got = {r["c"]: r["n"] for r in view.collect()}
-    # a and b each reach z1 and z2 through o1
-    assert got == {EX + "X": 4}
-    assert os.path.isdir(os.path.join(latest, "p3"))
 
 
 # --- SUM views (round 5): count-supported additive aggregates ---------------
@@ -686,40 +486,6 @@ def test_sum_view_bind_derived_value(spark):
     assert len(out) == 1 and out[0]["total_len"] == 9.0
 
 
-def test_streaming_sum_view_across_drains(spark, tmp_path):
-    """The standing-view runner routes a SUM view to ivm.sum_view and
-    maintains it across drains; snapshots keep the hidden supports but
-    view_rows/readers see the published projection."""
-    from rdf2smw_spark.operators.ivm import read_sum_view
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    AMT = f"<{EX}amt>"
-    INT = "<http://www.w3.org/2001/XMLSchema#integer>"
-
-    view_q = PRE + """
-    SELECT ?s (SUM(?v) AS ?total) WHERE { ?s ex:amt ?v . } GROUP BY ?s
-    """
-
-    (src / "b1.nt").write_text(
-        f'<{EX}a> {AMT} "3"^^{INT} .\n<{EX}a> {AMT} "4"^^{INT} .\n'
-    )
-    res = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res["batches"] == 1 and res["view_rows"] == 1
-    snap = spark.read.parquet(work + "/view/v=1")
-    assert "__n" in snap.columns and "__nn_total" in snap.columns
-    pub = read_sum_view(snap).collect()
-    assert pub[0]["s"] == EX + "a" and pub[0]["total"] == 7.0
-
-    (src / "b2.nt").write_text(f'<{EX}b> {AMT} "10"^^{INT} .\n')
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    got = {r["s"]: r["total"]
-           for r in read_sum_view(spark.read.parquet(work + "/view/v=2")).collect()}
-    assert got == {EX + "a": 7.0, EX + "b": 10.0}
-
-
 # --- MIN/MAX views (r5): merge-on-insert, extremum-touch rescan on delete ----
 
 def _mm(spark, rows):
@@ -821,43 +587,6 @@ def test_minmax_shape_and_having_rejections(spark):
     """)
 
 
-def test_streaming_minmax_view_across_drains(spark, tmp_path):
-    """The standing-view runner routes a MIN/MAX view to
-    ivm.minmax_view: append-only drains merge extrema exactly without
-    ever reading the accumulated base."""
-    from rdf2smw_spark.operators.ivm import read_minmax_view
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    AMT = f"<{EX}amt>"
-
-    view_q = PRE + """
-    SELECT ?s (MIN(?v) AS ?lo) (MAX(?v) AS ?hi) WHERE {
-      ?s ex:amt ?v .
-    } GROUP BY ?s
-    """
-
-    (src / "b1.nt").write_text(
-        f'<{EX}a> {AMT} "3" .\n<{EX}a> {AMT} "7" .\n'
-    )
-    res = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res["batches"] == 1 and res["view_rows"] == 1
-    snap = spark.read.parquet(work + "/view/v=1")
-    assert "__n" in snap.columns
-    pub = read_minmax_view(snap).collect()
-    assert (pub[0]["lo"], pub[0]["hi"]) == ("3", "7")
-
-    (src / "b2.nt").write_text(
-        f'<{EX}a> {AMT} "1" .\n<{EX}b> {AMT} "5" .\n'
-    )
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    got = {r["s"]: (r["lo"], r["hi"]) for r in read_minmax_view(
-        spark.read.parquet(work + "/view/v=2")).collect()}
-    assert got == {EX + "a": ("1", "7"), EX + "b": ("5", "5")}
-
-
 # --- DISTINCT-aggregate views (r5): value-frequency support relation --------
 
 DVIEW = PRE + """
@@ -931,43 +660,6 @@ def test_distinct_view_global_drain_keeps_zero_row(spark):
     )
     out = read_distinct_view(s, gq).collect()
     assert len(out) == 1 and out[0]["n"] == 0
-
-
-def test_streaming_distinct_view_across_drains(spark, tmp_path):
-    """The standing-view runner routes a DISTINCT-aggregate view to
-    ivm.distinct_view: the snapshot stores the value-frequency support
-    and the published projection derives from it per drain."""
-    from rdf2smw_spark.operators.ivm import read_distinct_view
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    AMT = f"<{EX}amt>"
-
-    view_q = PRE + """
-    SELECT ?s (COUNT(DISTINCT ?v) AS ?n_vals) WHERE {
-      ?s ex:amt ?v .
-    } GROUP BY ?s
-    """
-
-    (src / "b1.nt").write_text(
-        f'<{EX}a> {AMT} "3" .\n<{EX}a> {AMT} "3" .\n<{EX}a> {AMT} "5" .\n'
-    )
-    res = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res["batches"] == 1 and res["view_rows"] == 1
-    snap = spark.read.parquet(work + "/view/v=1")
-    assert {"__v", "__c"} <= set(snap.columns)
-    pub = read_distinct_view(snap, view_q).collect()
-    assert pub[0]["n_vals"] == 2  # the duplicate "3" collapses
-
-    (src / "b2.nt").write_text(
-        f'<{EX}a> {AMT} "3" .\n<{EX}b> {AMT} "9" .\n'
-    )
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    got = {r["s"]: r["n_vals"] for r in read_distinct_view(
-        spark.read.parquet(work + "/view/v=2"), view_q).collect()}
-    assert got == {EX + "a": 2, EX + "b": 1}  # re-seen "3" adds nothing
 
 
 def test_sample_view_rides_minmax_machinery(spark):

@@ -220,49 +220,3 @@ def test_rejections(spark):
     assert not is_epilogue_decomposable(
         PRE + "SELECT ?s ?c WHERE { ?s a ?c . } ORDER BY ?s LIMIT 3"
     )
-
-
-def test_streaming_epilogue_view_across_drains(spark, tmp_path):
-    """A standing HAVING + top-k view over arriving .nt drains: the
-    snapshot stores the full support (every class with its true
-    count), and the published read applies the epilogue — so a class
-    crossing the threshold in a LATER drain surfaces with its total
-    across all drains, not just the delta that pushed it over."""
-    from rdf2smw_spark.streaming.stream import run_stream_sparql_view
-
-    src = tmp_path / "in"
-    src.mkdir()
-    work = str(tmp_path / "work")
-    TY = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-
-    def nt(name, subjects_classes):
-        (src / name).write_text("".join(
-            f"<{EX}{s}> {TY} <{EX}{c}> .\n" for s, c in subjects_classes
-        ))
-
-    view_q = PRE + """
-    SELECT ?c (COUNT(?s) AS ?n) WHERE { ?s a ?c . }
-    GROUP BY ?c HAVING (COUNT(?s) >= 3) ORDER BY DESC(?n) ?c LIMIT 1
-    """
-
-    nt("b1.nt", [("a1", "X"), ("a2", "X"), ("b1", "Y"), ("b2", "Y")])
-    res = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res["batches"] == 1 and res["view_rows"] == 0  # nothing >= 3 yet
-    # the SNAPSHOT keeps every group's true partial count
-    v1 = spark.read.parquet(work + "/view/v=1")
-    assert {r["c"]: r["n"] for r in v1.collect()} == {
-        EX + "X": 2, EX + "Y": 2,
-    }
-
-    # Y crosses the threshold with its TOTAL (2 old + 2 new = 4)
-    nt("b2.nt", [("b3", "Y"), ("b4", "Y")])
-    res2 = run_stream_sparql_view(spark, str(src), work, view_q)
-    assert res2["view_rows"] == 1
-
-    # X overtakes Y: top-1 membership flips on the next drain
-    nt("b3.nt", [("a3", "X"), ("a4", "X"), ("a5", "X")])
-    run_stream_sparql_view(spark, str(src), work, view_q)
-    import os
-
-    vdirs = sorted(os.listdir(work + "/view"))
-    assert vdirs == ["v=3"]

@@ -90,15 +90,13 @@ def test_plan_lint(spark, sf_dir, name):
 
 # --- source lint: one materialization policy ---------------------------------
 #
-# Iterative operators checkpoint through session.fixpoint and size-guard
-# driver collects through session.guarded_collect; a hand-rolled loop
-# checkpoint or limit(L + 1).toPandas() probe anywhere else is a second
-# policy. The non-loop sites below stand in for storage reads (IVM
-# snapshots, streaming micro-batches), each with its expected count.
+# Iterative operators checkpoint through session.fixpoint, one-off
+# snapshots through session.scoped_local_checkpoint (so
+# release_scoped_caches frees them), and driver collects are size-guarded
+# through session.guarded_collect. A bare .localCheckpoint( or a
+# limit(L + 1).toPandas() probe anywhere else is a second policy.
 _LOCAL_CHECKPOINT_OK = {
-    "session.py": None,  # the kernel itself: any number
-    "queries.py": 2,  # IVM min/max view snapshots
-    "streaming/stream.py": 5,  # micro-batch deltas and page snapshots
+    "session.py": None,  # the kernel and the scoped checkpoint: any number
 }
 _GUARDED_COLLECT = re.compile(r"limit\([^()]*\+\s*1\)\s*\.toPandas\(\)")
 # Every iterative loop, by file. pagerank and personalized_pagerank share
@@ -132,7 +130,8 @@ def test_source_lint_one_fixpoint_and_guarded_collect():
         if allowed is not None:
             assert n == allowed, (
                 f"{rel}: {n} .localCheckpoint( call(s), expected {allowed} — "
-                "iterate through session.fixpoint instead"
+                "iterate through session.fixpoint or snapshot through "
+                "session.scoped_local_checkpoint instead"
             )
         n_fix = len(re.findall(r"(?<![\w.])fixpoint\(", src))
         if rel != "session.py":
@@ -144,3 +143,75 @@ def test_source_lint_one_fixpoint_and_guarded_collect():
                 f"{rel}: hand-rolled limit(L + 1).toPandas() guard — "
                 "use session.guarded_collect"
             )
+
+
+# --- reachability lint: every module has a caller ---------------------------
+#
+# The engine is entered through three roots: the CLI, the checkpointed
+# pipeline and the declared query registry. A module none of them
+# imports (module-level or inside a function) is code only tests run.
+_ROOTS = (
+    "rdf2smw_spark.__main__",
+    "rdf2smw_spark.plans.pipeline",
+    "rdf2smw_spark.queries",
+)
+
+
+def _module_path(root, name):
+    """File of package module `name` (dotted, under rdf2smw_spark), or None."""
+    rel = root.joinpath(*name.split(".")[1:])
+    for path in (rel.with_suffix(".py"), rel / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def _imported_names(tree, package):
+    """Dotted names of every module an import in `tree` may load;
+    `package` anchors relative imports."""
+    import ast
+    import importlib.util
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            yield from (a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = importlib.util.resolve_name(
+                "." * node.level + (node.module or ""), package
+            )
+            yield base
+            # `from pkg import mod` imports a submodule
+            yield from (f"{base}.{a.name}" for a in node.names)
+
+
+def test_every_module_reachable_from_cli_pipeline_or_queries():
+    import ast
+    import pathlib
+
+    import rdf2smw_spark
+
+    root = pathlib.Path(rdf2smw_spark.__file__).parent
+    reached, todo = set(), list(_ROOTS)
+    while todo:
+        name = todo.pop()
+        path = _module_path(root, name)
+        if name in reached or path is None:
+            continue
+        reached.add(name)
+        tree = ast.parse(path.read_text())
+        package = name if path.name == "__init__.py" else name.rpartition(".")[0]
+        for dep in _imported_names(tree, package):
+            parts = dep.split(".")
+            if parts[0] == "rdf2smw_spark":
+                # importing a.b.c runs the a and a.b package inits too
+                todo.extend(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    modules = {
+        path.relative_to(root).with_suffix("").as_posix().replace("/", ".")
+        for path in root.rglob("*.py")
+        if path.name != "__init__.py"
+    }
+    unreached = sorted(m for m in modules if f"rdf2smw_spark.{m}" not in reached)
+    assert not unreached, (
+        f"modules no CLI, pipeline or declared query imports: {unreached} — "
+        "give each a caller from one of those roots or delete it"
+    )

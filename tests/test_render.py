@@ -118,33 +118,3 @@ def test_three_way_routing_and_envelope(spark):
     assert doc.startswith("<mediawiki>\n")
     assert doc.endswith("</mediawiki>\n")
     assert doc.count("<page>") == 2
-
-
-def test_write_xml_shards_standalone_docs(spark, tmp_path):
-    """Every shard file must parse as a standalone <mediawiki> document
-    (round-1 verdict fix #8 — the docstring used to promise this without
-    delivering the envelope)."""
-    import glob
-    import xml.etree.ElementTree as ET
-
-    from rdf2smw_spark.operators.render import write_xml_shards
-
-    pages = _pages(
-        spark,
-        [(f"Page{i}", URI_TYPE_UNDEFINED, [("P", f"v{i}")], [], None) for i in range(12)],
-    )
-    rendered = pages_to_xml(pages, use_templates=False).repartition(3)
-    out = str(tmp_path / "shards")
-    write_xml_shards(rendered, out)
-
-    parts = sorted(glob.glob(out + "/part-*"))
-    assert parts
-    total_pages = 0
-    for p in parts:
-        text = open(p).read()
-        if not text.strip():
-            continue  # empty partition -> empty shard file
-        root = ET.fromstring(text)
-        assert root.tag == "mediawiki"
-        total_pages += len(root.findall("page"))
-    assert total_pages == 12

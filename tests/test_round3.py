@@ -119,6 +119,7 @@ def test_registry_sweep_releases_all_scoped_caches(spark, sf_dir):
         "link_fuzzy",
         "ann_topk_ivf",
         "kg_fact_rows",
+        "kg_sparql_ivm_minmax",
     ]:
         QUERIES[name](spark, sf_dir).count()
     new_ids = ids() - base_ids

@@ -339,27 +339,3 @@ def test_lsh_recall_nonvacuous(spark, sf_dir):
     assert row["n_true"] > 0 and row["n_candidates"] > 0
     assert row["n_hit"] <= row["n_true"]
     assert row["recall_e6"] >= 800_000  # >= 80% recall at these band params
-
-
-def test_maintained_titles_match_recomputed(spark, sf_dir):
-    """Advancing the stored (subj, title) dim by a fast-path delta must
-    equal recomputing it from the full stream — the invariant that lets
-    the standing service skip the O(corpus) title pass per drain."""
-    from rdf2smw_spark.operators.incremental_kg import (
-        _subject_titles,
-        delta_forces_rebuild,
-        maintained_subject_titles,
-    )
-    from rdf2smw_spark.queries import _DELTA_ORDER, TYPE_PROPERTY_URI
-    from rdf2smw_spark.sources.testdata import testdata_triples
-
-    triples = testdata_triples(spark, sf_dir)
-    cond = F.expr(_DELTA_ORDER) & (F.col("pred") != TYPE_PROPERTY_URI)
-    delta, base = triples.filter(cond), triples.filter(~cond)
-    assert not delta_forces_rebuild(base, delta)
-    stored = _subject_titles(base)
-    advanced = maintained_subject_titles(stored, delta)
-    recomputed = _subject_titles(base.unionByName(delta))
-    a = sorted(map(tuple, advanced.collect()))
-    b = sorted(map(tuple, recomputed.collect()))
-    assert a == b

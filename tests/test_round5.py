@@ -86,45 +86,6 @@ def test_adamic_adar_deterministic_across_parallelism(spark):
     assert a == b
 
 
-def test_resize_image_nearest_exact(spark):
-    from rdf2smw_spark.operators import multimodal as mm
-
-    # 4x4 quadrant image: downsample to 2x2 must pick one pixel per
-    # quadrant (nearest-neighbor index floor((i+0.5)*src/dst) = 1, 3)
-    q = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 0)]
-    px = [q[(r // 2) * 2 + (c // 2)] for r in range(4) for c in range(4)]
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(mm.encode_bmp(4, 4, px)))],
-        "media_id long, kind string, payload binary",
-    )
-    row = mm.resize_image(media, 2, 2).collect()[0]
-    assert (row["src_w"], row["src_h"], row["dst_w"], row["dst_h"]) == (4, 4, 2, 2)
-    w, h, out_px = mm.decode_image(bytes(row["payload"]))
-    assert (w, h) == (2, 2)
-    assert out_px == q
-
-
-def test_resize_image_upsample_and_determinism(spark):
-    from rdf2smw_spark.operators import multimodal as mm
-
-    px = [(10 * i, 20 * i, 30 * i) for i in range(4)]  # 2x2
-    payload = bytearray(mm.encode_bmp(2, 2, px))
-    media = spark.createDataFrame(
-        [(i, "image", payload) for i in range(8)],
-        "media_id long, kind string, payload binary",
-    )
-    a = {r["media_id"]: bytes(r["payload"])
-         for r in mm.resize_image(media.coalesce(1), 3, 3).collect()}
-    b = {r["media_id"]: bytes(r["payload"])
-         for r in mm.resize_image(media.repartition(8), 3, 3).collect()}
-    assert a == b
-    w, h, out_px = mm.decode_image(a[0])
-    assert (w, h) == (3, 3)
-    # row/col source index for dst 3 from src 2: floor((2i+1)*2/6) = 0,1,1
-    m = [0, 1, 1]
-    assert out_px == [px[m[r] * 2 + m[c]] for r in range(3) for c in range(3)]
-
-
 def test_skolemize_scoping_and_idempotence(spark):
     from rdf2smw_spark.operators.sameas import SKOLEM_PREFIX, skolemize
 

@@ -48,17 +48,6 @@ def test_spark_escape_and_literal_match_python(spark):
         assert r["c"] == tn.py_clean_literal(r["raw"])
 
 
-def test_duckdb_title_matches_python():
-    con = duckdb.connect()
-    for c in CASES:
-        if len(c.encode()) >= tn.TITLE_MAX:
-            continue  # clean chain omits truncation by design
-        got = con.sql(
-            f"select {tn.sql_wiki_title_clean(tn._sql_quote(c), 'duckdb')} as t"
-        ).fetchone()[0]
-        assert got == tn.py_wiki_title_clean(c), repr(c)
-
-
 def test_duckdb_full_title_matches_python_incl_truncation():
     """The oracle dialect of the FULL chain (with the P5 truncation fold)
     must byte-match the Python reference on short, long, and pathological
