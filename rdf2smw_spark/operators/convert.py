@@ -28,21 +28,16 @@ from pyspark.sql import functions as F
 
 from rdf2smw_spark.session import scoped_local_checkpoint, scoped_persist
 
-from rdf2smw_spark.functions.textnorm import (
-    sql_clean_literal,
-    sql_local_name,
-    sql_smw_type,
-    wiki_title_col,
-)
+from rdf2smw_spark.functions.textnorm import sql_clean_literal, sql_smw_type
 from rdf2smw_spark.operators.aggregate import dedup_sorted
 from rdf2smw_spark.operators.dimensions import (
     class_depth,
+    page_title_col,
     subject_types_and_titles,
 )
 from rdf2smw_spark.schemas import (
     SUBCLASS_PROPERTY_URI,
     TYPE_PROPERTY_URI,
-    URI_TYPE_CLASS,
     URI_TYPE_PREDICATE,
     URI_TYPE_UNDEFINED,
 )
@@ -50,10 +45,10 @@ from rdf2smw_spark.schemas import (
 EQUIVALENT_URI_PROP = "Equivalent URI"  # triplestowikipageconv.go:148-150
 
 
-def _persist_coalesced(df: DataFrame) -> DataFrame:
-    """scoped_persist with a bounded-ratio coalesce: the conversion
-    cache is re-read by ~10 downstream stages, so its partition count
-    is pure per-stage scheduling overhead once partitions are small.
+def _coalesce_for_cache(df: DataFrame) -> DataFrame:
+    """The bounded-ratio coalesce applied before each conversion cache:
+    a cache re-read by ~10 downstream stages turns its partition count
+    into pure per-stage scheduling overhead once partitions are small.
     The 12-branch union source inherits ~cores splits PER BRANCH from
     the files.minPartitionNum floor (measured: a 112-partition cache of
     5k-row partitions at sf0.1, ~0.3-0.5s of task-launch overhead per
@@ -62,12 +57,9 @@ def _persist_coalesced(df: DataFrame) -> DataFrame:
     partitions >= cores and at most 8x larger than the scan splits, so
     a 100 TB cache keeps ~GB partitions instead of collapsing to
     total-cores."""
-    spark = df.sparkSession
     n = df.rdd.getNumPartitions()
-    target = max(spark.sparkContext.defaultParallelism, n // 8)
-    if n > target:
-        df = df.coalesce(target)
-    return scoped_persist(df)
+    target = max(df.sparkSession.sparkContext.defaultParallelism, n // 8)
+    return df.coalesce(target) if n > target else df
 
 
 def conversion_dims(
@@ -93,7 +85,7 @@ def conversion_dims(
         F.col("pred").isin(TITLE_PROPERTIES + [TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI])
     )
     if cache:
-        dim_src = _persist_coalesced(dim_src)
+        dim_src = scoped_persist(_coalesce_for_cache(dim_src))
 
     # ONE subj-keyed aggregation replaces the separate subject_types
     # groupBy + best_titles window over the same slice (guide §2.4);
@@ -122,11 +114,7 @@ def conversion_dims(
     pt = (
         pred_inv.select("pred")
         .join(bt, F.col("pred") == bt.subj, "left")
-        .select(
-            "pred",
-            F.coalesce(F.col("raw_title"), F.expr(sql_local_name("pred"))).alias("__raw"),
-        )
-        .select("pred", wiki_title_col("__raw").alias("pred_title"))
+        .select("pred", page_title_col("raw_title", "pred").alias("pred_title"))
     )
     return st, bt, cd, pt, pst
 
@@ -172,12 +160,7 @@ def triples_to_pages(
     # replaces; at cluster scale a 100 TB stream would instead be a
     # checkpointed table (plans/lineage).
     if cache:
-        spark_ctx = spark.sparkContext
-        n_parts = triples.rdd.getNumPartitions()
-        target = max(spark_ctx.defaultParallelism, n_parts // 8)
-        if n_parts > target:
-            triples = triples.coalesce(target)
-        triples = scoped_local_checkpoint(triples)
+        triples = scoped_local_checkpoint(_coalesce_for_cache(triples))
 
     if dims is None:
         dims = conversion_dims(spark, triples, cache=cache)
@@ -201,13 +184,8 @@ def triples_to_pages(
     # replaces + regexes + truncation fold) — evaluating it on the
     # distinct-URI dim keeps the stream-side stages small and cheap.
     objs = stream.filter(F.col("obj_is_iri")).select(F.col("obj").alias("__ouri")).distinct()
-    obj_titles = (
-        objs.join(bt, objs.__ouri == bt.subj, "left")
-        .select(
-            "__ouri",
-            F.coalesce(F.col("raw_title"), F.expr(sql_local_name("__ouri"))).alias("__oraw"),
-        )
-        .select("__ouri", wiki_title_col("__oraw").alias("__otitle"))
+    obj_titles = objs.join(bt, objs.__ouri == bt.subj, "left").select(
+        "__ouri", page_title_col("raw_title", "__ouri").alias("__otitle")
     )
     cd_obj = cd.select(F.col("uri").alias("__curi"), "depth")
 
@@ -270,8 +248,6 @@ def triples_to_pages(
         agg.join(st, "subj", "left")
         .join(bc(bt_subj), F.col("subj") == F.col("__suri"), "left")
         .withColumn("uri_type", F.coalesce(F.col("uri_type"), F.lit(URI_TYPE_UNDEFINED)))
-        .withColumn("__traw", F.coalesce(F.col("__sraw"), F.expr(sql_local_name("subj"))))
-        .withColumn("fact_title", wiki_title_col("__traw"))
         .withColumn("__deduped", dedup_sorted(F.sort_array(F.col("facts_raw"))))
         .withColumn(
             "__equiv",
@@ -289,12 +265,7 @@ def triples_to_pages(
         )
         .withColumn("categories", dedup_sorted(F.sort_array(F.col("cats_raw"))))
         .withColumn("specific_category", F.col("sel.name"))
-        .withColumn(
-            "title",
-            F.when(F.col("uri_type") == URI_TYPE_PREDICATE, F.concat(F.lit("Property:"), F.col("fact_title")))
-            .when(F.col("uri_type") == URI_TYPE_CLASS, F.concat(F.lit("Category:"), F.col("fact_title")))
-            .otherwise(F.col("fact_title")),
-        )
+        .withColumn("title", page_title_col("__sraw", "subj", "uri_type"))
         .select("subj", "title", F.col("uri_type").alias("page_type"), "facts", "categories", "specific_category")
     )
     if cache:

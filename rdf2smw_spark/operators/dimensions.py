@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from rdf2smw_spark.functions.textnorm import sql_local_name, wiki_title_col
 from rdf2smw_spark.schemas import (
     CATEGORY_TYPES,
     PROPERTY_TYPES,
@@ -68,6 +69,22 @@ def best_titles(triples: DataFrame) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("subj", "raw_title")
     )
+
+
+def page_title_col(raw_title: str, uri: str, uri_type: str | None = None) -> F.Column:
+    """An entity's wiki title: its best title (column `raw_title`, null
+    when untitled), else the local name of column `uri`, through the
+    factTitle chain. With a `uri_type` column, the PAGE title: Property:
+    for Predicates, Category: for Classes, bare otherwise."""
+    title = wiki_title_col(f"coalesce({raw_title}, {sql_local_name(uri)})")
+    if uri_type is None:
+        return title
+    prefix = (
+        F.when(F.col(uri_type) == URI_TYPE_PREDICATE, F.lit("Property:"))
+        .when(F.col(uri_type) == URI_TYPE_CLASS, F.lit("Category:"))
+        .otherwise(F.lit(""))
+    )
+    return F.concat(prefix, title)
 
 
 def subject_types_and_titles(dim_src: DataFrame) -> DataFrame:

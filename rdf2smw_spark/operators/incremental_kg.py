@@ -37,39 +37,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rdf2smw_spark.functions.textnorm import sql_local_name, sql_wiki_title_full
-from rdf2smw_spark.operators.dimensions import best_titles, subject_types
-from rdf2smw_spark.schemas import (
-    SUBCLASS_PROPERTY_URI,
-    TITLE_PROPERTIES,
-    TYPE_PROPERTY_URI,
-    URI_TYPE_CLASS,
-    URI_TYPE_PREDICATE,
-    URI_TYPE_UNDEFINED,
-)
+from rdf2smw_spark.operators.dimensions import page_title_col
+from rdf2smw_spark.schemas import SUBCLASS_PROPERTY_URI, TITLE_PROPERTIES, TYPE_PROPERTY_URI
 
 SCHEMA_PREDS = list(TITLE_PROPERTIES) + [TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI]
 
 
-def _subject_titles(
-    full: DataFrame,
-    st: DataFrame | None = None,
-    bt: DataFrame | None = None,
-) -> DataFrame:
-    """(subj, title) for every subject — the SAME title derivation as
-    triples_to_pages stage B (best-title fallback to local name, then
-    the Property:/Category: prefix by uri_type) so the closure keys
-    match the rendered page titles exactly.
-
-    st/bt: pre-derived subject_types / best_titles dims (the first two
-    members of convert.conversion_dims) — pass them when the caller
-    already derived the conversion dims from the SAME full stream, so
-    the title closure shares those plans instead of re-deriving two
-    full schema-slice passes."""
-    if st is None or bt is None:
-        dim_src = full.filter(F.col("pred").isin(SCHEMA_PREDS))
-        st = subject_types(dim_src) if st is None else st
-        bt = best_titles(dim_src) if bt is None else bt
+def _subject_titles(full: DataFrame, st: DataFrame, bt: DataFrame) -> DataFrame:
+    """(subj, title) for every subject of `full` — the page title of
+    triples_to_pages stage B (dimensions.page_title_col), so the closure
+    keys match the rendered page titles exactly. st/bt are the
+    subject_types / best_titles dims of the SAME stream (the first two
+    members of convert.conversion_dims)."""
     bt = bt.select(
         F.col("subj").alias("__suri"), F.col("raw_title").alias("__sraw")
     )
@@ -77,39 +56,15 @@ def _subject_titles(
     return (
         subs.join(F.broadcast(bt), subs["subj"] == bt["__suri"], "left")
         .join(st, "subj", "left")
-        .withColumn("uri_type", F.coalesce("uri_type", F.lit(URI_TYPE_UNDEFINED)))
-        .withColumn("__traw", F.coalesce("__sraw", F.expr(sql_local_name("subj"))))
-        .withColumn("__ft", F.expr(sql_wiki_title_full("__traw")))
-        .select(
-            "subj",
-            F.when(
-                F.col("uri_type") == URI_TYPE_PREDICATE,
-                F.concat(F.lit("Property:"), F.col("__ft")),
-            )
-            .when(
-                F.col("uri_type") == URI_TYPE_CLASS,
-                F.concat(F.lit("Category:"), F.col("__ft")),
-            )
-            .otherwise(F.col("__ft"))
-            .alias("title"),
-        )
+        .select("subj", page_title_col("__sraw", "subj", "uri_type").alias("title"))
     )
 
 
-def affected_subjects(
-    full: DataFrame, delta: DataFrame, titles: DataFrame | None = None
-) -> DataFrame:
+def affected_subjects(delta: DataFrame, titles: DataFrame) -> DataFrame:
     """Title-closed affected set: every subject whose page title is
     shared with some delta subject. Two semi-joins on the slim
-    (subj, title) dim — never the fact stream.
-
-    titles: a (subj, title) dim the caller already derived from the
-    same full stream (incremental_pages builds it from its conversion
-    dims), so the closure skips a second title pass."""
-    from rdf2smw_spark.session import scoped_persist
-
-    if titles is None:
-        titles = scoped_persist(_subject_titles(full))
+    (subj, title) dim of the full stream (_subject_titles) — never the
+    fact stream."""
     seed = titles.join(
         delta.select("subj").distinct(), "subj", "semi"
     ).select("title").distinct()
@@ -169,11 +124,11 @@ def incremental_pages(
     # without this, subject_types/best_titles were derived twice per
     # call (measured 22s -> 12s at sf0.001)
     dims = conversion_dims(spark, full, cache=True)
-    subject_titles = scoped_persist(_subject_titles(full, st=dims[0], bt=dims[1]))
+    subject_titles = scoped_persist(_subject_titles(full, dims[0], dims[1]))
     return triples_to_pages(
         spark,
         full,
         cache=False,
-        only_subjects=affected_subjects(full, delta, titles=subject_titles),
+        only_subjects=affected_subjects(delta, subject_titles),
         dims=dims,
     )

@@ -33,6 +33,8 @@ MERGE source for maintaining a materialized-closure table.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -107,12 +109,12 @@ CLOSURE_PAIR_LIMIT = 5_000_000
 
 
 def _closure_pairs(
-    edge_list: list[tuple[str, str]], max_iter: int
+    edge_list: Iterable[tuple[str, str]], max_iter: int
 ) -> set[tuple[str, str]] | None:
-    """Exact hop-capped reachability closure of a driver-side edge
-    list: {(u, v): v reachable from u in <= max_iter+1 edges} — the
-    same set the distributed frontier loop produces. Returns None when
-    the closure exceeds CLOSURE_PAIR_LIMIT (pathologically dense)."""
+    """Exact hop-capped reachability closure of driver-side edges:
+    {(u, v): v reachable from u in <= max_iter+1 edges} — the same
+    set the distributed frontier loop produces. Returns None when the
+    closure exceeds CLOSURE_PAIR_LIMIT (pathologically dense)."""
     adj: dict[str, list[str]] = {}
     for u, a in edge_list:
         adj.setdefault(u, []).append(a)
@@ -151,7 +153,8 @@ def _local_closure_df(spark, pairs: set[tuple[str, str]]) -> DataFrame:
 
 def _transitive_closure(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int | None]:
     """(uri, anc) reachability closure of an edge frame, bounded at
-    max_iter+1 hops. Returns (closure, n_rows) where n_rows is known
+    max_iter+1 hops (the distributed path also carries its `depth`
+    column). Returns (closure, n_rows) where n_rows is known
     exactly on the driver path and None on the distributed path.
 
     Schema layers are tiny in any curated ontology (10^3-10^5 edges
@@ -173,10 +176,14 @@ def _transitive_closure(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int
 
 
 def _transitive_closure_distributed(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Distributed fallback — semi-naive frontier iteration (the
-    class_ancestors loop without the depth column; depths are a path
-    property, plain reachability dedups harder). The `new` flag marks
-    the last round's pairs, which are the next frontier."""
+    """(uri, anc, depth): the reachability closure of a distinct
+    (uri, anc) edge frame, bounded at max_iter+1 hops, with each pair's
+    MINIMUM hop count — the one semi-naive frontier loop behind the
+    distributed schema closures and sameas.class_ancestors. Each round
+    extends only the last round's pairs (the `new` flag) by one edge and
+    keeps those not yet in the closure; every frontier row of round k
+    has depth k + 1, so a pair's first depth is its minimum and the
+    dedup on (uri, anc) is exact."""
     edges = edges.persist()
     up = edges.select(F.col("uri").alias("anc"), F.col("anc").alias("__up"))
 
@@ -184,15 +191,16 @@ def _transitive_closure_distributed(edges: DataFrame, max_iter: int) -> DataFram
         fresh = (
             closure.filter("new")
             .join(up, "anc")
-            .select("uri", F.col("__up").alias("anc"))
+            .select("uri", F.col("__up").alias("anc"), (F.col("depth") + 1).alias("depth"))
             .join(closure.select("uri", "anc"), ["uri", "anc"], "anti")
             .distinct()
         )
-        return closure.select("uri", "anc", F.lit(False).alias("new")).unionByName(
-            fresh.withColumn("new", F.lit(True))
-        ), F.col("new")
+        return closure.select(
+            "uri", "anc", "depth", F.lit(False).alias("new")
+        ).unionByName(fresh.withColumn("new", F.lit(True))), F.col("new")
 
-    closure, _ = fixpoint(edges.withColumn("new", F.lit(True)), step, max_iter)
+    init = edges.withColumn("depth", F.lit(1).cast("long")).withColumn("new", F.lit(True))
+    closure, _ = fixpoint(init, step, max_iter)
     edges.unpersist()
     return closure.drop("new")
 
@@ -225,6 +233,104 @@ def _broadcast_known(df: DataFrame, n: int | None) -> DataFrame:
     return maybe_broadcast(df, SCHEMA_BROADCAST_LIMIT)
 
 
+SCHEMA_PREDS = (SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI, DOMAIN_URI, RANGE_URI)
+# the layers closed transitively (rdfs11, rdfs5) before any rule reads them
+_CLOSED_PREDS = (SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI)
+
+
+def _schema_edges(src: DataFrame, pred_uri: str) -> DataFrame:
+    return src.filter((F.col("pred") == pred_uri) & F.col("obj_is_iri")).select(
+        F.col("subj").alias("uri"), F.col("obj").alias("anc")
+    )
+
+
+def _schema_layers(src: DataFrame, max_iter: int) -> list[tuple]:
+    """The four schema layers of `src` in SCHEMA_PREDS order, each as
+    (frame, known row count, driver-side pairs): subClassOf and
+    subPropertyOf closed, domain and range as asserted.
+
+    ONE predicate-pushed probe pulls all four layers — four separate
+    guarded collects each re-scanned the raw corpus (~1s apiece at
+    sf0.1, guide §2.4: don't repeat passes whose union is one
+    predicate-pushed scan). When it fits, every layer is a local frame
+    with its pairs on the driver, except a closure denser than
+    CLOSURE_PAIR_LIMIT, which runs the distributed loop. An oversized
+    probe takes the per-layer guarded paths. Pairs are None wherever
+    the layer is not on the driver."""
+    spark = src.sparkSession
+    probe = guarded_collect(
+        src.filter(F.col("pred").isin(list(SCHEMA_PREDS)) & F.col("obj_is_iri"))
+        .select("pred", "subj", "obj"),
+        CLOSURE_COLLECT_LIMIT,
+    )
+    layers = []
+    for pred_uri in SCHEMA_PREDS:
+        closed = pred_uri in _CLOSED_PREDS
+        if probe is None:
+            edges = _schema_edges(src, pred_uri)
+            df, n = (
+                _transitive_closure(edges, max_iter) if closed
+                else _collect_small(edges.distinct())
+            )
+            layers.append((df, n, None))
+            continue
+        sel = probe[probe["pred"] == pred_uri]
+        pairs = set(zip(sel["subj"], sel["obj"]))
+        if closed:
+            pairs = _closure_pairs(pairs, max_iter)
+        if pairs is None:  # dense closure blow-up
+            df = _transitive_closure_distributed(
+                _schema_edges(src, pred_uri).distinct(), max_iter
+            )
+            layers.append((df, None, None))
+        else:
+            layers.append((_local_closure_df(spark, pairs), len(pairs), pairs))
+    return layers
+
+
+def _rule_cols(subj: str, pred: str, rule: str) -> list:
+    """Conclusion columns of a rule with a constant predicate and the
+    schema layer's `anc` as IRI object."""
+    return [
+        F.col(subj).alias("subj"), F.lit(pred).alias("pred"),
+        F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
+        F.lit(rule).alias("rule"),
+    ]
+
+
+def _forward_rules(rows: DataFrame, layers: list[tuple]) -> DataFrame:
+    """rdfs7 -> rdfs2/3 -> rdfs9 over `rows` (subj, pred, obj,
+    obj_is_iri) against _schema_layers' frames: one rule-tagged row per
+    derivation (callers keep the min rule per triple). Domain/range see
+    the asserted AND rdfs7-extended property triples; rdfs9 lifts the
+    asserted and the rdfs2/3-derived types."""
+    subc, subp, dom, rng = (_broadcast_known(df, n) for df, n, _ in layers)
+    d7 = rows.join(subp, rows.pred == subp.uri).select(
+        "subj", F.col("anc").alias("pred"), "obj", "obj_is_iri",
+        F.lit("rdfs7").alias("rule"),
+    )
+    props = rows.unionByName(d7.drop("rule"))
+    d2 = props.join(dom, props.pred == dom.uri).select(
+        *_rule_cols("subj", TYPE_PROPERTY_URI, "rdfs2")
+    )
+    d3 = (
+        props.filter(F.col("obj_is_iri"))
+        .join(rng, props.pred == rng.uri)
+        .select(*_rule_cols("obj", TYPE_PROPERTY_URI, "rdfs3"))
+    )
+    types = (
+        rows.filter((F.col("pred") == TYPE_PROPERTY_URI) & F.col("obj_is_iri"))
+        .select("subj", "obj")
+        .unionByName(d2.select("subj", "obj"))
+        .unionByName(d3.select("subj", "obj"))
+        .distinct()
+    )
+    d9 = types.join(subc, types.obj == subc.uri).select(
+        *_rule_cols("subj", TYPE_PROPERTY_URI, "rdfs9")
+    )
+    return d7.unionByName(d2).unionByName(d3).unionByName(d9)
+
+
 def rdfs_entail(triples: DataFrame, max_iter: int = 10) -> DataFrame:
     """-> (subj, pred, obj, obj_is_iri, rule): the triples RDFS
     entails but the graph does not assert, tagged with the
@@ -237,195 +343,78 @@ def rdfs_entail(triples: DataFrame, max_iter: int = 10) -> DataFrame:
     # triples merely repeat broadcast-join probes (measured: dropping it
     # removes one ~|corpus| shuffle from the critical path)
     base = scoped_persist(triples.select("subj", "pred", "obj", "obj_is_iri"))
-
-    def _schema_edges(pred_uri: str) -> DataFrame:
-        return triples.filter(
-            (F.col("pred") == pred_uri) & F.col("obj_is_iri")
-        ).select(F.col("subj").alias("uri"), F.col("obj").alias("anc"))
-
-    # ONE probe pass pulls all four schema layers (subClassOf,
-    # subPropertyOf, domain, range) — four separate guarded collects
-    # each re-scanned the raw corpus (~1s apiece at sf0.1, guide §2.4:
-    # don't repeat passes whose union is one predicate-pushed scan).
-    spark = triples.sparkSession
-    probe = guarded_collect(
-        triples.filter(F.col("pred").isin(list(SCHEMA_PREDS)) & F.col("obj_is_iri"))
-        .select("pred", "subj", "obj"),
-        CLOSURE_COLLECT_LIMIT,
-    )
-    fused = None
-    if probe is not None:
-        def _edges_of(pred_uri: str) -> list[tuple[str, str]]:
-            sel = probe[probe["pred"] == pred_uri]
-            return list(dict.fromkeys(zip(sel["subj"], sel["obj"])))
-
-        subc_pairs = _closure_pairs(_edges_of(SUBCLASS_PROPERTY_URI), max_iter)
-        subp_pairs = _closure_pairs(_edges_of(SUBPROPERTY_URI), max_iter)
-        dom_edges = _edges_of(DOMAIN_URI)
-        rng_edges = _edges_of(RANGE_URI)
-        if subc_pairs is not None and subp_pairs is not None:
-            fused = _fused_actions(subc_pairs, subp_pairs, dom_edges, rng_edges)
-        if fused is not None:
-            # --- fused single-pass formulation (schema layers local) ----
-            # The generic join formulation below re-scans `base` once per
-            # rule branch (11 cached-corpus passes, measured: the whole
-            # count phase at sf0.1). With every schema layer on the
-            # driver, the composition d2/d3-through-subp and d9-over-
-            # d2/d3 is precomputed per PREDICATE into one broadcast
-            # action table, so the instance corpus is touched exactly
-            # 3x: the action join (rdfs7/2/3 + their rdfs9 closures),
-            # the asserted-type rdfs9 join, and the anti-join probe.
-            # Result set and rule tags are identical by construction:
-            # every composed action carries the same tag the chained
-            # rules would have produced, and the final min-rule groupBy
-            # collapses duplicates exactly as before (pytested against
-            # the unfused oracle).
-            acts, subc_pairs, subp_pairs = fused
-            act_df = small_local_df(
-                spark,
-                sorted((p, k, a, r) for (p, k, a), r in acts.items()),
-                "pred string, kind string, arg string, rule string",
-            )
-            subc = _local_closure_df(spark, subc_pairs)
-            subp = _local_closure_df(spark, subp_pairs)
-            ext = base.join(F.broadcast(act_df), "pred")
-            d_pred = ext.filter(
-                (F.col("kind") != "rng") | F.col("obj_is_iri")
-            ).select(
-                F.when(F.col("kind") == "rng", F.col("obj"))
-                .otherwise(F.col("subj")).alias("subj"),
-                F.when(F.col("kind") == "d7", F.col("arg"))
-                .otherwise(F.lit(TYPE_PROPERTY_URI)).alias("pred"),
-                F.when(F.col("kind") == "d7", F.col("obj"))
-                .otherwise(F.col("arg")).alias("obj"),
-                F.when(F.col("kind") == "d7", F.col("obj_is_iri"))
-                .otherwise(F.lit(True)).alias("obj_is_iri"),
-                "rule",
-            )
-            d9a = (
-                base.filter(
-                    (F.col("pred") == TYPE_PROPERTY_URI) & F.col("obj_is_iri")
-                )
-                .join(F.broadcast(subc), base.obj == subc.uri)
-                .select(
-                    "subj", F.lit(TYPE_PROPERTY_URI).alias("pred"),
-                    F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-                    F.lit("rdfs9").alias("rule"),
-                )
-            )
-            d11 = subc.select(
-                F.col("uri").alias("subj"),
-                F.lit(SUBCLASS_PROPERTY_URI).alias("pred"),
-                F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-                F.lit("rdfs11").alias("rule"),
-            )
-            d5 = subp.select(
-                F.col("uri").alias("subj"),
-                F.lit(SUBPROPERTY_URI).alias("pred"),
-                F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-                F.lit("rdfs5").alias("rule"),
-            )
-            derived = (
-                d_pred.unionByName(d9a).unionByName(d11).unionByName(d5)
-                .groupBy("subj", "pred", "obj", "obj_is_iri")
-                .agg(F.min("rule").alias("rule"))
-            )
-            derivable = sorted(
-                {a for (u, a) in subp_pairs}
-                | {TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI}
-            )
-            asserted = base.filter(F.col("pred").isin(derivable))
-            return derived.join(
-                asserted.select("subj", "pred", "obj"),
-                ["subj", "pred", "obj"], "anti",
-            )
-
-        def _layer(pred_uri: str, pairs, edge_list) -> tuple[DataFrame, int | None]:
-            if pairs is None and edge_list is None:  # dense closure blow-up
-                return _transitive_closure_distributed(
-                    _schema_edges(pred_uri).distinct(), max_iter
-                ), None
-            rows = pairs if pairs is not None else set(edge_list)
-            return _local_closure_df(spark, rows), len(rows)
-
-        subc, n_subc = _layer(SUBCLASS_PROPERTY_URI, subc_pairs, None if subc_pairs is None else [])
-        subp, n_subp = _layer(SUBPROPERTY_URI, subp_pairs, None if subp_pairs is None else [])
-        dom, n_dom = _layer(DOMAIN_URI, None, dom_edges)
-        rng, n_rng = _layer(RANGE_URI, None, rng_edges)
-    else:  # oversized schema layer: per-layer guarded paths as before
-        subc, n_subc = _transitive_closure(_schema_edges(SUBCLASS_PROPERTY_URI), max_iter)
-        subp, n_subp = _transitive_closure(_schema_edges(SUBPROPERTY_URI), max_iter)
-        dom, n_dom = _collect_small(_schema_edges(DOMAIN_URI).distinct())
-        rng, n_rng = _collect_small(_schema_edges(RANGE_URI).distinct())
-    b_subc = _broadcast_known(subc, n_subc)
-    b_subp = _broadcast_known(subp, n_subp)
-    b_dom = _broadcast_known(dom, n_dom)
-    b_rng = _broadcast_known(rng, n_rng)
-
-    d7 = base.join(b_subp, base.pred == b_subp.uri).select(
-        "subj", F.col("anc").alias("pred"), "obj", "obj_is_iri",
-        F.lit("rdfs7").alias("rule"),
-    )
-    # domain/range see asserted AND rdfs7-extended property triples
-    props = base.unionByName(d7.drop("rule"))
-    d2 = props.join(b_dom, props.pred == b_dom.uri).select(
-        "subj", F.lit(TYPE_PROPERTY_URI).alias("pred"),
-        F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-        F.lit("rdfs2").alias("rule"),
-    )
-    d3 = (
-        props.filter(F.col("obj_is_iri"))
-        .join(b_rng, props.pred == b_rng.uri)
-        .select(
-            F.col("obj").alias("subj"), F.lit(TYPE_PROPERTY_URI).alias("pred"),
-            F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-            F.lit("rdfs3").alias("rule"),
+    layers = _schema_layers(triples, max_iter)
+    (subc, _, _), (subp, _, subp_pairs) = layers[:2]
+    pairs = [p for _, _, p in layers]
+    acts = _fused_actions(*pairs) if all(p is not None for p in pairs) else None
+    if acts is not None:
+        # --- fused single-pass formulation (schema layers local) --------
+        # The generic join formulation re-scans `base` once per rule
+        # branch (11 cached-corpus passes, measured: the whole count
+        # phase at sf0.1). With every schema layer on the driver, the
+        # composition d2/d3-through-subp and d9-over-d2/d3 is
+        # precomputed per PREDICATE into one broadcast action table, so
+        # the instance corpus is touched exactly 3x: the action join
+        # (rdfs7/2/3 + their rdfs9 closures), the asserted-type rdfs9
+        # join, and the anti-join probe. Result set and rule tags are
+        # identical by construction: every composed action carries the
+        # same tag the chained rules would have produced, and the final
+        # min-rule groupBy collapses duplicates exactly as before
+        # (pytested against the generic formulation).
+        act_df = small_local_df(
+            triples.sparkSession,
+            sorted((p, k, a, r) for (p, k, a), r in acts.items()),
+            "pred string, kind string, arg string, rule string",
         )
-    )
-    types = (
-        base.filter((F.col("pred") == TYPE_PROPERTY_URI) & F.col("obj_is_iri"))
-        .select("subj", "obj")
-        .unionByName(d2.select("subj", "obj"))
-        .unionByName(d3.select("subj", "obj"))
-        .distinct()
-    )
-    d9 = types.join(b_subc, types.obj == b_subc.uri).select(
-        "subj", F.lit(TYPE_PROPERTY_URI).alias("pred"),
-        F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-        F.lit("rdfs9").alias("rule"),
-    )
-    d11 = subc.select(
-        F.col("uri").alias("subj"), F.lit(SUBCLASS_PROPERTY_URI).alias("pred"),
-        F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-        F.lit("rdfs11").alias("rule"),
-    )
-    d5 = subp.select(
-        F.col("uri").alias("subj"), F.lit(SUBPROPERTY_URI).alias("pred"),
-        F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-        F.lit("rdfs5").alias("rule"),
-    )
+        ext = base.join(F.broadcast(act_df), "pred")
+        d_pred = ext.filter(
+            (F.col("kind") != "rng") | F.col("obj_is_iri")
+        ).select(
+            F.when(F.col("kind") == "rng", F.col("obj"))
+            .otherwise(F.col("subj")).alias("subj"),
+            F.when(F.col("kind") == "d7", F.col("arg"))
+            .otherwise(F.lit(TYPE_PROPERTY_URI)).alias("pred"),
+            F.when(F.col("kind") == "d7", F.col("obj"))
+            .otherwise(F.col("arg")).alias("obj"),
+            F.when(F.col("kind") == "d7", F.col("obj_is_iri"))
+            .otherwise(F.lit(True)).alias("obj_is_iri"),
+            "rule",
+        )
+        d9a = (
+            base.filter((F.col("pred") == TYPE_PROPERTY_URI) & F.col("obj_is_iri"))
+            .join(F.broadcast(subc), base.obj == subc.uri)
+            .select(*_rule_cols("subj", TYPE_PROPERTY_URI, "rdfs9"))
+        )
+        rules = d_pred.unionByName(d9a)
+        derivable = sorted(
+            {a for (u, a) in subp_pairs}
+            | {TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI}
+        )
+        asserted = base.filter(F.col("pred").isin(derivable))
+    else:
+        rules = _forward_rules(base, layers)
+        # every derived triple's predicate is schema-bounded: rdf:type /
+        # subClassOf / subPropertyOf, or a subp ancestor (rdfs7). Restrict
+        # the anti-join's probe side to those predicates with a broadcast
+        # semi-join so the "already asserted?" check shuffles a
+        # schema-sized slice of the corpus, not all of it.
+        derivable_preds = (
+            subp.select(F.col("anc").alias("pred"))
+            .unionByName(
+                subp.sparkSession.createDataFrame(
+                    [(TYPE_PROPERTY_URI,), (SUBCLASS_PROPERTY_URI,), (SUBPROPERTY_URI,)],
+                    "pred string",
+                )
+            )
+            .distinct()
+        )
+        asserted = base.join(F.broadcast(derivable_preds), "pred", "semi")
     derived = (
-        d7.unionByName(d2).unionByName(d3).unionByName(d9)
-        .unionByName(d11).unionByName(d5)
+        rules.unionByName(subc.select(*_rule_cols("uri", SUBCLASS_PROPERTY_URI, "rdfs11")))
+        .unionByName(subp.select(*_rule_cols("uri", SUBPROPERTY_URI, "rdfs5")))
         .groupBy("subj", "pred", "obj", "obj_is_iri")
         .agg(F.min("rule").alias("rule"))
     )
-    # every derived triple's predicate is schema-bounded: rdf:type /
-    # subClassOf / subPropertyOf, or a subp ancestor (rdfs7). Restrict
-    # the anti-join's probe side to those predicates with a broadcast
-    # semi-join so the "already asserted?" check shuffles a schema-sized
-    # slice of the corpus, not all of it.
-    derivable_preds = (
-        subp.select(F.col("anc").alias("pred"))
-        .unionByName(
-            subp.sparkSession.createDataFrame(
-                [(TYPE_PROPERTY_URI,), (SUBCLASS_PROPERTY_URI,), (SUBPROPERTY_URI,)],
-                "pred string",
-            )
-        )
-        .distinct()
-    )
-    asserted = base.join(F.broadcast(derivable_preds), "pred", "semi")
     return derived.join(
         asserted.select("subj", "pred", "obj"), ["subj", "pred", "obj"], "anti"
     )
@@ -440,8 +429,8 @@ def _fused_actions(subc_pairs, subp_pairs, dom_edges, rng_edges):
     """Compose, per predicate, every rule consequence the schema layers
     imply — rdfs7 (subp ancestors), rdfs2/rdfs3 through superproperties,
     and rdfs9 over the d2/d3-derived types — into (pred, kind, arg) ->
-    min rule tag. Returns (acts, subc_pairs, subp_pairs) or None when
-    the composition exceeds ACTION_TABLE_LIMIT."""
+    min rule tag. Returns None when the composition exceeds
+    ACTION_TABLE_LIMIT."""
     subp_adj: dict[str, set[str]] = {}
     for u, a in subp_pairs:
         subp_adj.setdefault(u, set()).add(a)
@@ -479,16 +468,13 @@ def _fused_actions(subc_pairs, subp_pairs, dom_edges, rng_edges):
                     _act(p, "rng", d, "rdfs9")
         if len(acts) > ACTION_TABLE_LIMIT:
             return None
-    return acts, subc_pairs, subp_pairs
-
-
-SCHEMA_PREDS = (SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI, DOMAIN_URI, RANGE_URI)
+    return acts
 
 
 def rdfs_entail_incremental(
     base: DataFrame,
     delta: DataFrame,
-    entailed_base: DataFrame | None = None,
+    entailed_base: DataFrame,
     max_iter: int = 10,
 ) -> DataFrame:
     """Semi-naive maintenance of the entailment delta under NEW triples:
@@ -502,16 +488,14 @@ def rdfs_entail_incremental(
     recompute (the incremental_kg probe discipline: a bounded limit(1)
     existence check, never a full scan of the delta).
 
-    `entailed_base` is the MAINTAINED derived table (rdfs_entail(base));
-    passing it keeps the fast path free of any base-corpus entailment
-    work (it is touched only by a delta-restricted semi + anti join).
-    Recomputed from base when omitted.
+    `entailed_base` is the MAINTAINED derived table (rdfs_entail(base)),
+    so the fast path does no base-corpus entailment work (the table is
+    touched only by a delta-restricted semi + anti join).
 
     Returns the derived-only rows ADDED by the delta — the MERGE
     source. Exactness contract pytested against the full recompute."""
     both = base.unionByName(delta)
-    if entailed_base is None:
-        entailed_base = rdfs_entail(base, max_iter)
+    spo = ["subj", "pred", "obj"]
     schema_in_delta = (
         delta.filter(F.col("pred").isin(*SCHEMA_PREDS) & F.col("obj_is_iri"))
         .limit(1)
@@ -523,91 +507,11 @@ def rdfs_entail_incremental(
         # sound (an entailment can even DISAPPEAR only under deletes,
         # never here, but new schema edges re-derive across the corpus)
         return rdfs_entail(both, max_iter).join(
-            entailed_base.select("subj", "pred", "obj"),
-            ["subj", "pred", "obj"],
-            "anti",
+            entailed_base.select(*spo), spo, "anti"
         )
-
-    def _schema_edges(src: DataFrame, pred_uri: str) -> DataFrame:
-        return src.filter(
-            (F.col("pred") == pred_uri) & F.col("obj_is_iri")
-        ).select(F.col("subj").alias("uri"), F.col("obj").alias("anc"))
-
-    # ONE probe pass for all four base schema layers (same r6 shape as
-    # rdfs_entail: four separate guarded collects each re-scanned the
-    # base corpus)
-    spark = base.sparkSession
-    probe = guarded_collect(
-        base.filter(F.col("pred").isin(list(SCHEMA_PREDS)) & F.col("obj_is_iri"))
-        .select("pred", "subj", "obj"),
-        CLOSURE_COLLECT_LIMIT,
-    )
-    if probe is not None:
-        def _edges_of(pred_uri: str) -> list[tuple[str, str]]:
-            sel = probe[probe["pred"] == pred_uri]
-            return list(dict.fromkeys(zip(sel["subj"], sel["obj"])))
-
-        def _layer(pred_uri: str, close: bool) -> tuple[DataFrame, int | None]:
-            edge_list = _edges_of(pred_uri)
-            if close:
-                pairs = _closure_pairs(edge_list, max_iter)
-                if pairs is None:
-                    return _transitive_closure_distributed(
-                        _schema_edges(base, pred_uri).distinct(), max_iter
-                    ), None
-                return _local_closure_df(spark, pairs), len(pairs)
-            return small_local_df(
-                spark, sorted(set(edge_list)), "uri string, anc string"
-            ), len(edge_list)
-
-        subc, n_subc = _layer(SUBCLASS_PROPERTY_URI, close=True)
-        subp, n_subp = _layer(SUBPROPERTY_URI, close=True)
-        dom, n_dom = _layer(DOMAIN_URI, close=False)
-        rng, n_rng = _layer(RANGE_URI, close=False)
-    else:
-        subc, n_subc = _transitive_closure(_schema_edges(base, SUBCLASS_PROPERTY_URI), max_iter)
-        subp, n_subp = _transitive_closure(_schema_edges(base, SUBPROPERTY_URI), max_iter)
-        dom, n_dom = _collect_small(_schema_edges(base, DOMAIN_URI).distinct())
-        rng, n_rng = _collect_small(_schema_edges(base, RANGE_URI).distinct())
-    b_subc = _broadcast_known(subc, n_subc)
-    b_subp = _broadcast_known(subp, n_subp)
-    b_dom = _broadcast_known(dom, n_dom)
-    b_rng = _broadcast_known(rng, n_rng)
-
-    d = delta.select("subj", "pred", "obj", "obj_is_iri").distinct()
-    d7 = d.join(b_subp, d.pred == b_subp.uri).select(
-        "subj", F.col("anc").alias("pred"), "obj", "obj_is_iri",
-        F.lit("rdfs7").alias("rule"),
-    )
-    props = d.unionByName(d7.drop("rule"))
-    d2 = props.join(b_dom, props.pred == b_dom.uri).select(
-        "subj", F.lit(TYPE_PROPERTY_URI).alias("pred"),
-        F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-        F.lit("rdfs2").alias("rule"),
-    )
-    d3 = (
-        props.filter(F.col("obj_is_iri"))
-        .join(b_rng, props.pred == b_rng.uri)
-        .select(
-            F.col("obj").alias("subj"), F.lit(TYPE_PROPERTY_URI).alias("pred"),
-            F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-            F.lit("rdfs3").alias("rule"),
-        )
-    )
-    types = (
-        d.filter((F.col("pred") == TYPE_PROPERTY_URI) & F.col("obj_is_iri"))
-        .select("subj", "obj")
-        .unionByName(d2.select("subj", "obj"))
-        .unionByName(d3.select("subj", "obj"))
-        .distinct()
-    )
-    d9 = types.join(b_subc, types.obj == b_subc.uri).select(
-        "subj", F.lit(TYPE_PROPERTY_URI).alias("pred"),
-        F.col("anc").alias("obj"), F.lit(True).alias("obj_is_iri"),
-        F.lit("rdfs9").alias("rule"),
-    )
+    rows = delta.select("subj", "pred", "obj", "obj_is_iri").distinct()
     derived = (
-        d7.unionByName(d2).unionByName(d3).unionByName(d9)
+        _forward_rules(rows, _schema_layers(base, max_iter))
         .groupBy("subj", "pred", "obj", "obj_is_iri")
         .agg(F.min("rule").alias("rule"))
     )
@@ -615,12 +519,10 @@ def rdfs_entail_incremental(
     # the maintained table is restricted by semi-join to the rows this
     # delta could re-derive before the anti (slim probe, no full scan
     # shipped)
-    asserted = both.select("subj", "pred", "obj").distinct()
-    old_derived = entailed_base.join(
-        derived.select("subj", "pred", "obj"), ["subj", "pred", "obj"], "semi"
-    )
-    return derived.join(asserted, ["subj", "pred", "obj"], "anti").join(
-        old_derived.select("subj", "pred", "obj"), ["subj", "pred", "obj"], "anti"
+    asserted = both.select(*spo).distinct()
+    old_derived = entailed_base.join(derived.select(*spo), spo, "semi")
+    return derived.join(asserted, spo, "anti").join(
+        old_derived.select(*spo), spo, "anti"
     )
 
 

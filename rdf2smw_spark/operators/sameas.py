@@ -213,42 +213,20 @@ def synth_class_chain(spark, sf_dir):
 def class_ancestors(triples, max_iter: int = 10):
     """(uri, ancestor, depth): the rdfs:subClassOf transitive closure
     with MINIMUM hop depth — the materialized path table SPARQL property
-    paths (subClassOf+) and reasoners query against. Iterative frontier
-    extension over the CLASS layer only (a sliver of the corpus); per
-    round one join + an anti-join against the closure, stopping when a
-    round adds nothing — O(hierarchy height) rounds, and real
-    ontologies are shallow (<20). Every pair found in round k is first
-    reached at depth k + 1, so a pair's first depth is its minimum; the
-    `new` flag marks the last round's pairs (the next frontier)."""
-    from rdf2smw_spark.schemas import SUBCLASS_PROPERTY_URI
-    from rdf2smw_spark.session import fixpoint
-
-    edges = (
-        triples.filter(
-            (F.col("pred") == SUBCLASS_PROPERTY_URI) & F.col("obj_is_iri")
-        )
-        .select(F.col("subj").alias("uri"), F.col("obj").alias("ancestor"))
-        .distinct()
-        .persist()
+    paths (subClassOf+) and reasoners query against. The class layer (a
+    sliver of the corpus) runs through rdfs' reachability loop: one
+    frontier join + anti-join per round, O(hierarchy height) rounds,
+    and real ontologies are shallow (<20)."""
+    from rdf2smw_spark.operators.rdfs import (
+        _schema_edges,
+        _transitive_closure_distributed,
     )
-    up = edges.select(F.col("uri").alias("ancestor"), F.col("ancestor").alias("__up"))
+    from rdf2smw_spark.schemas import SUBCLASS_PROPERTY_URI
 
-    def step(closure: DataFrame):
-        fresh = (
-            closure.filter("new")
-            .join(up, "ancestor")
-            .select("uri", F.col("__up").alias("ancestor"), (F.col("depth") + 1).alias("depth"))
-            .join(closure.select("uri", "ancestor"), ["uri", "ancestor"], "anti")
-            .distinct()
-        )
-        return closure.select(
-            "uri", "ancestor", "depth", F.lit(False).alias("new")
-        ).unionByName(fresh.withColumn("new", F.lit(True))), F.col("new")
-
-    init = edges.withColumn("depth", F.lit(1).cast("long")).withColumn("new", F.lit(True))
-    closure, _ = fixpoint(init, step, max_iter)
-    edges.unpersist()
-    return closure.drop("new")
+    edges = _schema_edges(triples, SUBCLASS_PROPERTY_URI).distinct()
+    return _transitive_closure_distributed(edges, max_iter).withColumnRenamed(
+        "anc", "ancestor"
+    )
 
 
 def class_ancestors_sql(triples_sql: str) -> str:

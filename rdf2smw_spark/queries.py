@@ -21,7 +21,6 @@ from rdf2smw_spark.extract import (
     site_stats,
     site_stats_sql,
 )
-from rdf2smw_spark.functions.textnorm import sql_local_name, sql_wiki_title_full
 from rdf2smw_spark.operators import asof as _asof
 from rdf2smw_spark.operators import dedup as dd
 from rdf2smw_spark.operators import graph as gr
@@ -38,10 +37,11 @@ from rdf2smw_spark.operators.convert import triples_to_pages
 from rdf2smw_spark.operators.dimensions import (
     best_titles,
     class_depth,
+    page_title_col,
     pred_smw_types,
     subject_types,
 )
-from rdf2smw_spark.schemas import TYPE_PROPERTY_URI, URI_TYPE_PREDICATE
+from rdf2smw_spark.schemas import TYPE_PROPERTY_URI, URI_TYPE_PREDICATE, URI_TYPE_UNDEFINED
 from rdf2smw_spark.session import read_parquet_cached_schema as _rp
 from rdf2smw_spark.sources.testdata import duckdb_triples_sql, testdata_triples
 from rdf2smw_spark.sources.webpages import duckdb_pages_sql, synth_pages
@@ -136,15 +136,10 @@ def _wiki_titles(spark: SparkSession, triples: DataFrame) -> DataFrame:
     return (
         subjects.join(bt, "subj", "left")
         .join(st, "subj", "left")
-        .withColumn("uri_type", F.coalesce("uri_type", F.lit(1)))
-        .withColumn("__raw", F.coalesce("raw_title", F.expr(sql_local_name("subj"))))
-        .withColumn("__t", F.expr(sql_wiki_title_full("__raw")))
+        .withColumn("uri_type", F.coalesce("uri_type", F.lit(URI_TYPE_UNDEFINED)))
         .select(
             "subj",
-            F.when(F.col("uri_type") == 2, F.concat(F.lit("Property:"), "__t"))
-            .when(F.col("uri_type") == 3, F.concat(F.lit("Category:"), "__t"))
-            .otherwise(F.col("__t"))
-            .alias("page_title"),
+            page_title_col("raw_title", "subj", "uri_type").alias("page_title"),
             "uri_type",
         )
     )

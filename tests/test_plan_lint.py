@@ -100,13 +100,13 @@ _LOCAL_CHECKPOINT_OK = {
 }
 _GUARDED_COLLECT = re.compile(r"limit\([^()]*\+\s*1\)\s*\.toPandas\(\)")
 # Every iterative loop, by file. pagerank and personalized_pagerank share
-# one power iteration, and sameas.uri_components calls
-# dedup.dedup_clusters (the one connected-components loop): a second
-# copy of either would add a site here.
+# one power iteration, sameas.uri_components calls dedup.dedup_clusters
+# (the one connected-components loop), and sameas.class_ancestors calls
+# rdfs._transitive_closure_distributed (the one reachability closure): a
+# second copy of any of them would add a site here.
 _FIXPOINT_SITES = {
     "operators/graph.py": 5,  # power iteration, bfs, lp, hits, kcore
-    "operators/sameas.py": 1,  # class_ancestors
-    "operators/rdfs.py": 2,  # distributed closure, owl_entail
+    "operators/rdfs.py": 2,  # the reachability closure, owl_entail
     "operators/dedup.py": 1,  # connected components
     "operators/dimensions.py": 1,  # class_depth_fixpoint
     "sparql.py": 2,  # property-path closure, DESCRIBE blank chains

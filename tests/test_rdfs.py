@@ -1,6 +1,7 @@
 """RDFS entailment materialization (operators/rdfs.py)."""
 
 import duckdb
+import pytest
 
 from rdf2smw_spark.operators.rdfs import (
     DOMAIN_URI,
@@ -98,9 +99,25 @@ def _entail_set(df):
     return {(r.subj, r.pred, r.obj, r.obj_is_iri, r.rule) for r in df.collect()}
 
 
-def test_incremental_instance_delta_equals_full(spark):
+# Both sides of the schema-layer guard: the driver closure and the
+# distributed loop (no driver collect at all).
+_COLLECT_LIMITS = pytest.mark.parametrize(
+    "collect_limit", [None, -1], ids=["default", "distributed"]
+)
+
+
+def _set_collect_limit(monkeypatch, collect_limit):
+    import rdf2smw_spark.operators.rdfs as rdfs_mod
+
+    if collect_limit is not None:
+        monkeypatch.setattr(rdfs_mod, "CLOSURE_COLLECT_LIMIT", collect_limit)
+
+
+@_COLLECT_LIMITS
+def test_incremental_instance_delta_equals_full(spark, monkeypatch, collect_limit):
     """Fast path: instance-only delta — maintained table ∪ incremental
     delta must equal the full recompute, tags included."""
+    _set_collect_limit(monkeypatch, collect_limit)
     base = spark.createDataFrame(T, TRIPLE_SCHEMA)
     delta = spark.createDataFrame(
         [
@@ -121,9 +138,11 @@ def test_incremental_instance_delta_equals_full(spark):
     assert ("y", TYPE, "A") not in d
 
 
-def test_incremental_schema_delta_falls_back(spark):
+@_COLLECT_LIMITS
+def test_incremental_schema_delta_falls_back(spark, monkeypatch, collect_limit):
     """A delta carrying a schema edge must take the full-rebuild path
     and still return exactly the added rows."""
+    _set_collect_limit(monkeypatch, collect_limit)
     base = spark.createDataFrame(T, TRIPLE_SCHEMA)
     delta = spark.createDataFrame(
         [("C", SUBC, "E", True, None, "t")],  # extends the class chain
@@ -222,8 +241,8 @@ def test_cyclic_schema_terminates(spark):
 def test_fused_equals_generic_formulation(spark, monkeypatch):
     """The fused action-table plan (schema layers composed on the
     driver, r6 optimization) must emit exactly the rows + rule tags of
-    the generic join formulation AND of the distributed-closure
-    fallback, on a fixture where every rule fires."""
+    the generic join formulation, of the dense-closure fallback and of
+    the fully distributed path, on a fixture where every rule fires."""
     import rdf2smw_spark.operators.rdfs as rdfs_mod
 
     df = spark.createDataFrame(T, TRIPLE_SCHEMA)
@@ -231,10 +250,16 @@ def test_fused_equals_generic_formulation(spark, monkeypatch):
     # force the generic join formulation (action table disabled)
     monkeypatch.setattr(rdfs_mod, "ACTION_TABLE_LIMIT", -1)
     generic = _entail_set(rdfs_entail(df))
+    # the probe still fits, but every driver closure counts as too dense:
+    # subClassOf/subPropertyOf close in the distributed loop, while
+    # domain/range stay local frames
+    with monkeypatch.context() as m:
+        m.setattr(rdfs_mod, "CLOSURE_PAIR_LIMIT", -1)
+        dense = _entail_set(rdfs_entail(df))
     # force the fully distributed path (no driver collects at all)
     monkeypatch.setattr(rdfs_mod, "CLOSURE_COLLECT_LIMIT", -1)
     distributed = _entail_set(rdfs_entail(df))
-    assert fused == generic == distributed
+    assert fused == generic == dense == distributed
 
 
 def test_owl_local_equals_distributed(spark, monkeypatch):

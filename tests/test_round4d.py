@@ -185,8 +185,9 @@ def test_incremental_matches_full_restricted(spark, sf_dir):
     """The core identity: incremental pages == the full rebuild's pages
     for every affected title (the registry oracle checks the rendered
     XML; this pins the pre-render page rows including fact arrays)."""
-    from rdf2smw_spark.operators.convert import triples_to_pages
+    from rdf2smw_spark.operators.convert import conversion_dims, triples_to_pages
     from rdf2smw_spark.operators.incremental_kg import (
+        _subject_titles,
         affected_subjects,
         incremental_pages,
     )
@@ -205,7 +206,8 @@ def test_incremental_matches_full_restricted(spark, sf_dir):
     b = sorted(map(str, full.collect()))
     assert a == b
     # the affected set is the title closure of the delta's subjects
-    aff = affected_subjects(triples, delta)
+    st, bt = conversion_dims(spark, triples, cache=False)[:2]
+    aff = affected_subjects(delta, _subject_titles(triples, st, bt))
     assert aff.count() >= delta.select("subj").distinct().count()
 
 
