@@ -123,18 +123,12 @@ def triples_to_pages(
     spark: SparkSession,
     triples: DataFrame,
     n_salt: int = 16,
-    broadcast_dims: bool = True,
     cache: bool = True,
     only_subjects: DataFrame | None = None,
     dims: tuple | None = None,
 ) -> DataFrame:
     """Full conversion pass. Returns the WikiPage DataFrame
     (title, page_type, facts, categories, specific_category).
-
-    broadcast_dims: broadcast best_titles for the object-side title
-    lookup. Correct default for dims up to the broadcast threshold; at
-    10^12 documents the titled-entity dim may exceed it — set False and
-    the same plan runs as a sort-merge join (ideally on bucketed tables).
 
     only_subjects: optional single-column `subj` frame restricting the
     EXPENSIVE half of the plan (stage B enrichment + the salted
@@ -145,8 +139,6 @@ def triples_to_pages(
     incremental-maintenance hook (operators/incremental_kg.py): at
     10^12 triples a 0.1% delta re-renders 0.1% of pages while the dim
     passes stay slim pred-filtered scans."""
-    bc = F.broadcast if broadcast_dims else (lambda df: df)
-
     # The triple stream feeds five dimension derivations plus the main
     # enrichment — materialize it once instead of recomputing the source
     # plan per consumer (the reference's ResourceIndexFanOut D1 is
@@ -190,9 +182,9 @@ def triples_to_pages(
     cd_obj = cd.select(F.col("uri").alias("__curi"), "depth")
 
     e = (
-        stream.join(bc(pt), "pred")
-        .join(bc(obj_titles), F.col("obj") == F.col("__ouri"), "left")
-        .join(bc(cd_obj), F.col("obj") == F.col("__curi"), "left")
+        stream.join(F.broadcast(pt), "pred")
+        .join(F.broadcast(obj_titles), F.col("obj") == F.col("__ouri"), "left")
+        .join(F.broadcast(cd_obj), F.col("obj") == F.col("__curi"), "left")
     )
 
     is_cat = F.col("pred").isin([TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI])
@@ -246,7 +238,7 @@ def triples_to_pages(
     bt_subj = bt.select(F.col("subj").alias("__suri"), F.col("raw_title").alias("__sraw"))
     pages0 = (
         agg.join(st, "subj", "left")
-        .join(bc(bt_subj), F.col("subj") == F.col("__suri"), "left")
+        .join(F.broadcast(bt_subj), F.col("subj") == F.col("__suri"), "left")
         .withColumn("uri_type", F.coalesce(F.col("uri_type"), F.lit(URI_TYPE_UNDEFINED)))
         .withColumn("__deduped", dedup_sorted(F.sort_array(F.col("facts_raw"))))
         .withColumn(

@@ -260,27 +260,22 @@ def class_depth(
     raw = triples.filter(
         F.col("pred").isin([TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI]) & is_resource
     ).select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    class_layer_collected = False
-    if collect_limit is not None:
-        # Size check BEFORE the transfer (limit-bounded count, no
-        # rows move): an instance-heavy corpus would otherwise ship a
-        # collect_limit-sized Arrow blob to the driver only to discard
-        # it — a pure constant added to both sides of the scaling pair.
-        if raw.limit(collect_limit + 1).count() <= collect_limit:
-            edges = raw.toPandas()  # Arrow transfer of a known-small slice
-        else:
-            edges_df = class_edges(triples)
-            edges = guarded_collect(edges_df, collect_limit)
-            if edges is None:
-                return class_depth_fixpoint(spark, edges_df, max_depth)
-            class_layer_collected = True
+    # Size check BEFORE the transfer (limit-bounded count, no rows
+    # move): an instance-heavy corpus would otherwise ship a
+    # collect_limit-sized Arrow blob to the driver only to discard it —
+    # a pure constant added to both sides of the scaling pair.
+    if raw.limit(collect_limit + 1).count() <= collect_limit:
+        edges = raw.toPandas()  # Arrow transfer of a known-small slice
+        # class layer = edges whose source is itself used as a category
+        # value (object of a type/subclass edge) — the python mirror of
+        # class_edges' semi-join, byte-equal by construction.
+        cat_nodes = set(edges["dst"])
     else:
-        edges = raw.toPandas()
-    # class layer = edges whose source is itself used as a category
-    # value (object of a type/subclass edge) — the python mirror of
-    # class_edges' semi-join, byte-equal by construction (a no-op when
-    # the distributed semi-join already ran).
-    cat_nodes = None if class_layer_collected else set(edges["dst"])
+        edges_df = class_edges(triples)
+        edges = guarded_collect(edges_df, collect_limit)
+        if edges is None:
+            return class_depth_fixpoint(spark, edges_df, max_depth)
+        cat_nodes = None  # the distributed semi-join already ran
     adj: dict[str, list[str]] = {}
     nodes: set[str] = set()
     seen_pairs: set[tuple[str, str]] = set()

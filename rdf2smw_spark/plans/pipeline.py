@@ -366,10 +366,10 @@ def run_web_pipeline(
 
 
 def read_rdf_any(spark: SparkSession, path: str):
-    """Extension-dispatched RDF reader: .nt (line-parallel fast path,
-    the reference feeds everything to one Turtle decoder —
-    ttlfilereader.go:53), .ttl (stateful document parser), .nq (graph
-    term lands in src_url), .jsonld/.ndjson (expanded NDJSON-LD).
+    """Extension-dispatched RDF reader: .nt/.nq (one line-parallel
+    reader; a graph term lands in src_url — the reference feeds
+    everything to one Turtle decoder, ttlfilereader.go:53), .ttl
+    (stateful document parser), .jsonld/.ndjson (expanded NDJSON-LD).
     Returns (triples, quarantined_bad_lines)."""
     if path.endswith(".ttl"):
         from rdf2smw_spark.sources.turtle import read_turtle
@@ -379,16 +379,6 @@ def read_rdf_any(spark: SparkSession, path: str):
         from rdf2smw_spark.sources.jsonld import read_jsonld
 
         return read_jsonld(spark, path)
-    if path.endswith(".nq"):
-        from rdf2smw_spark.sources.nquads import read_nquads
-
-        triples, bad = read_nquads(spark, path)
-        return (
-            triples.select(
-                "subj", "pred", "obj", "obj_is_iri", "obj_datatype", "src_url"
-            ),
-            bad,
-        )
     return read_ntriples(spark, path)
 
 

@@ -83,6 +83,7 @@ def q_kg_turtle_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same row multiset incl. obj_is_iri/obj_datatype/src_url)."""
     import pandas as pd
 
+    from rdf2smw_spark.sources.ntriples import split_quarantine
     from rdf2smw_spark.sources.turtle import parse_turtle_docs, triples_to_turtle
 
     t = testdata_triples(spark, sf_dir)
@@ -96,10 +97,7 @@ def q_kg_turtle_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.DataFrame({"src_url": [src], "ttl": [triples_to_turtle(rows)]})
 
     docs = t.groupBy("src_url").applyInPandas(to_doc, schema="src_url string, ttl string")
-    parsed = parse_turtle_docs(docs)
-    return parsed.filter(parsed.error.isNull()).select(
-        "subj", "pred", "obj", "obj_is_iri", "obj_datatype", "src_url"
-    )
+    return split_quarantine(parse_turtle_docs(docs))[0]
 
 
 def q_kg_triple_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1818,13 +1816,17 @@ ORACLES["ev_retention"] = """
 def q_kg_nquads_triples(spark, sf_dir):
     """S1 surface, N-Quads form: render the testdata graph as .nq lines
     (graph term = src_url) in-partition, parse them back with the
-    distributed N-Quads source (sources/nquads.py) — zero shuffle, and
+    distributed N-Triples/N-Quads source (sources/ntriples.py) — zero shuffle, and
     the oracle is the plain kg_triples derivation, so a green row
     proves serialize∘parse is the identity including the graph column's
     src_url round trip."""
     import pandas as pd
 
-    from rdf2smw_spark.sources.nquads import parse_nquads_lines, quads_to_nquads
+    from rdf2smw_spark.sources.ntriples import (
+        parse_ntriples_lines,
+        quads_to_nquads,
+        split_quarantine,
+    )
 
     t = testdata_triples(spark, sf_dir)
 
@@ -1840,10 +1842,7 @@ def q_kg_nquads_triples(spark, sf_dir):
             lines = quads_to_nquads(rows).rstrip("\n").split("\n") if rows else []
             yield pd.DataFrame({"value": pd.Series(lines, dtype="object")})
 
-    parsed = parse_nquads_lines(t.mapInPandas(ser, "value string"))
-    return parsed.filter(parsed.error.isNull()).select(
-        "subj", "pred", "obj", "obj_is_iri", "obj_datatype", "src_url"
-    )
+    return split_quarantine(parse_ntriples_lines(t.mapInPandas(ser, "value string")))[0]
 
 
 QUERIES["kg_nquads_triples"] = q_kg_nquads_triples
@@ -2283,6 +2282,7 @@ def q_kg_jsonld_triples(spark, sf_dir):
     import pandas as pd
 
     from rdf2smw_spark.sources.jsonld import parse_jsonld_lines, triples_to_jsonld
+    from rdf2smw_spark.sources.ntriples import split_quarantine
 
     t = testdata_triples(spark, sf_dir)
 
@@ -2301,10 +2301,7 @@ def q_kg_jsonld_triples(spark, sf_dir):
     docs = t.groupBy("src_url").applyInPandas(
         to_lines, schema="line string, src_url string"
     )
-    parsed = parse_jsonld_lines(docs)
-    return parsed.filter(parsed.error.isNull()).select(
-        "subj", "pred", "obj", "obj_is_iri", "obj_datatype", "src_url"
-    )
+    return split_quarantine(parse_jsonld_lines(docs))[0]
 
 
 QUERIES["kg_jsonld_triples"] = q_kg_jsonld_triples

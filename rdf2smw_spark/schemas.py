@@ -49,6 +49,8 @@ DT_STRING = "http://www.w3.org/2001/XMLSchema#string"
 DT_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 DT_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
 DT_FLOAT = "http://www.w3.org/2001/XMLSchema#float"
+DT_DOUBLE = "http://www.w3.org/2001/XMLSchema#double"
+DT_BOOLEAN = "http://www.w3.org/2001/XMLSchema#boolean"
 
 # page-type enum (reference iota: triplestowikipageconv.go:47-53)
 URI_TYPE_UNDEFINED = 1

@@ -145,6 +145,16 @@ def fixpoint(init: DataFrame, step, max_rounds: int):
     return state, converged
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when $SPARK_GRAFT_DRIVER_MEM is unset: min(16g, RAM/4).
+    16g is the measured sweet spot on a large box (8g borderline for the
+    30M-row bench probes, 32g+ degrades G1 young-gen geometry 2x); on a
+    15 GB host a 16g heap let the JVM outgrow RAM (15.5 GB RSS,
+    OOM-killed in a full test run)."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "rdf2smw_spark",
     cores: int | None = None,
@@ -195,9 +205,7 @@ def get_spark(
         # we pin them so plans are reproducible across environments.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # 16g measured sweet spot on this box: 8g borderline for the 30M-row
-        # bench probes, 32g+ degrades G1 young-gen geometry 2x (measured)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

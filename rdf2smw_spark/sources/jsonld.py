@@ -21,34 +21,27 @@ profile, documented rather than silently guessed:
 - `@graph`, `@context`, relative IRIs: out of profile -> quarantined
   with an error, never a crash (the F2 nil-guard policy).
 
-Malformed lines land in a quarantine frame (error, line), mirroring
-sources/ntriples.py.
+Malformed lines land in the quarantine frame (error, src_url) that
+every reader shares (sources/ntriples.py); the error names the line.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rdf2smw_spark.schemas import TYPE_PROPERTY_URI
-
-XSD = "http://www.w3.org/2001/XMLSchema#"
-DT_STRING = XSD + "string"
-DT_INTEGER = XSD + "integer"
-DT_DOUBLE = XSD + "double"
-DT_BOOLEAN = XSD + "boolean"
-DT_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
-
-PARSED_SCHEMA = (
-    "subj string, pred string, obj string, obj_is_iri boolean, "
-    "obj_datatype string, src_url string, error string, line string"
+from rdf2smw_spark.schemas import (
+    DT_BOOLEAN,
+    DT_DOUBLE,
+    DT_INTEGER,
+    DT_LANGSTRING,
+    DT_STRING,
+    TYPE_PROPERTY_URI,
 )
-
+from rdf2smw_spark.sources.ntriples import parse_units, split_quarantine
 
 # absolute-IRI test: an RFC 3987 scheme prefix (letter, then letters/
 # digits/+/./-, then ':'). '://' would wrongly reject authority-less
@@ -86,8 +79,7 @@ def _parse_value(v) -> tuple[str, bool, str | None]:
     return str(val), False, DT_STRING
 
 
-def _parse_line(line: str, src: str) -> list[tuple]:
-    node = json.loads(line)
+def _node_rows(node, src: str) -> list[tuple]:
     if not isinstance(node, dict):
         raise ValueError("line is not a JSON object")
     for kw in ("@graph", "@context"):
@@ -100,44 +92,37 @@ def _parse_line(line: str, src: str) -> list[tuple]:
     types = node.get("@type", []) or []
     if isinstance(types, str):  # bare-string @type, common compact form
         types = [types]
+    if not isinstance(types, list):
+        raise ValueError(f"@type must be an IRI string or array: {types!r}")
     for t in types:
         if not isinstance(t, str):
             raise ValueError(f"@type entries must be IRI strings: {t!r}")
-        out.append((subj, TYPE_PROPERTY_URI, t, True, None, src, None, None))
+        out.append((subj, TYPE_PROPERTY_URI, t, True, None, src))
     for pred, values in node.items():
         if pred.startswith("@"):
             continue
         if not isinstance(values, list):
             values = [values]
         for v in values:
-            obj, is_iri, dt = _parse_value(v)
-            out.append((subj, pred, obj, is_iri, dt, src, None, None))
+            out.append((subj, pred, *_parse_value(v), src))
     return out
 
 
+def _parse_line(line: str, src: str) -> list[tuple]:
+    """One NDJSON line -> its triple rows; [] for a blank line. The
+    ValueError of a bad line carries the whole line, for the quarantine."""
+    if not line or line.isspace():
+        return []
+    try:
+        return _node_rows(json.loads(line), src)
+    except (ValueError, RecursionError) as exc:  # JSONDecodeError included
+        raise ValueError(f"{exc}: {line!r}") from None
+
+
 def parse_jsonld_lines(lines: DataFrame) -> DataFrame:
-    """(line, src_url) -> parsed triples + quarantine rows. Arrow-batched
-    flatMap: one line yields 0..n triples or exactly one error row."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "subj", "pred", "obj", "obj_is_iri", "obj_datatype",
-            "src_url", "error", "line",
-        ]
-        for pdf in it:
-            rows: list[tuple] = []
-            for line, src in zip(pdf["line"], pdf["src_url"]):
-                if not line or line.isspace():
-                    continue
-                try:
-                    rows.extend(_parse_line(line, src))
-                except (ValueError, json.JSONDecodeError) as ex:
-                    rows.append(
-                        (None, None, None, None, None, src, str(ex), line)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return lines.mapInPandas(batches, schema=PARSED_SCHEMA)
+    """(line, src_url) -> PARSED_SCHEMA through the shared parse loop:
+    one line yields 0..n triples or exactly one quarantine row."""
+    return parse_units(lines, "line", _parse_line)
 
 
 def read_jsonld(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
@@ -148,12 +133,7 @@ def read_jsonld(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
         F.col("value").alias("line"),
         F.input_file_name().alias("src_url"),
     )
-    parsed = parse_jsonld_lines(lines)
-    triples = parsed.filter(parsed.error.isNull()).select(
-        "subj", "pred", "obj", "obj_is_iri", "obj_datatype", "src_url"
-    )
-    bad = parsed.filter(parsed.error.isNotNull()).select("error", "line", "src_url")
-    return triples, bad
+    return split_quarantine(parse_jsonld_lines(lines))
 
 
 def triples_to_jsonld(rows: list[tuple]) -> str:

@@ -26,7 +26,8 @@ term kind (obj_is_iri=false, obj_datatype=NULL).
 Distribution model: Turtle is STATEFUL (prefixes/base accrue through the
 document), so a byte-split of one file cannot be parsed independently —
 the unit of parallelism is the file, exactly as it is for gzip. One
-wholetext row per file feeds an Arrow-batched mapInPandas flatMap; a
+wholetext row per file feeds the shared Arrow-batched parse loop
+(sources/ntriples.py `parse_units`); a
 100 TB crawl shards into many .ttl files and parallelizes per file,
 while a single giant file degenerates to one task (inherent to the
 format — the reference is single-threaded on it too).
@@ -42,15 +43,13 @@ from __future__ import annotations
 
 import hashlib
 import re
-from collections.abc import Iterator
 from urllib.parse import urljoin
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdf2smw_spark.schemas import DT_LANGSTRING, DT_STRING
-from rdf2smw_spark.sources.ntriples import PARSED_SCHEMA, _unescape
+from rdf2smw_spark.sources.ntriples import _unescape, parse_units, split_quarantine
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -401,45 +400,23 @@ def parse_turtle(text: str, src: str | None = None) -> list[tuple]:
     return _Parser(text, src).parse()
 
 
-def parse_turtle_docs(docs: DataFrame, src_col: str = "src_url", text_col: str = "ttl") -> DataFrame:
+def parse_turtle_docs(docs: DataFrame) -> DataFrame:
     """DataFrame[(src_url, ttl)] (one document per row) -> triple frame in
-    PARSED_SCHEMA. Error policy mirrors the N-Triples source: a malformed
-    document yields one quarantine row (null terms, error message); the
-    documents that parse are unaffected."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: list[tuple] = []
-            for src, text in zip(pdf[src_col], pdf[text_col]):
-                try:
-                    for t in parse_turtle(text, src):
-                        out.append((*t, src, None))
-                except Exception as exc:  # noqa: BLE001 — TurtleSyntaxError + any parser bug: both quarantine the doc
-                    out.append((None, None, None, None, None, src, str(exc)))
-            yield pd.DataFrame(
-                out,
-                columns=["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "src_url", "error"],
-            )
-
-    return docs.mapInPandas(batches, schema=PARSED_SCHEMA)
+    PARSED_SCHEMA through the shared parse loop: a malformed document
+    yields one quarantine row and none of its triples; the documents
+    that parse are unaffected."""
+    return parse_units(
+        docs, "ttl", lambda text, src: [(*t, src) for t in parse_turtle(text, src)]
+    )
 
 
-def read_turtle(
-    spark: SparkSession, path: str, on_error: str = "quarantine"
-) -> tuple[DataFrame, DataFrame]:
+def read_turtle(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Read .ttl file(s) -> (triples, quarantine). One wholetext row per
     file — the unit of parallelism (see module docstring)."""
-    docs = spark.read.text(path, wholetext=True).withColumn(
-        "src_url", F.input_file_name()
-    ).withColumnRenamed("value", "ttl")
-    parsed = parse_turtle_docs(docs)
-    bad = parsed.filter(parsed.error.isNotNull()).select("error", "src_url")
-    good = parsed.filter(parsed.error.isNull()).drop("error")
-    if on_error == "fail":
-        first = bad.take(1)
-        if first:
-            raise TurtleSyntaxError(first[0]["error"])
-    return good, bad
+    docs = spark.read.text(path, wholetext=True).select(
+        F.col("value").alias("ttl"), F.input_file_name().alias("src_url")
+    )
+    return split_quarantine(parse_turtle_docs(docs))
 
 
 # --- deterministic serializer (round-trip fixtures & the oracle query) --------

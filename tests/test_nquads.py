@@ -1,52 +1,53 @@
-"""N-Quads source (sources/nquads.py): line grammar, graph fallback,
-quarantine policy, and the serialize∘parse identity."""
+"""N-Quads through the one N-Triples/N-Quads reader (sources/ntriples.py):
+line grammar, graph fallback, quarantine policy, and the
+serialize∘parse identity."""
 
 import pytest
 
 from rdf2smw_spark.schemas import DT_LANGSTRING, DT_STRING
-from rdf2smw_spark.sources.nquads import (
-    parse_nquads_line,
-    parse_nquads_lines,
+from rdf2smw_spark.sources.ntriples import (
+    parse_ntriples_line,
+    parse_ntriples_lines,
     quads_to_nquads,
-    read_nquads,
+    read_ntriples,
 )
 
 
 def test_quad_and_triple_forms():
-    q = parse_nquads_line('<http://a> <http://p> <http://b> <http://g> .')
+    q = parse_ntriples_line('<http://a> <http://p> <http://b> <http://g> .')
     assert q == ("http://a", "http://p", "http://b", True, None, "http://g")
-    t = parse_nquads_line('<http://a> <http://p> "v" .')
+    t = parse_ntriples_line('<http://a> <http://p> "v" .')
     assert t == ("http://a", "http://p", "v", False, DT_STRING, None)
 
 
 def test_literal_datatype_not_mistaken_for_graph():
     # the ^^<dt> IRI must bind to the literal, not parse as the graph
-    r = parse_nquads_line(
+    r = parse_ntriples_line(
         '<http://a> <http://p> "3.5"^^<http://www.w3.org/2001/XMLSchema#float> .'
     )
     assert r[2] == "3.5"
     assert r[4] == "http://www.w3.org/2001/XMLSchema#float"
     assert r[5] is None
-    r2 = parse_nquads_line(
+    r2 = parse_ntriples_line(
         '<http://a> <http://p> "3.5"^^<http://x/dt> <http://g> .'
     )
     assert (r2[4], r2[5]) == ("http://x/dt", "http://g")
 
 
 def test_lang_literal_angle_in_string_and_blank_nodes():
-    r = parse_nquads_line('<http://a> <http://p> "hi"@en <http://g> .')
+    r = parse_ntriples_line('<http://a> <http://p> "hi"@en <http://g> .')
     assert (r[2], r[4], r[5]) == ("hi", DT_LANGSTRING, "http://g")
-    r2 = parse_nquads_line('<http://a> <http://p> "x <y> z" .')
+    r2 = parse_ntriples_line('<http://a> <http://p> "x <y> z" .')
     assert r2[2] == "x <y> z"
-    r3 = parse_nquads_line('_:b0 <http://p> _:b1 <http://g> .')
+    r3 = parse_ntriples_line('_:b0 <http://p> _:b1 <http://g> .')
     assert (r3[0], r3[2], r3[3], r3[4]) == ("_:b0", "_:b1", False, None)
 
 
 def test_malformed_raises_and_comments_skip():
-    assert parse_nquads_line("# comment") is None
-    assert parse_nquads_line("   ") is None
+    assert parse_ntriples_line("# comment") is None
+    assert parse_ntriples_line("   ") is None
     with pytest.raises(ValueError):
-        parse_nquads_line("garbage line")
+        parse_ntriples_line("garbage line")
 
 
 def test_graph_fallback_and_quarantine(spark, tmp_path):
@@ -56,13 +57,11 @@ def test_graph_fallback_and_quarantine(spark, tmp_path):
         '<http://a> <http://p> <http://b> <http://g> .\n'
         "broken\n"
     )
-    good, bad = read_nquads(spark, str(p))
+    good, bad = read_ntriples(spark, str(p))
     rows = {r["obj"]: r for r in good.collect()}
     assert rows["v"]["src_url"] == str(p)          # graph-less -> file path
     assert rows["http://b"]["src_url"] == "http://g"  # graph wins
     assert bad.count() == 1
-    with pytest.raises(ValueError):
-        read_nquads(spark, str(p), on_error="fail")
 
 
 def test_serialize_parse_identity(spark):
@@ -76,7 +75,7 @@ def test_serialize_parse_identity(spark):
     lines = spark.createDataFrame(
         [(l,) for l in text.strip().split("\n")], "value string"
     )
-    parsed = parse_nquads_lines(lines, src_url="file.nq")
+    parsed = parse_ntriples_lines(lines, src_url="file.nq")
     got = [
         (r["subj"], r["pred"], r["obj"], r["obj_is_iri"], r["obj_datatype"],
          r["src_url"])
@@ -92,7 +91,7 @@ def test_serialize_parse_identity(spark):
 
 
 def test_nq_cli_pipeline(spark, tmp_path):
-    # .nq extension dispatches to the N-Quads reader in run_nt_pipeline;
+    # .nq input goes through the N-Triples/N-Quads reader in run_nt_pipeline;
     # graph term becomes src_url lineage, conversion output unchanged
     from rdf2smw_spark.plans.pipeline import run_nt_pipeline
 

@@ -1,6 +1,6 @@
 """Parser behavior mirroring the reference's stream tests
 (/root/reference/components/ttlfilereader_test.go:32-84: lexical forms
-carry no serialization syntax)."""
+carry no serialization syntax), and the parse loop every reader shares."""
 
 import pytest
 
@@ -10,9 +10,9 @@ from rdf2smw_spark.sources.ntriples import parse_ntriples_line, parse_ntriples_l
 
 def test_iri_and_literal_lexical_forms():
     t = parse_ntriples_line('<http://example.org/s1> <http://example.org/p1> "string1" .')
-    assert t == ("http://example.org/s1", "http://example.org/p1", "string1", False, DT_STRING)
+    assert t == ("http://example.org/s1", "http://example.org/p1", "string1", False, DT_STRING, None)
     t = parse_ntriples_line("<http://e/s> <http://e/p> <http://e/o> .")
-    assert t == ("http://e/s", "http://e/p", "http://e/o", True, None)
+    assert t == ("http://e/s", "http://e/p", "http://e/o", True, None, None)
 
 
 def test_typed_and_lang_literals():
@@ -79,7 +79,7 @@ def test_roundtrip_property():
     def roundtrip(s, p, o):
         line = f'<{s}> <{p}> "{escape(o)}" .'
         parsed = parse_ntriples_line(line)
-        assert parsed == (s, p, o, False, DT_STRING)
+        assert parsed == (s, p, o, False, DT_STRING, None)
 
     roundtrip()
 
@@ -98,3 +98,40 @@ def test_read_ntriples_gzip(spark, tmp_path):
     good, bad = read_ntriples(spark, str(p))
     assert good.count() == 2 and bad.count() == 0
     assert {r["subj"] for r in good.collect()} == {"http://e/s", "http://e/s2"}
+
+
+def test_quad_line_in_nt_file_lands_graph_in_src_url(spark, tmp_path):
+    """N-Triples is N-Quads without the graph term: a quad line in a .nt
+    file keeps its object IRI intact and its graph becomes src_url."""
+    from rdf2smw_spark.sources.ntriples import read_ntriples
+
+    p = tmp_path / "mixed.nt"
+    p.write_text(
+        "<http://s> <http://p> <http://o> <http://g> .\n"
+        '<http://s> <http://p> "v" .\n'
+    )
+    good, bad = read_ntriples(spark, str(p))
+    rows = {r["obj"]: r["src_url"] for r in good.collect()}
+    assert rows == {"http://o": "http://g", "v": str(p)}
+    assert bad.count() == 0
+
+
+def test_parse_units_failed_unit_adds_one_row_and_no_partial_triples(spark):
+    """A unit whose parse yields rows and then raises ValueError adds
+    only its quarantine row."""
+    from rdf2smw_spark.sources.ntriples import parse_units, split_quarantine
+
+    def parse(text, src):
+        for i, tok in enumerate(text.split()):
+            if tok == "bad":
+                raise ValueError(f"bad token {i}")
+            yield (f"http://e/{tok}", "http://e/p", "v", False, DT_STRING, src)
+
+    units = spark.createDataFrame(
+        [("a b", "u1"), ("c bad d", "u2"), ("", "u3")], "text string, src_url string"
+    )
+    good, bad = split_quarantine(parse_units(units, "text", parse))
+    assert sorted((r["subj"], r["src_url"]) for r in good.collect()) == [
+        ("http://e/a", "u1"), ("http://e/b", "u1"),
+    ]
+    assert [tuple(r) for r in bad.collect()] == [("bad token 1", "u2")]

@@ -135,7 +135,7 @@ def _parse(nt: str) -> list[tuple]:
     for line in nt.strip().splitlines():
         t = parse_ntriples_line(line)
         if t:
-            out.append(t)
+            out.append(t[:5])
     return out
 
 

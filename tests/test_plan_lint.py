@@ -145,6 +145,29 @@ def test_source_lint_one_fixpoint_and_guarded_collect():
             )
 
 
+# --- source lint: one RDF parse loop -----------------------------------------
+#
+# Every RDF reader (N-Triples/N-Quads lines, Turtle documents, JSON-LD
+# lines) decodes through sources/ntriples.parse_units, the one
+# Arrow-batched loop that builds quarantine rows. A second mapInPandas
+# under sources/ would be a reader forking that loop again.
+def test_source_lint_one_rdf_parse_loop():
+    import pathlib
+
+    import rdf2smw_spark
+
+    sources = pathlib.Path(rdf2smw_spark.__file__).parent / "sources"
+    sites = {
+        path.name: n
+        for path in sorted(sources.glob("*.py"))
+        if (n := path.read_text().count(".mapInPandas("))
+    }
+    assert sites == {"ntriples.py": 1}, (
+        f".mapInPandas( sites under sources/: {sites} — parse through "
+        "sources.ntriples.parse_units"
+    )
+
+
 # --- reachability lint: every module has a caller ---------------------------
 #
 # The engine is entered through three roots: the CLI, the checkpointed

@@ -19,6 +19,7 @@ from rdf2smw_spark.sources.turtle import (
     RDF_TYPE,
     TurtleSyntaxError,
     parse_turtle,
+    parse_turtle_docs,
     read_turtle,
     triples_to_turtle,
 )
@@ -164,8 +165,28 @@ def test_read_turtle_files_and_quarantine(spark, tmp_path):
     assert ("http://other/s2", EX + "q", EX + "o") in ts
     q = quarantine.collect()
     assert len(q) == 1 and "bad.ttl" in q[0]["src_url"]
-    with pytest.raises(TurtleSyntaxError):
-        read_turtle(spark, str(tmp_path / "*.ttl"), on_error="fail")
+
+
+def test_bad_document_adds_one_quarantine_row_and_no_partial_triples(spark):
+    """Multi-document read: the statements before a syntax error in a
+    document do not leak into the triples; the document adds exactly
+    one quarantine row. A collection nested 2000 deep exhausts the
+    recursive parser (RecursionError) and is quarantined the same way."""
+    from rdf2smw_spark.sources.ntriples import split_quarantine
+
+    docs = spark.createDataFrame(
+        [
+            ("good", f'<{EX}s> <{EX}p> "ok" .\n'),
+            ("bad", f'<{EX}s> <{EX}p> "partial1" .\n<{EX}s> <{EX}p> "partial2" .\n<{EX}s> <{EX}p> .\n'),
+            ("deep", f'<{EX}s> <{EX}p> "partial3" .\n<{EX}s> <{EX}p> ' + "(" * 2000 + ")" * 2000 + " .\n"),
+        ],
+        "src_url string, ttl string",
+    )
+    triples, quarantine = split_quarantine(parse_turtle_docs(docs))
+    assert [(r["obj"], r["src_url"]) for r in triples.collect()] == [("ok", "good")]
+    q = {r["src_url"]: r["error"] for r in quarantine.collect()}
+    assert quarantine.count() == 2 and set(q) == {"bad", "deep"}
+    assert "line 3" in q["bad"] and "recursion" in q["deep"]
 
 
 def test_turtle_agrees_with_ntriples_on_shared_subset(spark, tmp_path):
