@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from rdf2smw_spark.functions.textnorm import escape_wiki_col
 from rdf2smw_spark.schemas import (
-    URI_TYPE_CLASS,
+    PAGE_TYPE_TO_NAMESPACE,
     URI_TYPE_PREDICATE,
     URI_TYPE_TEMPLATE,
     URI_TYPE_UNDEFINED,
@@ -46,17 +46,9 @@ WIKI_XML_TPL = """
 \t</page>
 """
 
-_NS = {
-    URI_TYPE_CLASS: 14,
-    URI_TYPE_TEMPLATE: 10,
-    URI_TYPE_PREDICATE: 102,
-    URI_TYPE_UNDEFINED: 0,
-}
-
-
 def _ns_col() -> Column:
-    c = F.lit(_NS[URI_TYPE_UNDEFINED])
-    for k, v in _NS.items():
+    c = F.lit(PAGE_TYPE_TO_NAMESPACE[URI_TYPE_UNDEFINED])
+    for k, v in PAGE_TYPE_TO_NAMESPACE.items():
         c = F.when(F.col("page_type") == k, F.lit(v)).otherwise(c)
     return c
 
@@ -180,7 +172,7 @@ def template_pages(rendered: DataFrame, timestamp: str = FIXED_TIMESTAMP) -> Dat
     return per_tpl.select(
         title.alias("title"),
         F.lit(URI_TYPE_TEMPLATE).alias("page_type"),
-        F.format_string(WIKI_XML_TPL, title, F.lit(_NS[URI_TYPE_TEMPLATE]), F.lit(timestamp), body).alias("xml"),
+        F.format_string(WIKI_XML_TPL, title, F.lit(PAGE_TYPE_TO_NAMESPACE[URI_TYPE_TEMPLATE]), F.lit(timestamp), body).alias("xml"),
     )
 
 

@@ -1,10 +1,13 @@
 """Checkpoint + lineage layer (north rule: every stage checkpoints with
 per-partition lineage rows; the pipeline resumes idempotently).
 
-Storage is parquet + a _SUCCESS-gated manifest (the Iceberg runtime jar
-is not available offline — the interface is format-agnostic, so swapping
-`parquet` for `iceberg` is a one-line change; snapshot semantics here
-come from the atomic _SUCCESS marker Spark writes last).
+Storage is parquet (the Iceberg runtime jar is not available offline;
+the interface is format-agnostic, so swapping `parquet` for `iceberg` is
+a one-line change) plus one `_MANIFEST.json` per stage: the commit
+record, written last, holding the parameter fingerprint, the schema, the
+row count and the write's wall time. A stage directory without one (a
+crashed write, or a snapshot from before manifests) is recomputed.
+Reads take the schema from the manifest, so they run no inference job.
 
 Lineage rows: (run_id, stage, partition_id, input_split, rows_out,
 wall_ms) — one per output file, derived from the files actually written,
@@ -13,12 +16,30 @@ so a resumed run can audit exactly what each task produced.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+MANIFEST = "_MANIFEST.json"
+
+
+def write_counted(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> int:
+    """Overwrite `path` with `df` as parquet and return how many rows were
+    written. The count is a `DataFrame.observe` metric of the write
+    itself, so counting adds no Spark job."""
+    obs = Observation()
+    w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
+    return obs.get["rows"]
 
 
 class CheckpointStore:
@@ -26,6 +47,9 @@ class CheckpointStore:
         self.spark = spark
         self.root = root
         self.run_id = run_id or uuid.uuid4().hex[:12]
+        # set once a stage of this store is recomputed: every later stage
+        # reads the new snapshot, so none of them may resume
+        self._recomputed = False
 
     def stage_path(self, stage: str) -> str:
         return os.path.join(self.root, stage)
@@ -33,44 +57,34 @@ class CheckpointStore:
     def lineage_path(self) -> str:
         return os.path.join(self.root, "_lineage")
 
-    def is_complete(self, stage: str, fingerprint: str | None = None) -> bool:
-        """A stage is resumable iff its snapshot is complete AND was
-        produced under the same parameter fingerprint. Without the
-        fingerprint check, re-running a work_dir with a changed or
-        newly-enabled gate (--min-quality, --near-dedup, …) silently
-        resumed the stale snapshot and the gate had no effect."""
-        if not os.path.exists(os.path.join(self.stage_path(stage), "_SUCCESS")):
-            return False
-        if fingerprint is None:
-            return True
-        fp_file = os.path.join(self.stage_path(stage), "_FINGERPRINT")
+    def manifest(self, stage: str) -> dict | None:
+        """The stage's commit record, or None for an uncommitted stage."""
         try:
-            with open(fp_file) as fh:
-                return fh.read().strip() == fingerprint
-        except OSError:
-            return False
+            with open(os.path.join(self.stage_path(stage), MANIFEST)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return None
+
+    def rows(self, stage: str) -> int:
+        return self.manifest(stage)["rows"]
+
+    def is_complete(self, stage: str, fingerprint: str) -> bool:
+        """A stage is resumable iff it is committed AND was produced under
+        the same parameter fingerprint. Without the fingerprint check,
+        re-running a work_dir with a changed or newly-enabled gate
+        (--min-quality, --near-dedup, …) silently resumed the stale
+        snapshot and the gate had no effect."""
+        m = self.manifest(stage)
+        return m is not None and m["fingerprint"] == fingerprint
+
+    def _scan(self, stage: str, schema: StructType) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(self.stage_path(stage))
 
     def read(self, stage: str) -> DataFrame:
-        """Read a snapshot back; an EMPTY snapshot (a gate that dropped
-        every row writes _SUCCESS but no part files) reads through the
-        schema sidecar materialize() stored, instead of failing
-        UNABLE_TO_INFER_SCHEMA."""
-        path = self.stage_path(stage)
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            schema_file = os.path.join(path, "_SCHEMA")
-            if os.path.exists(schema_file):
-                from pyspark.sql.types import StructType
-                import json as _json
+        """Read a committed snapshot back under its manifest schema."""
+        return self._scan(stage, StructType.fromJson(self.manifest(stage)["schema"]))
 
-                with open(schema_file) as fh:
-                    schema = StructType.fromJson(_json.load(fh))
-                return self.spark.read.schema(schema).parquet(path)
-            raise
-
-    def _append_lineage(self, stage: str, wall_ms: int) -> None:
-        out = self.read(stage)
+    def _append_lineage(self, stage: str, out: DataFrame, wall_ms: int) -> None:
         # partition_id parses the writer's own part number out of the
         # file name (part-NNNNN-...) instead of a dense_rank over an
         # UNPARTITIONED window — one row per file still meant one
@@ -101,18 +115,22 @@ class CheckpointStore:
         stage: str,
         resume: bool = True,
         partition_by: list[str] | None = None,
-        fingerprint: str | None = None,
+        *,
+        fingerprint: str,
     ) -> DataFrame:
-        """Write-once stage checkpoint: skip if a complete snapshot
+        """Write-once stage checkpoint: skip if a committed snapshot
         exists under the same parameter fingerprint (resume), else
-        compute, write atomically, record lineage. Always returns the
-        on-disk DataFrame so downstream stages read the checkpoint, not
-        the recomputed plan.
+        compute, write, record lineage and commit the manifest. Always
+        returns the on-disk DataFrame so downstream stages read the
+        checkpoint, not the recomputed plan.
 
         fingerprint: hash of every parameter (and upstream fingerprint)
         that shapes this stage's output. Callers chain them (pipeline.py)
-        so recomputing one stage transitively invalidates everything
+        so changing one stage's parameters invalidates everything
         downstream — the Iceberg analogue is the snapshot's parent id.
+        The stages of one store form a chain too: once one of them is
+        recomputed, every later one is, since its input is a new
+        snapshot.
 
         partition_by: hive-style directory partitioning of the snapshot —
         the parquet rendering of Iceberg's partition transforms (the
@@ -120,21 +138,23 @@ class CheckpointStore:
         Readers get partition pruning on the bucket column for free; on
         a real deployment the same call writes an Iceberg table and the
         conversion's groupBy(subj) becomes a bucket-local aggregation."""
-        if resume and self.is_complete(stage, fingerprint):
+        if resume and not self._recomputed and self.is_complete(stage, fingerprint):
             return self.read(stage)
+        self._recomputed = True
+        path = self.stage_path(stage)
         t0 = time.monotonic()
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.stage_path(stage))
-        with open(os.path.join(self.stage_path(stage), "_SCHEMA"), "w") as fh:
-            fh.write(df.schema.json())
-        if fingerprint is not None:
-            with open(os.path.join(self.stage_path(stage), "_FINGERPRINT"), "w") as fh:
-                fh.write(fingerprint)
+        rows = write_counted(df, path, partition_by)
         wall_ms = int((time.monotonic() - t0) * 1000)
-        self._append_lineage(stage, wall_ms)
-        return self.read(stage)
-
-    def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self.lineage_path())
+        out = self._scan(stage, df.schema)
+        self._append_lineage(stage, out, wall_ms)
+        manifest = {
+            "fingerprint": fingerprint,
+            "schema": df.schema.jsonValue(),
+            "rows": rows,
+            "wall_ms": wall_ms,
+        }
+        tmp = os.path.join(path, f".{MANIFEST}.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(manifest, fh)
+        os.replace(tmp, os.path.join(path, MANIFEST))
+        return out

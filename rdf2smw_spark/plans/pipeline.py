@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from rdf2smw_spark.extract import extract_text, latest_capture
 from rdf2smw_spark.operators.convert import triples_to_pages
 from rdf2smw_spark.operators.render import collect_xml_file, render_all
-from rdf2smw_spark.plans.lineage import CheckpointStore
+from rdf2smw_spark.plans.lineage import CheckpointStore, write_counted
 from rdf2smw_spark.session import release_scoped_caches
 from rdf2smw_spark.sources.ntriples import read_ntriples
 from rdf2smw_spark.triplify import triplify
@@ -227,12 +227,13 @@ def run_web_pipeline(
     fuzzy_link_threshold set, surfaces the exact pass misses get a
     MinHash-blocked fuzzy second pass. near_dedup enables the text-level
     DEDUP stage (MinHash pairs → connected components → keep one url per
-    cluster). Returns stage row counts (the bench harness derives
-    throughput from these + lineage wall_ms).
+    cluster). Returns stage row counts, read from the stage manifests
+    (only `pages_in`, the input, is counted by a job).
 
     Resume skips a stage only when its parameter fingerprint matches the
     stored snapshot's; fingerprints chain, so a changed gate recomputes
-    that stage and all downstream ones. Side-input CONTENT is part of
+    that stage and all downstream ones, and so does a stage whose
+    snapshot was lost (no manifest). Side-input CONTENT is part of
     the fingerprint too (_side_input_signature): a changed benchmark or
     entity_dict table under identical flags recomputes DECONTAM / LINK
     and everything below. Only a changed primary `pages` input still
@@ -240,48 +241,48 @@ def run_web_pipeline(
     store = CheckpointStore(spark, work_dir, run_id=run_id)
     fpc = _FingerprintChain()
 
+    def checkpoint(df: DataFrame, stage: str, *params, partition_by=None) -> DataFrame:
+        return store.materialize(
+            df, stage, resume, partition_by=partition_by,
+            fingerprint=fpc.next(stage, *params),
+        )
+
     deduped = latest_capture(pages)
     if url_blocklist is not None:
         # URL-level gate FIRST: a blocked page costs one regexp + one
         # broadcast semi-join, never an extraction
         from rdf2smw_spark.extract import blocklist_filter
 
-        deduped = store.materialize(
+        deduped = checkpoint(
             blocklist_filter(deduped, url_blocklist), "blocklist_filtered",
-            resume,
-            fingerprint=fpc.next(
-                "blocklist_filtered", _side_input_signature(url_blocklist)
-            ),
+            _side_input_signature(url_blocklist),
         )
-    extracted = store.materialize(
-        extract_text(deduped), "text_extracted", resume,
-        fingerprint=fpc.next("text_extracted"),
-    )
+    # the stages that last defined `extracted` and `triples`: their
+    # manifests hold the row counts the result reports
+    ext_stage = "text_extracted"
+    extracted = checkpoint(extract_text(deduped), ext_stage)
     if min_quality is not None:
-        extracted = store.materialize(
-            quality_filter_pages(extracted, min_quality), "quality_filtered", resume,
-            fingerprint=fpc.next("quality_filtered", min_quality),
+        ext_stage = "quality_filtered"
+        extracted = checkpoint(
+            quality_filter_pages(extracted, min_quality), ext_stage, min_quality
         )
     if max_dup_line_frac is not None or max_top_bigram_frac is not None:
-        extracted = store.materialize(
+        ext_stage = "repetition_filtered"
+        extracted = checkpoint(
             repetition_filter_pages(extracted, max_dup_line_frac, max_top_bigram_frac),
-            "repetition_filtered",
-            resume,
-            fingerprint=fpc.next(
-                "repetition_filtered", max_dup_line_frac, max_top_bigram_frac
-            ),
+            ext_stage, max_dup_line_frac, max_top_bigram_frac,
         )
     if near_dedup:
-        extracted = store.materialize(
+        ext_stage = "near_deduped"
+        extracted = checkpoint(
             near_dedup_pages(extracted, threshold=near_dedup_threshold),
-            "near_deduped",
-            resume,
-            fingerprint=fpc.next("near_deduped", near_dedup_threshold),
+            ext_stage, near_dedup_threshold,
         )
     if benchmark is not None:
-        extracted = store.materialize(
-            decontaminate_pages(extracted, benchmark), "decontaminated", resume,
-            fingerprint=fpc.next("decontaminated", _side_input_signature(benchmark)),
+        ext_stage = "decontaminated"
+        extracted = checkpoint(
+            decontaminate_pages(extracted, benchmark), ext_stage,
+            _side_input_signature(benchmark),
         )
     # The triples table is partitioned by subject-hash bucket (north
     # star: Iceberg `bucket(subj, N)`): deterministic layout, bucket
@@ -290,9 +291,9 @@ def run_web_pipeline(
     bucketed = triplify(extracted).withColumn(
         "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(N_SUBJ_BUCKETS))
     )
-    raw_triples = store.materialize(
-        bucketed, "raw_triples", resume, partition_by=["subj_bucket"],
-        fingerprint=fpc.next("raw_triples", N_SUBJ_BUCKETS),
+    tri_stage = "raw_triples"
+    raw_triples = checkpoint(
+        bucketed, tri_stage, N_SUBJ_BUCKETS, partition_by=["subj_bucket"]
     ).drop("subj_bucket")
     if entity_dict is not None:
         from rdf2smw_spark.operators.linking import link_triples, link_triples_fuzzy
@@ -303,44 +304,31 @@ def run_web_pipeline(
             )
         else:
             linked = link_triples(raw_triples, entity_dict)
-        raw_triples = store.materialize(
-            linked, "linked_triples", resume,
-            fingerprint=fpc.next(
-                "linked_triples",
-                fuzzy_link_threshold,
-                _side_input_signature(entity_dict),
-            ),
+        tri_stage = "linked_triples"
+        raw_triples = checkpoint(
+            linked, tri_stage, fuzzy_link_threshold, _side_input_signature(entity_dict)
         )
     if entail is not None:
         # ENTAIL runs after LINK: entailment over canonical URIs, so an
         # alias and its canonical form never derive divergent closures
-        raw_triples = store.materialize(
-            entail_triples(raw_triples, entail), "entailed_triples", resume,
-            fingerprint=fpc.next("entailed_triples", entail),
-        )
-    wiki_pages = store.materialize(
-        triples_to_pages(spark, raw_triples, n_salt=n_salt), "wiki_pages", resume,
-        fingerprint=fpc.next("wiki_pages", n_salt),
+        tri_stage = "entailed_triples"
+        raw_triples = checkpoint(entail_triples(raw_triples, entail), tri_stage, entail)
+    wiki_pages = checkpoint(
+        triples_to_pages(spark, raw_triples, n_salt=n_salt), "wiki_pages", n_salt
     )
     content, props, tpls = render_all(wiki_pages, use_templates=True)
-    content_x = store.materialize(
-        content, "pages_xml", resume, fingerprint=fpc.next("pages_xml")
-    )
-    props_x = store.materialize(
-        props, "properties_xml", resume, fingerprint=fpc.next("properties_xml")
-    )
-    tpls_x = store.materialize(
-        tpls, "templates_xml", resume, fingerprint=fpc.next("templates_xml")
-    )
+    checkpoint(content, "pages_xml")
+    checkpoint(props, "properties_xml")
+    checkpoint(tpls, "templates_xml")
 
     res = {
         "pages_in": pages.count(),
-        "extracted": extracted.count(),
-        "triples": raw_triples.count(),
-        "wiki_pages": wiki_pages.count(),
-        "pages_xml": content_x.count(),
-        "properties_xml": props_x.count(),
-        "templates_xml": tpls_x.count(),
+        "extracted": store.rows(ext_stage),
+        "triples": store.rows(tri_stage),
+        "wiki_pages": store.rows("wiki_pages"),
+        "pages_xml": store.rows("pages_xml"),
+        "properties_xml": store.rows("properties_xml"),
+        "templates_xml": store.rows("templates_xml"),
         "run_id": store.run_id,
     }
     if sparql is not None:
@@ -348,11 +336,10 @@ def run_web_pipeline(
 
         form, qdf = sparql_query(raw_triples, sparql)
         qpath = os.path.join(work_dir, "sparql")
-        qdf.write.mode("overwrite").parquet(qpath)
         res["sparql"] = {
             "form": form,
             "result": qpath,
-            "n_rows": spark.read.parquet(qpath).count(),
+            "n_rows": write_counted(qdf, qpath),
             "columns": qdf.columns,
         }
     # every stage is checkpointed and counted: the builders' scoped
@@ -401,12 +388,10 @@ def run_sparql(
         triples = entail_triples(triples, entail)
     form, df = sparql_query(triples, query)
     out_path = os.path.join(out_dir, "sparql")
-    df.write.mode("overwrite").parquet(out_path)
-    n_rows = spark.read.parquet(out_path).count()
     res = {
         "form": form,
         "result": out_path,
-        "n_rows": n_rows,
+        "n_rows": write_counted(df, out_path),
         "columns": df.columns,
         "bad_lines": bad.count(),
     }

@@ -13,14 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # --- vocabulary -------------------------------------------------------------
@@ -95,28 +92,5 @@ WIKI_PAGE_SCHEMA = StructType(
         StructField("facts", ArrayType(FACT_SCHEMA), False),
         StructField("categories", ArrayType(StringType()), False),
         StructField("specific_category", StringType(), True),
-    ]
-)
-
-# Web-scale input (BASELINE.json input_hint).
-PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("html", BinaryType(), True),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ]
-)
-
-LINEAGE_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("stage", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("input_split", StringType(), True),
-        StructField("rows_in", LongType(), True),
-        StructField("rows_out", LongType(), True),
-        StructField("wall_ms", LongType(), True),
     ]
 )

@@ -62,6 +62,10 @@ def _parse_value(v) -> tuple[str, bool, str | None]:
     if "@value" not in v:
         raise ValueError("value entry needs @id or @value")
     val = v["@value"]
+    if isinstance(val, (dict, list)):
+        raise ValueError(f"@value must be a scalar, got {type(val).__name__}")
+    if not isinstance(v.get("@type", ""), str):
+        raise ValueError(f"value @type must be a string: {v['@type']!r}")
     # native JSON booleans keep the XSD lexical form regardless of an
     # explicit @type — str(True) would yield 'True' and break the
     # serialize∘parse identity against the untyped path
@@ -69,7 +73,7 @@ def _parse_value(v) -> tuple[str, bool, str | None]:
     if "@language" in v:
         return lex, False, DT_LANGSTRING
     if "@type" in v:
-        return lex, False, str(v["@type"])
+        return lex, False, v["@type"]
     if isinstance(val, bool):
         return ("true" if val else "false"), False, DT_BOOLEAN
     if isinstance(val, int):

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdf2smw_spark.schemas import DT_LANGSTRING, DT_STRING
+from rdf2smw_spark.session import scoped_persist
 
 # subject, predicate, object term (IRI | blank node | literal with an
 # optional ^^datatype or @lang), optional graph IRI. A blank-node object
@@ -42,11 +43,20 @@ from rdf2smw_spark.schemas import DT_LANGSTRING, DT_STRING
 # the fact value stays "" and no 'Has type' is inferred); it is encoded
 # as (obj_is_iri=false, obj_datatype=NULL) — literals always carry a
 # datatype, so the combination is unambiguous (test_parity_pr 'blank').
+#
+# An IRI is the RDF 1.1 IRIREF: no control characters, space or
+# <>"{}|^`\ inside the brackets, except \uXXXX / \UXXXXXXXX escapes,
+# which are kept verbatim. Written as an unrolled loop (escapes start
+# with the one character the class excludes), so it never backtracks.
+_IRI_RUN = r'[^\x00-\x20<>"{}|^`\\]*'
+_IRI = (
+    r"<(" + _IRI_RUN + r"(?:\\(?:u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})" + _IRI_RUN + r")*)>"
+)
 _LINE_RE = re.compile(
-    r"^\s*(?:<([^>]*)>|(_:\S+))"
-    r"\s+<([^>]*)>"
-    r'\s+(?:<([^>]*)>|(_:\S+)|"((?:[^"\\]|\\.)*)"(?:\^\^<([^>]*)>|@([A-Za-z0-9\-]+))?)'
-    r"(?:\s+<([^>]*)>)?"
+    rf"^\s*(?:{_IRI}|(_:\S+))"
+    rf"\s+{_IRI}"
+    rf'\s+(?:{_IRI}|(_:\S+)|"((?:[^"\\]|\\.)*)"(?:\^\^{_IRI}|@([A-Za-z0-9\-]+))?)'
+    rf"(?:\s+{_IRI})?"
     r"\s*\.\s*$"
 )
 
@@ -137,7 +147,11 @@ def parse_units(
 
 def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """PARSED_SCHEMA frame -> (triples in TRIPLE_SCHEMA column order,
-    quarantine of (error, src_url) rows)."""
+    quarantine of (error, src_url) rows). Both read one scoped persist of
+    the parse, so counting the quarantine after the triples were used
+    does not run the Python parse again; the caller that owns the
+    terminal action frees it with release_scoped_caches()."""
+    parsed = scoped_persist(parsed)
     good = parsed.filter(parsed.error.isNull()).drop("error")
     bad = parsed.filter(parsed.error.isNotNull()).select("error", "src_url")
     return good, bad

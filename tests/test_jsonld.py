@@ -61,18 +61,22 @@ def test_quarantine_not_crash(spark):
         '{"@id": "http://e/s", "@type": 5}',
         # nested past the JSON decoder's recursion limit
         '{"@id": "http://e/s", "http://e/p": ' + "[" * 5000 + "]" * 5000 + "}",
+        # a value object's @value is a scalar and its @type a string
+        '{"@id": "http://e/s", "http://e/p": {"@value": {"a": 1}}}',
+        '{"@id": "http://e/s", "http://e/p": {"@value": [1, 2]}}',
+        '{"@id": "http://e/s", "http://e/p": {"@value": "1", "@type": 7}}',
         "",
         '{"@id": "http://e/ok", "http://e/p": [{"@value": "fine"}]}',
     ]
     rows = _parse(spark, lines).collect()
     bad = [r for r in rows if r.error is not None]
     good = [r for r in rows if r.error is None]
-    assert len(bad) == 8 and len(good) == 1
+    assert len(bad) == 11 and len(good) == 1
     assert good[0].subj == "http://e/ok"
     # every quarantine row names the offending line for forensics
     assert sorted(
         next(i for i, ln in enumerate(lines) if repr(ln) in r.error) for r in bad
-    ) == [0, 1, 2, 3, 4, 5, 6, 7]
+    ) == list(range(11))
 
 
 def test_round_trip_identity(spark):

@@ -38,6 +38,19 @@ def test_malformed_raises():
         parse_ntriples_line("<unclosed <http://e/p> <http://e/o> .")
     with pytest.raises(ValueError):
         parse_ntriples_line('<http://e/s> <http://e/p> "unterminated .')
+    # IRIREF excludes whitespace and <>"{}|^`\ in every IRI position;
+    # \u escapes stay allowed and verbatim
+    for line in [
+        "<http://e/s> <http://e/p> <http://e/a\t<b> .",
+        '<http://e/a b> <http://e/p> "v" .',
+        '<http://e/s> <http://e/p|q> "v" .',
+        '<http://e/s> <http://e/p> "v"^^<http://e/d{t}> .',
+        '<http://e/s> <http://e/p> "v" <http://e/g^h> .',
+    ]:
+        with pytest.raises(ValueError):
+            parse_ntriples_line(line)
+    iri = r"http://e/\u00e9"
+    assert parse_ntriples_line(f"<{iri}> <http://e/p> <http://e/o> .")[0] == iri
 
 
 def test_distributed_parse_quarantine(spark):
@@ -135,3 +148,20 @@ def test_parse_units_failed_unit_adds_one_row_and_no_partial_triples(spark):
         ("http://e/a", "u1"), ("http://e/b", "u1"),
     ]
     assert [tuple(r) for r in bad.collect()] == [("bad token 1", "u2")]
+
+
+def test_triples_and_quarantine_share_one_parse(spark, tmp_path):
+    """The quarantine reads the persisted parse that the triples already
+    computed, so counting bad lines does not run the Python parse again."""
+    from rdf2smw_spark.session import release_scoped_caches
+    from rdf2smw_spark.sources.ntriples import read_ntriples
+
+    p = tmp_path / "g.nt"
+    p.write_text('<http://e/s> <http://e/p> "v" .\ngarbage\n')
+    good, bad = read_ntriples(spark, str(p))
+    try:
+        assert good.count() == 1
+        assert "InMemoryRelation" in bad._jdf.queryExecution().optimizedPlan().toString()
+        assert bad.count() == 1
+    finally:
+        release_scoped_caches()

@@ -1,5 +1,6 @@
 """EXTRACT/TRIPLIFY invariants + checkpoint/resume semantics."""
 
+import glob
 import hashlib
 import os
 
@@ -72,6 +73,59 @@ def test_pipeline_resume_is_idempotent(spark, sf_dir, tmp_path):
     # lineage row counts reconcile with the stage output
     tl = lineage1.filter(F.col("stage") == "raw_triples").agg(F.sum("rows_out")).first()[0]
     assert tl == r1["triples"]
+
+
+def test_resumed_materialize_runs_no_job_and_manifest_counts_rows(spark, tmp_path):
+    """A committed stage resumes from its manifest alone: no schema
+    inference, no count, no Spark job. The manifest's row count is the
+    one the lineage rows add up to."""
+    import json
+
+    from rdf2smw_spark.plans.lineage import MANIFEST, CheckpointStore
+
+    df = spark.range(50).withColumn("b", F.col("id") % 3)
+    store = CheckpointStore(spark, str(tmp_path), run_id="w")
+    store.materialize(df, "s", partition_by=["b"], fingerprint="f1")
+    with open(tmp_path / "s" / MANIFEST) as fh:
+        manifest = json.load(fh)
+    lineage = spark.read.parquet(store.lineage_path())
+    assert manifest["rows"] == 50 == lineage.agg(F.sum("rows_out")).first()[0]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-probe", "resumed materialize")
+    try:
+        out = CheckpointStore(spark, str(tmp_path)).materialize(
+            df, "s", partition_by=["b"], fingerprint="f1"
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup("resume-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert out.count() == 50
+
+
+def test_lost_manifest_recomputes_stage_and_everything_after(spark, sf_dir, tmp_path):
+    """A stage without a manifest is uncommitted: it is recomputed, and so
+    is every stage after it, while the stages before it resume."""
+    pages = synth_pages(spark, sf_dir).limit(20)
+    work = str(tmp_path / "work")
+    r1 = run_web_pipeline(spark, pages, work)
+    os.remove(os.path.join(work, "wiki_pages", "_MANIFEST.json"))
+
+    def commits():
+        found = glob.glob(os.path.join(work, "*", "_MANIFEST.json"))
+        return {p.split(os.sep)[-2]: os.stat(p).st_mtime_ns for p in found}
+
+    before = commits()
+    assert len(before) == 5  # text_extracted, raw_triples and the three XML stages
+    r2 = run_web_pipeline(spark, pages, work)
+    after = commits()
+    redone = {st for st, t in after.items() if before.get(st) != t}
+    assert redone == {"wiki_pages", "pages_xml", "properties_xml", "templates_xml"}
+    assert {k: v for k, v in r1.items() if k != "run_id"} == {
+        k: v for k, v in r2.items() if k != "run_id"
+    }
 
 
 def test_pipeline_partial_resume(spark, sf_dir, tmp_path):
