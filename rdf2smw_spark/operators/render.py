@@ -2,7 +2,10 @@
 /root/reference/components/mwxmlcreator.go:52-158).
 
 All rendering is built-in column expressions (concat / transform /
-aggregate over the facts array) — no Python in the row path. The XML
+aggregate over the facts array) — no Python in the row path. In nt
+mode the output leaves Spark in one place: `collect_xml_file` streams
+the three documents (pages / properties / templates) from one sorted
+pass, a partition at a time, into their <mediawiki> envelopes. The XML
 template, namespace map, escape table and template-page wikitext mirror
 the reference byte-for-byte, except:
 
@@ -13,6 +16,9 @@ the reference byte-for-byte, except:
 """
 
 from __future__ import annotations
+
+from contextlib import ExitStack
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -181,8 +187,9 @@ def render_all(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """F4 three-way routing: (content pages, property pages, template
     pages), each as (title, page_type, xml), deterministically sortable
-    by title. Callers wrap each set in the <mediawiki> envelope
-    (write_xml_file) or keep shards at scale."""
+    by title. All three share the one `rendered` plan; nt mode streams
+    them to their files in one pass (collect_xml_file), web mode
+    checkpoints each as a stage."""
     rendered = pages_to_xml(pages, use_templates, timestamp)
 
     content = rendered.filter(F.col("page_type") != URI_TYPE_PREDICATE).select(
@@ -199,9 +206,27 @@ def render_all(
     return content, props, tpls
 
 
-def collect_xml_file(xml_pages: DataFrame) -> str:
-    """Single-file output with the <mediawiki> envelope
-    (mwxmlcreator.go:59-60,137-140). Driver-side concat of every page
-    into one document, as the reference writes one file."""
-    rows = xml_pages.orderBy("title").select("xml").collect()
-    return "<mediawiki>\n" + "".join(r["xml"] for r in rows) + "</mediawiki>\n"
+def collect_xml_file(docs: list[tuple[str, DataFrame]]) -> dict[str, int]:
+    """Write each (path, frame) pair's (title, xml) rows, sorted by
+    title, into `path` inside the <mediawiki> envelope
+    (mwxmlcreator.go:59-60,137-140); returns the pages written per path.
+
+    One sorted pass routes every row to its file, as the reference's
+    MWXMLCreator routes each page to one of its sequential sinks
+    (mwxmlcreator.go:131-135, strfilewriter.go:23-37): the frames share
+    one plan (so their common subplan runs once) and reach the driver
+    one sorted partition at a time, never as whole documents. Same-title
+    rows keep the order the sort leaves them in (no tiebreak)."""
+    tagged = [df.select(F.lit(i).alias("doc"), "title", "xml") for i, (_, df) in enumerate(docs)]
+    rows = reduce(DataFrame.unionByName, tagged).orderBy("doc", "title").select("doc", "xml")
+    counts = [0] * len(docs)
+    with ExitStack() as stack:
+        sinks = [stack.enter_context(open(path, "w")) for path, _ in docs]
+        for fh in sinks:
+            fh.write("<mediawiki>\n")
+        for doc, xml in rows.toLocalIterator():
+            sinks[doc].write(xml)
+            counts[doc] += 1
+        for fh in sinks:
+            fh.write("</mediawiki>\n")
+    return {path: n for (path, _), n in zip(docs, counts)}

@@ -419,14 +419,13 @@ def run_nt_pipeline(
     pages = triples_to_pages(spark, triples, n_salt=n_salt)
     content, props, tpls = render_all(pages, use_templates=use_templates)
     os.makedirs(out_dir, exist_ok=True)
-    outputs = {}
-    for name, df in [("pages", content), ("properties", props), ("templates", tpls)]:
-        doc = collect_xml_file(df)
-        path = os.path.join(out_dir, f"{name}.xml")
-        with open(path, "w") as fh:
-            fh.write(doc)
-        outputs[name] = path
-    res = {"outputs": outputs, "bad_lines": bad.count(), "n_pages": pages.count()}
+    docs = {"pages": content, "properties": props, "templates": tpls}
+    outputs = {name: os.path.join(out_dir, f"{name}.xml") for name in docs}
+    written = collect_xml_file([(outputs[name], df) for name, df in docs.items()])
+    # every converted page lands in pages.xml or properties.xml (template
+    # pages are rendered from them), so the write already counted them
+    n_pages = written[outputs["pages"]] + written[outputs["properties"]]
+    res = {"outputs": outputs, "bad_lines": bad.count(), "n_pages": n_pages}
     # same terminal-action cache discipline as run_web_pipeline (ADVICE
     # r3): the conversion's scoped persists are dead weight once the XML
     # is written — a long-lived session running many nt conversions must

@@ -13,8 +13,9 @@ profile, documented rather than silently guessed:
 - `@type: [iri, ...]` maps to rdf:type triples;
 - property values are arrays of value objects: `{"@id": iri}` for IRI
   objects, `{"@value": v[, "@type": dt][, "@language": tag]}` for
-  literals. `@language` maps to rdf:langString (the triple schema
-  keeps no language tag — same lexical-form-only contract as the
+  literals; a null `@value` yields no triple, as expansion drops it.
+  `@language` maps to rdf:langString (the triple schema keeps no
+  language tag — same lexical-form-only contract as the
   reference's .String(), SURVEY §1.1); a bare `@value` defaults to
   xsd:string; JSON numbers/booleans carry the implicit XSD datatype
   per the JSON-LD spec (integer / double / boolean);
@@ -50,8 +51,9 @@ from rdf2smw_spark.sources.ntriples import parse_units, split_quarantine
 _ABS_IRI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
 
-def _parse_value(v) -> tuple[str, bool, str | None]:
-    """One expanded value entry -> (obj, obj_is_iri, obj_datatype)."""
+def _parse_value(v) -> tuple[str, bool, str | None] | None:
+    """One expanded value entry -> (obj, obj_is_iri, obj_datatype), or
+    None for a null @value, which JSON-LD expansion drops."""
     if not isinstance(v, dict):
         raise ValueError(f"value entry must be an object, got {type(v).__name__}")
     if "@id" in v:
@@ -66,6 +68,8 @@ def _parse_value(v) -> tuple[str, bool, str | None]:
         raise ValueError(f"@value must be a scalar, got {type(val).__name__}")
     if not isinstance(v.get("@type", ""), str):
         raise ValueError(f"value @type must be a string: {v['@type']!r}")
+    if val is None:
+        return None
     # native JSON booleans keep the XSD lexical form regardless of an
     # explicit @type — str(True) would yield 'True' and break the
     # serialize∘parse identity against the untyped path
@@ -108,7 +112,8 @@ def _node_rows(node, src: str) -> list[tuple]:
         if not isinstance(values, list):
             values = [values]
         for v in values:
-            out.append((subj, pred, *_parse_value(v), src))
+            if (obj := _parse_value(v)) is not None:
+                out.append((subj, pred, *obj, src))
     return out
 
 

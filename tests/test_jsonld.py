@@ -79,6 +79,22 @@ def test_quarantine_not_crash(spark):
     ) == list(range(11))
 
 
+def test_null_value_yields_no_triple(spark):
+    # JSON-LD expansion drops a null @value; the node's other triples stay
+    lines = [
+        '{"@id": "http://e/s", "http://e/p": {"@value": null}, "http://e/q": [{"@value": "kept"}]}',
+        '{"@id": "http://e/t", "http://e/p": [{"@value": null}, {"@value": 1}]}',
+        '{"@id": "http://e/u", "http://e/p": {"@value": null}}',
+    ]
+    rows = _parse(spark, lines).collect()
+    assert all(r.error is None for r in rows)
+    got = {(r.subj, r.pred, r.obj, r.obj_datatype) for r in rows}
+    assert got == {
+        ("http://e/s", "http://e/q", "kept", DT_STRING),
+        ("http://e/t", "http://e/p", "1", DT_INTEGER),
+    }
+
+
 def test_round_trip_identity(spark):
     rows = [
         ("http://e/s", TYPE, "http://e/C", True, None),

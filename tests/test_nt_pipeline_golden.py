@@ -38,6 +38,13 @@ def test_no_bad_lines_and_page_count(outputs):
     assert res["n_pages"] == 6
 
 
+def test_page_count_is_the_pages_written(outputs):
+    # n_pages is counted by the XML write: every converted page is a
+    # <page> of pages.xml or properties.xml
+    res, docs = outputs
+    assert res["n_pages"] == docs["pages"].count("<page>") + docs["properties"].count("<page>")
+
+
 def test_instance_page_template_call(outputs):
     _, docs = outputs
     expected = (

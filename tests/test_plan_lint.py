@@ -145,6 +145,28 @@ def test_source_lint_one_fixpoint_and_guarded_collect():
             )
 
 
+# --- source lint: output rows reach the driver through one writer -----------
+#
+# nt mode streams its three XML documents through render.collect_xml_file
+# (one sorted pass, a partition at a time); a .collect() in the renderer
+# or a plan would hold a whole output on the driver, and a pages.count()
+# in run_nt_pipeline would run the conversion again after the write.
+def test_source_lint_output_reaches_driver_through_the_writer():
+    import inspect
+    import pathlib
+
+    import rdf2smw_spark
+    from rdf2smw_spark.plans.pipeline import run_nt_pipeline
+
+    root = pathlib.Path(rdf2smw_spark.__file__).parent
+    paths = [root / "operators" / "render.py", *sorted((root / "plans").glob("*.py"))]
+    collects = [p.relative_to(root).as_posix() for p in paths if ".collect()" in p.read_text()]
+    assert not collects, f".collect() in {collects} — write output through collect_xml_file"
+    assert "pages.count()" not in inspect.getsource(run_nt_pipeline), (
+        "run_nt_pipeline recounts the conversion — use the writer's counts"
+    )
+
+
 # --- source lint: one RDF parse loop -----------------------------------------
 #
 # Every RDF reader (N-Triples/N-Quads lines, Turtle documents, JSON-LD

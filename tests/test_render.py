@@ -102,7 +102,7 @@ def test_template_pages_content(spark):
     assert "{{#arraymap:{{{Categories}}}|,|x|[[Category:x]]|}}\n" in xml
 
 
-def test_three_way_routing_and_envelope(spark):
+def test_three_way_routing_and_envelope(spark, tmp_path):
     pages = _pages(
         spark,
         [
@@ -114,7 +114,32 @@ def test_three_way_routing_and_envelope(spark):
     content, props, tpls = render_all(pages, use_templates=True)
     assert {r["title"] for r in content.collect()} == {"Normal", "Category:C"}
     assert {r["title"] for r in props.collect()} == {"Property:P"}
-    doc = collect_xml_file(content)
+    path = str(tmp_path / "pages.xml")
+    assert collect_xml_file([(path, content)]) == {path: 2}
+    doc = open(path).read()
     assert doc.startswith("<mediawiki>\n")
     assert doc.endswith("</mediawiki>\n")
     assert doc.count("<page>") == 2
+
+
+def test_xml_writer_sorts_each_file_across_partitions(spark, tmp_path):
+    # titles arrive out of order and spread over 4 partitions; each file
+    # must still be its own rows in title order inside the envelope
+    rows_a = [(f"A{i:02d}", f"<a{i}/>\n") for i in (7, 3, 11, 0, 5, 9, 1)]
+    rows_b = [(f"B{i:02d}", f"<b{i}/>\n") for i in (4, 2, 8)]
+    paths = [str(tmp_path / "a.xml"), str(tmp_path / "b.xml")]
+    frames = [spark.createDataFrame(r, "title string, xml string").repartition(4) for r in (rows_a, rows_b)]
+    assert collect_xml_file(list(zip(paths, frames))) == {paths[0]: len(rows_a), paths[1]: len(rows_b)}
+    for path, rows in zip(paths, (rows_a, rows_b)):
+        body = "".join(xml for _, xml in sorted(rows))
+        assert open(path).read() == "<mediawiki>\n" + body + "</mediawiki>\n"
+
+
+def test_xml_writer_empty_templates_file(spark, tmp_path):
+    # without templates the third document is the bare envelope
+    pages = _pages(spark, [("Normal", URI_TYPE_UNDEFINED, [("P", "v")], ["C"], None)])
+    content, props, tpls = render_all(pages, use_templates=False)
+    paths = [str(tmp_path / f"{n}.xml") for n in ("pages", "properties", "templates")]
+    counts = collect_xml_file(list(zip(paths, (content, props, tpls))))
+    assert counts == dict(zip(paths, (1, 0, 0)))
+    assert open(tmp_path / "templates.xml").read() == "<mediawiki>\n</mediawiki>\n"
