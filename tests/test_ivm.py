@@ -761,3 +761,44 @@ def test_minmax_bulk_delete_every_group_shuffle_path(spark, monkeypatch):
     assert _rows(read_minmax_view(v)) == _rows(
         read_minmax_view(minmax_view(upd, MMVIEW))
     )
+
+
+# --- views whose GROUP BY key is unbound in some solutions -------------------
+
+UVIEW_BODY = """
+WHERE { { ?s a ?c . } UNION { ?s ex:amt ?v . } } GROUP BY ?c
+"""
+
+
+def test_count_view_keeps_group_whose_counts_are_zero(spark):
+    """A COUNT(?v)-only group whose ?v is unbound in every solution
+    exists in a recompute with n=0: the view keeps it while its hidden
+    row count is above 0, not while a visible count is."""
+    q = PRE + "SELECT ?c (COUNT(?v) AS ?n)" + UVIEW_BODY
+    base = spark.createDataFrame([t("x", "K"), amt("a", "3")], TRIPLE_SCHEMA)
+    plus = _sv(spark, [("b", "7")])
+    maintained = maintain_count_view(count_view(base, q), q, delta_plus=plus)
+    recomputed = count_view(base.unionByName(plus), q)
+    assert as_map(maintained) == as_map(recomputed) == {EX + "K": 0, None: 2}
+
+
+def test_minmax_delete_reaches_null_group_key(spark):
+    """A delete in the group whose key is unbound must reach it: the
+    delta join and the touched-key rescan match keys null-safely."""
+    from rdf2smw_spark.operators.ivm import (
+        maintain_minmax_view, minmax_view, read_minmax_view,
+    )
+
+    q = PRE + "SELECT ?c (MIN(?v) AS ?lo) (COUNT(*) AS ?n)" + UVIEW_BODY
+    rows = [t("x", "K"), amt("a", "3"), amt("a", "5"), amt("b", "7")]
+    base = spark.createDataFrame(rows, TRIPLE_SCHEMA)
+    minus = _mm(spark, [("a", "3")])
+    upd = spark.createDataFrame(rows[:1] + rows[2:], TRIPLE_SCHEMA)
+    v = maintain_minmax_view(minmax_view(base, q), q, upd, delta_minus=minus)
+
+    def got(df):
+        return {r["c"]: (r["lo"], r["n"]) for r in read_minmax_view(df).collect()}
+
+    assert got(v) == got(minmax_view(upd, q)) == {
+        EX + "K": (None, 1), None: ("5", 2),
+    }

@@ -260,3 +260,20 @@ def test_every_module_reachable_from_cli_pipeline_or_queries():
         f"modules no CLI, pipeline or declared query imports: {unreached} — "
         "give each a caller from one of those roots or delete it"
     )
+
+
+# --- source lint: one view parse and one delta merge in IVM -------------------
+#
+# operators/ivm.py parses a view query at one site (_view_query, under the
+# one shape classifier) and merges a delta into maintained state at one
+# site (_merge). The second .unionByName( splices the min/max groups a
+# delete touched back in after their rescan: disjoint keys, not a merge.
+# A family that parsed the query or merged deltas itself would add a site.
+def test_source_lint_one_ivm_parse_and_merge():
+    import pathlib
+
+    import rdf2smw_spark
+
+    src = (pathlib.Path(rdf2smw_spark.__file__).parent / "operators" / "ivm.py").read_text()
+    assert src.count("parse_sparql(") == 1, "parse view queries through ivm._view_query"
+    assert src.count(".unionByName(") == 2, "merge deltas through ivm._merge"
