@@ -13,7 +13,8 @@ the set of kinds pick exactly one maintainer family:
   --------  ---------------  -----------------------------  -----------------------
   count     single-source    COUNT                          view + __n
   sum       single-source    SUM(?v), AVG(?v), COUNT        view + __n, __nn_, __s_
-  minmax    single-source    MIN/MAX/SAMPLE(?v), COUNT      view + __n
+  minmax    single-source    MIN/MAX/SAMPLE(?v),            view + __n
+                             COUNT(?v), COUNT(*)
   distinct  single-source    COUNT/SUM(DISTINCT ?v),        support (keys, __v, __c)
                              GROUP_CONCAT([DISTINCT] ?v),
                              COUNT(?v), COUNT(*): one ?v
@@ -39,7 +40,9 @@ the same function; MIN/MAX fold inserts through it and rescan the
 updated base only for the groups whose extremum a delete touched.
 Multi-pattern joins are not single-source (a delta triple joins against
 base triples); the join family maintains them by the counting algorithm
-over per-pattern partials instead.
+over per-pattern partials instead. Every family keys its state on the
+projected GROUP BY keys, so a view that groups by a variable it does
+not project fits none.
 
 HAVING and slicing change what a view publishes, not what it maintains:
 the epilogue functions strip them into a maintainable core, look the
@@ -219,6 +222,10 @@ def _classify(query_text: str | SelectQuery) -> _Shape:
         {v for _a, k, v, _s in items if k != "key"} - {"*"}
     ) != 1:
         family = None  # one support relation serves ONE aggregated ?var
+    if family == "minmax" and any(k == "count" and v is None for _a, k, v, _s in items):
+        family = None  # the delete rescan sees bare ?vars: COUNT(expr) would count rows
+    if not set(q.group_by) <= {v for _a, k, v, _s in items if k == "key"}:
+        family = None  # every merge keys on projected columns: it would fold groups
     if _single_source_group(q.where):
         return _Shape(q, family, items)
     pats = tuple(q.where.elements)
@@ -353,8 +360,8 @@ def _maintain_additive(old_view: DataFrame, s: _Shape, delta_plus,
 def is_delta_decomposable(query_text: str) -> bool:
     """True when the view query's solutions each depend on exactly one
     triple (a single non-path pattern or a UNION of such, plus row-local
-    filters) and it projects GROUP BY keys and at least one plain COUNT
-    only — the count family. GROUP BY keys are unrestricted."""
+    filters) and it projects every GROUP BY variable as a key and at
+    least one plain COUNT only — the count family."""
     return _fits(query_text, "count")
 
 
@@ -598,7 +605,7 @@ def _minmax_flat(base: DataFrame, s: _Shape) -> DataFrame:
     """The view's pre-aggregation solutions over ``base``: key columns
     plus one ``__v_<var>`` column per aggregated variable — the frame
     the touched-group rescan semi-joins and re-aggregates."""
-    agg_vars = sorted({v for _a, v in s.of("min", "max", "count")} - {"*", None})
+    agg_vars = sorted({v for _a, v in s.of("min", "max", "count")} - {"*"})
     items = [SelectItem(Var(v), a) for a, v in s.of("key")]
     items += [SelectItem(Var(v), f"__v_{v}") for v in agg_vars]
     return _compile(base, s.q, items=items, group_by=[])
@@ -606,7 +613,7 @@ def _minmax_flat(base: DataFrame, s: _Shape) -> DataFrame:
 
 def _minmax_agg_exprs(s: _Shape) -> list:
     """The view's aggregate expressions over a flat solutions frame."""
-    aggs = [F.count(F.lit(1) if v in ("*", None) else F.col(f"__v_{v}")).alias(a)
+    aggs = [F.count(F.lit(1) if v == "*" else F.col(f"__v_{v}")).alias(a)
             for a, v in s.of("count")]
     aggs += [F.min(f"__v_{v}").alias(a) for a, v in s.of("min")]
     aggs += [F.max(f"__v_{v}").alias(a) for a, v in s.of("max")]

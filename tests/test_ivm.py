@@ -802,3 +802,36 @@ def test_minmax_delete_reaches_null_group_key(spark):
     assert got(v) == got(minmax_view(upd, q)) == {
         EX + "K": (None, 1), None: ("5", 2),
     }
+
+
+def test_view_grouping_by_an_unprojected_variable_is_rejected(spark):
+    """Every family merges on the projected keys: grouping by ?c ?p
+    while projecting only ?c would fold the (X, rdf:type) and (X, ex:q)
+    groups into one maintained row, [(X, 3)] where a recompute gives
+    [(X, 1), (X, 2)]. No family takes such a view."""
+    q = PRE + "SELECT ?c (COUNT(?s) AS ?n) WHERE { ?s ?p ?c . } GROUP BY ?c ?p"
+    base = spark.createDataFrame(
+        [t("a", "X"), (EX + "a", EX + "q", EX + "X", True, None, "test://g")],
+        TRIPLE_SCHEMA,
+    )
+    assert not is_delta_decomposable(q)
+    plus = spark.createDataFrame([t("b", "X")], TRIPLE_SCHEMA)
+    with pytest.raises(SparqlSyntaxError):
+        maintain_count_view(count_view(base, q), q, delta_plus=plus)
+
+
+def test_minmax_view_with_count_of_an_expression_is_rejected(spark):
+    """The min/max delete rescan aggregates bare ?vars only, so it would
+    count rows for COUNT(STRLEN(?w)): deleting `a amt 3` maintained
+    (a, "5", 1) where a recompute gives (a, "5", 0). No family takes
+    such a view."""
+    from rdf2smw_spark.operators.ivm import maintain_minmax_view, minmax_view
+
+    q = PRE + """
+    SELECT ?s (MIN(?v) AS ?lo) (COUNT(STRLEN(?w)) AS ?n)
+    WHERE { { ?s ex:amt ?v . } UNION { ?s ex:tag ?w . } } GROUP BY ?s
+    """
+    base = _mm(spark, [("a", "3"), ("a", "5")])
+    with pytest.raises(SparqlSyntaxError):
+        maintain_minmax_view(minmax_view(base, q), q, _mm(spark, [("a", "5")]),
+                             delta_minus=_mm(spark, [("a", "3")]))

@@ -277,3 +277,32 @@ def test_source_lint_one_ivm_parse_and_merge():
     src = (pathlib.Path(rdf2smw_spark.__file__).parent / "operators" / "ivm.py").read_text()
     assert src.count("parse_sparql(") == 1, "parse view queries through ivm._view_query"
     assert src.count(".unionByName(") == 2, "merge deltas through ivm._merge"
+
+
+# --- source lint: one session factory ------------------------------------------
+#
+# session.get_spark is the one place every session is built, so the
+# static confs it sets (among them the per-Column call-site capture
+# turned off) hold for the CLI, both pipelines, the bench harnesses, the
+# tools, the scripts and the tests. A second builder would silently
+# bring PySpark's defaults back. perfbench/ builds through get_spark too
+# but is the benchmark's own tree, so it is not scanned.
+def test_source_lint_one_session_factory():
+    import pathlib
+
+    import rdf2smw_spark
+
+    repo = pathlib.Path(rdf2smw_spark.__file__).parent.parent
+    this = pathlib.Path(__file__).resolve()
+    sites = []
+    for path in sorted(repo.rglob("*.py")):
+        parts = path.relative_to(repo).parts
+        if parts[0] == "perfbench" or path.resolve() == this or any(
+            p.startswith(".") for p in parts
+        ):
+            continue
+        if "SparkSession.builder" in path.read_text():
+            sites.append("/".join(parts))
+    assert sites == ["rdf2smw_spark/session.py"], (
+        f"SparkSession.builder in {sites} — build sessions through session.get_spark"
+    )

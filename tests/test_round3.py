@@ -375,3 +375,36 @@ def test_cli_fuzzy_without_dict_errors(capsys):
     except SystemExit:
         pass
     assert "requires --entity-dict" in capsys.readouterr().err
+
+
+# --- no per-Column call-site capture ------------------------------------------
+
+
+def test_session_builds_plans_without_call_site_capture(spark, monkeypatch):
+    """get_spark turns PySpark's DataFrame debugging off: building the
+    conversion and render plans captures no Python call site (no stack
+    walk, no IPython import attempt, no PySparkCurrentOrigin round
+    trips)."""
+    import pyspark.errors.utils as perr
+
+    from rdf2smw_spark.operators.convert import triples_to_pages
+    from rdf2smw_spark.operators.render import render_all
+    from rdf2smw_spark.schemas import TRIPLE_SCHEMA, TYPE_PROPERTY_URI
+    from rdf2smw_spark.session import release_scoped_caches
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    calls = []
+    capture = perr._capture_call_site
+    monkeypatch.setattr(perr, "_capture_call_site",
+                        lambda depth: calls.append(depth) or capture(depth))
+    monkeypatch.setattr(perr, "_enable_debugging_cache", None)  # re-read the conf
+    triples = spark.createDataFrame([
+        ("http://x/a", TYPE_PROPERTY_URI, "http://x/C", True, None, None),
+        ("http://x/a", "http://x/p", "v", False, None, None),
+        ("http://x/b", "http://x/p", "w", False, None, None),
+    ], TRIPLE_SCHEMA)
+    try:
+        render_all(triples_to_pages(spark, triples, n_salt=1))
+    finally:
+        release_scoped_caches()
+    assert calls == []
