@@ -17,6 +17,8 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from rdf2smw_spark.plans.pipeline import ENTAIL_MODES
+
     ap = argparse.ArgumentParser(prog="rdf2smw_spark")
     ap.add_argument("--in", dest="infile", help="input N-Triples file(s)")
     ap.add_argument("--pages", help="input pages table (parquet) for web mode")
@@ -54,7 +56,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--entity-dict", default=None,
                     help="web mode: parquet entity dictionary "
                          "(surface, uri, priority) enabling the LINK stage")
-    ap.add_argument("--entail", choices=["rdfs", "owl", "rdfs+owl"], default=None,
+    ap.add_argument("--entail", choices=ENTAIL_MODES, default=None,
                     help="materialize schema-implied triples before page "
                          "conversion (RDFS rho-df and/or OWL-lite inverse/"
                          "symmetric/transitive); derived facts carry "
@@ -92,13 +94,9 @@ def main(argv: list[str] | None = None) -> int:
             ap.error("--sparql requires --in (an RDF input to query) "
                      "or --mode web (query the constructed KG)")
         if args.explain:
-            from rdf2smw_spark.plans.pipeline import entail_triples, read_rdf_any
-            from rdf2smw_spark.sparql import sparql_query
+            from rdf2smw_spark.plans.pipeline import query_rdf
 
-            triples, _bad = read_rdf_any(spark, args.infile)
-            if args.entail is not None:  # explain what --sparql executes
-                triples = entail_triples(triples, args.entail)
-            form, df = sparql_query(triples, query)
+            form, df, _bad = query_rdf(spark, args.infile, query, args.entail)
             df.explain("formatted")
             print(json.dumps({"form": form, "explained": True,
                               "columns": df.columns}))

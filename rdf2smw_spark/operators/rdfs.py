@@ -38,7 +38,11 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdf2smw_spark.schemas import SUBCLASS_PROPERTY_URI, TYPE_PROPERTY_URI
+from rdf2smw_spark.schemas import (
+    SUBCLASS_PROPERTY_URI,
+    TRIPLE_SCHEMA,
+    TYPE_PROPERTY_URI,
+)
 from rdf2smw_spark.session import (
     fixpoint,
     guarded_collect,
@@ -79,10 +83,6 @@ SYNTH_SCHEMA_TRIPLES: list[tuple] = [
 
 
 def synth_rdfs_schema(spark) -> DataFrame:
-    from rdf2smw_spark.schemas import TRIPLE_SCHEMA
-
-    from rdf2smw_spark.session import small_local_df
-
     return small_local_df(spark, SYNTH_SCHEMA_TRIPLES, TRIPLE_SCHEMA)
 
 
@@ -106,6 +106,7 @@ CLOSURE_COLLECT_LIMIT = 250_000
 # Driver closures larger than this fall back mid-flight (a pathological
 # dense graph can square a small edge set).
 CLOSURE_PAIR_LIMIT = 5_000_000
+_PAIR_SCHEMA = "uri string, anc string"
 
 
 def _closure_pairs(
@@ -145,17 +146,10 @@ def _closure_pairs(
     return pairs
 
 
-def _local_closure_df(spark, pairs: set[tuple[str, str]]) -> DataFrame:
-    from rdf2smw_spark.session import small_local_df
-
-    return small_local_df(spark, sorted(pairs), "uri string, anc string")
-
-
-def _transitive_closure(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int | None]:
+def _transitive_closure(edges: DataFrame, max_iter: int) -> DataFrame:
     """(uri, anc) reachability closure of an edge frame, bounded at
     max_iter+1 hops (the distributed path also carries its `depth`
-    column). Returns (closure, n_rows) where n_rows is known
-    exactly on the driver path and None on the distributed path.
+    column).
 
     Schema layers are tiny in any curated ontology (10^3-10^5 edges
     against 10^12 instance triples), so the default path collects the
@@ -171,8 +165,8 @@ def _transitive_closure(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int
     if pdf is not None:
         pairs = _closure_pairs(list(zip(pdf["uri"], pdf["anc"])), max_iter)
         if pairs is not None:
-            return _local_closure_df(edges.sparkSession, pairs), len(pairs)
-    return _transitive_closure_distributed(edges, max_iter), None
+            return small_local_df(edges.sparkSession, sorted(pairs), _PAIR_SCHEMA)
+    return _transitive_closure_distributed(edges, max_iter)
 
 
 def _transitive_closure_distributed(edges: DataFrame, max_iter: int) -> DataFrame:
@@ -205,37 +199,11 @@ def _transitive_closure_distributed(edges: DataFrame, max_iter: int) -> DataFram
     return closure.drop("new")
 
 
-def _collect_small(
-    df: DataFrame, limit: int = CLOSURE_COLLECT_LIMIT
-) -> tuple[DataFrame, int | None]:
-    """Guarded-collect of a schema-sized frame to a LocalRelation
-    (Arrow transfer) so downstream broadcasts build from local rows
-    instead of re-running the distributed plan per consumer; oversized
-    frames return unchanged with unknown count."""
-    pdf = guarded_collect(df, limit)
-    if pdf is None:
-        return df, None
-    return (
-        small_local_df(
-            df.sparkSession,
-            [tuple(r) for r in pdf.itertuples(index=False)],
-            df.schema,
-        ),
-        len(pdf),
-    )
-
-
-def _broadcast_known(df: DataFrame, n: int | None) -> DataFrame:
-    """maybe_broadcast without the probe job when the row count is
-    already known (driver-closed schema layers)."""
-    if n is not None:
-        return F.broadcast(df) if n <= SCHEMA_BROADCAST_LIMIT else df
-    return maybe_broadcast(df, SCHEMA_BROADCAST_LIMIT)
-
-
 SCHEMA_PREDS = (SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI, DOMAIN_URI, RANGE_URI)
 # the layers closed transitively (rdfs11, rdfs5) before any rule reads them
 _CLOSED_PREDS = (SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI)
+# predicates a derived triple can carry besides a subPropertyOf ancestor
+_FIXED_DERIVED_PREDS = (TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI)
 
 
 def _schema_edges(src: DataFrame, pred_uri: str) -> DataFrame:
@@ -246,8 +214,8 @@ def _schema_edges(src: DataFrame, pred_uri: str) -> DataFrame:
 
 def _schema_layers(src: DataFrame, max_iter: int) -> list[tuple]:
     """The four schema layers of `src` in SCHEMA_PREDS order, each as
-    (frame, known row count, driver-side pairs): subClassOf and
-    subPropertyOf closed, domain and range as asserted.
+    (frame, driver-side pairs): subClassOf and subPropertyOf closed,
+    domain and range as asserted.
 
     ONE predicate-pushed probe pulls all four layers — four separate
     guarded collects each re-scanned the raw corpus (~1s apiece at
@@ -255,8 +223,9 @@ def _schema_layers(src: DataFrame, max_iter: int) -> list[tuple]:
     predicate-pushed scan). When it fits, every layer is a local frame
     with its pairs on the driver, except a closure denser than
     CLOSURE_PAIR_LIMIT, which runs the distributed loop. An oversized
-    probe takes the per-layer guarded paths. Pairs are None wherever
-    the layer is not on the driver."""
+    probe takes the per-layer paths (each closure through its own
+    guard), and every layer's pairs are None: the driver composes no
+    action table from them."""
     spark = src.sparkSession
     probe = guarded_collect(
         src.filter(F.col("pred").isin(list(SCHEMA_PREDS)) & F.col("obj_is_iri"))
@@ -268,11 +237,8 @@ def _schema_layers(src: DataFrame, max_iter: int) -> list[tuple]:
         closed = pred_uri in _CLOSED_PREDS
         if probe is None:
             edges = _schema_edges(src, pred_uri)
-            df, n = (
-                _transitive_closure(edges, max_iter) if closed
-                else _collect_small(edges.distinct())
-            )
-            layers.append((df, n, None))
+            df = _transitive_closure(edges, max_iter) if closed else edges.distinct()
+            layers.append((df, None))
             continue
         sel = probe[probe["pred"] == pred_uri]
         pairs = set(zip(sel["subj"], sel["obj"]))
@@ -282,9 +248,9 @@ def _schema_layers(src: DataFrame, max_iter: int) -> list[tuple]:
             df = _transitive_closure_distributed(
                 _schema_edges(src, pred_uri).distinct(), max_iter
             )
-            layers.append((df, None, None))
         else:
-            layers.append((_local_closure_df(spark, pairs), len(pairs), pairs))
+            df = small_local_df(spark, sorted(pairs), _PAIR_SCHEMA)
+        layers.append((df, pairs))
     return layers
 
 
@@ -298,131 +264,11 @@ def _rule_cols(subj: str, pred: str, rule: str) -> list:
     ]
 
 
-def _forward_rules(rows: DataFrame, layers: list[tuple]) -> DataFrame:
-    """rdfs7 -> rdfs2/3 -> rdfs9 over `rows` (subj, pred, obj,
-    obj_is_iri) against _schema_layers' frames: one rule-tagged row per
-    derivation (callers keep the min rule per triple). Domain/range see
-    the asserted AND rdfs7-extended property triples; rdfs9 lifts the
-    asserted and the rdfs2/3-derived types."""
-    subc, subp, dom, rng = (_broadcast_known(df, n) for df, n, _ in layers)
-    d7 = rows.join(subp, rows.pred == subp.uri).select(
-        "subj", F.col("anc").alias("pred"), "obj", "obj_is_iri",
-        F.lit("rdfs7").alias("rule"),
-    )
-    props = rows.unionByName(d7.drop("rule"))
-    d2 = props.join(dom, props.pred == dom.uri).select(
-        *_rule_cols("subj", TYPE_PROPERTY_URI, "rdfs2")
-    )
-    d3 = (
-        props.filter(F.col("obj_is_iri"))
-        .join(rng, props.pred == rng.uri)
-        .select(*_rule_cols("obj", TYPE_PROPERTY_URI, "rdfs3"))
-    )
-    types = (
-        rows.filter((F.col("pred") == TYPE_PROPERTY_URI) & F.col("obj_is_iri"))
-        .select("subj", "obj")
-        .unionByName(d2.select("subj", "obj"))
-        .unionByName(d3.select("subj", "obj"))
-        .distinct()
-    )
-    d9 = types.join(subc, types.obj == subc.uri).select(
-        *_rule_cols("subj", TYPE_PROPERTY_URI, "rdfs9")
-    )
-    return d7.unionByName(d2).unionByName(d3).unionByName(d9)
-
-
-def rdfs_entail(triples: DataFrame, max_iter: int = 10) -> DataFrame:
-    """-> (subj, pred, obj, obj_is_iri, rule): the triples RDFS
-    entails but the graph does not assert, tagged with the
-    lexicographically-first rule that derives each (deterministic at
-    any parallelism). Input is the standard triple frame."""
-    # base feeds five rule branches plus the final anti-join: persist the
-    # PROJECTION, not a distinct() of it — the full-corpus distinct is a
-    # shuffle whose only effect (set semantics) the derived-side groupBy
-    # and the types distinct() re-establish anyway; duplicate asserted
-    # triples merely repeat broadcast-join probes (measured: dropping it
-    # removes one ~|corpus| shuffle from the critical path)
-    base = scoped_persist(triples.select("subj", "pred", "obj", "obj_is_iri"))
-    layers = _schema_layers(triples, max_iter)
-    (subc, _, _), (subp, _, subp_pairs) = layers[:2]
-    pairs = [p for _, _, p in layers]
-    acts = _fused_actions(*pairs) if all(p is not None for p in pairs) else None
-    if acts is not None:
-        # --- fused single-pass formulation (schema layers local) --------
-        # The generic join formulation re-scans `base` once per rule
-        # branch (11 cached-corpus passes, measured: the whole count
-        # phase at sf0.1). With every schema layer on the driver, the
-        # composition d2/d3-through-subp and d9-over-d2/d3 is
-        # precomputed per PREDICATE into one broadcast action table, so
-        # the instance corpus is touched exactly 3x: the action join
-        # (rdfs7/2/3 + their rdfs9 closures), the asserted-type rdfs9
-        # join, and the anti-join probe. Result set and rule tags are
-        # identical by construction: every composed action carries the
-        # same tag the chained rules would have produced, and the final
-        # min-rule groupBy collapses duplicates exactly as before
-        # (pytested against the generic formulation).
-        act_df = small_local_df(
-            triples.sparkSession,
-            sorted((p, k, a, r) for (p, k, a), r in acts.items()),
-            "pred string, kind string, arg string, rule string",
-        )
-        ext = base.join(F.broadcast(act_df), "pred")
-        d_pred = ext.filter(
-            (F.col("kind") != "rng") | F.col("obj_is_iri")
-        ).select(
-            F.when(F.col("kind") == "rng", F.col("obj"))
-            .otherwise(F.col("subj")).alias("subj"),
-            F.when(F.col("kind") == "d7", F.col("arg"))
-            .otherwise(F.lit(TYPE_PROPERTY_URI)).alias("pred"),
-            F.when(F.col("kind") == "d7", F.col("obj"))
-            .otherwise(F.col("arg")).alias("obj"),
-            F.when(F.col("kind") == "d7", F.col("obj_is_iri"))
-            .otherwise(F.lit(True)).alias("obj_is_iri"),
-            "rule",
-        )
-        d9a = (
-            base.filter((F.col("pred") == TYPE_PROPERTY_URI) & F.col("obj_is_iri"))
-            .join(F.broadcast(subc), base.obj == subc.uri)
-            .select(*_rule_cols("subj", TYPE_PROPERTY_URI, "rdfs9"))
-        )
-        rules = d_pred.unionByName(d9a)
-        derivable = sorted(
-            {a for (u, a) in subp_pairs}
-            | {TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI, SUBPROPERTY_URI}
-        )
-        asserted = base.filter(F.col("pred").isin(derivable))
-    else:
-        rules = _forward_rules(base, layers)
-        # every derived triple's predicate is schema-bounded: rdf:type /
-        # subClassOf / subPropertyOf, or a subp ancestor (rdfs7). Restrict
-        # the anti-join's probe side to those predicates with a broadcast
-        # semi-join so the "already asserted?" check shuffles a
-        # schema-sized slice of the corpus, not all of it.
-        derivable_preds = (
-            subp.select(F.col("anc").alias("pred"))
-            .unionByName(
-                subp.sparkSession.createDataFrame(
-                    [(TYPE_PROPERTY_URI,), (SUBCLASS_PROPERTY_URI,), (SUBPROPERTY_URI,)],
-                    "pred string",
-                )
-            )
-            .distinct()
-        )
-        asserted = base.join(F.broadcast(derivable_preds), "pred", "semi")
-    derived = (
-        rules.unionByName(subc.select(*_rule_cols("uri", SUBCLASS_PROPERTY_URI, "rdfs11")))
-        .unionByName(subp.select(*_rule_cols("uri", SUBPROPERTY_URI, "rdfs5")))
-        .groupBy("subj", "pred", "obj", "obj_is_iri")
-        .agg(F.min("rule").alias("rule"))
-    )
-    return derived.join(
-        asserted.select("subj", "pred", "obj"), ["subj", "pred", "obj"], "anti"
-    )
-
-
-# Composed action tables beyond this row count stay on the generic
-# join formulation (a pathological schema can square dom x subc).
+# Driver-composed action tables beyond this row count are composed with
+# DataFrame joins instead (a pathological schema can square dom x subc);
+# a composed table beyond it is shuffle-joined, not broadcast.
 ACTION_TABLE_LIMIT = 2_000_000
+_ACTION_SCHEMA = "pred string, kind string, arg string, rule string"
 
 
 def _fused_actions(subc_pairs, subp_pairs, dom_edges, rng_edges):
@@ -431,18 +277,11 @@ def _fused_actions(subc_pairs, subp_pairs, dom_edges, rng_edges):
     and rdfs9 over the d2/d3-derived types — into (pred, kind, arg) ->
     min rule tag. Returns None when the composition exceeds
     ACTION_TABLE_LIMIT."""
-    subp_adj: dict[str, set[str]] = {}
-    for u, a in subp_pairs:
-        subp_adj.setdefault(u, set()).add(a)
-    subc_adj: dict[str, set[str]] = {}
-    for u, a in subc_pairs:
-        subc_adj.setdefault(u, set()).add(a)
-    dom_map: dict[str, set[str]] = {}
-    for u, a in dom_edges:
-        dom_map.setdefault(u, set()).add(a)
-    rng_map: dict[str, set[str]] = {}
-    for u, a in rng_edges:
-        rng_map.setdefault(u, set()).add(a)
+    adjs: tuple[dict[str, set[str]], ...] = ({}, {}, {}, {})
+    for adj, edges in zip(adjs, (subc_pairs, subp_pairs, dom_edges, rng_edges)):
+        for u, a in edges:
+            adj.setdefault(u, set()).add(a)
+    subc_adj, subp_adj, dom_map, rng_map = adjs
 
     acts: dict[tuple[str, str, str], str] = {}
 
@@ -471,6 +310,138 @@ def _fused_actions(subc_pairs, subp_pairs, dom_edges, rng_edges):
     return acts
 
 
+def _composed_actions(layers: list[tuple]) -> DataFrame:
+    """_fused_actions' table as (pred, kind, arg, rule) rows, composed
+    with DataFrame joins over _schema_layers' frames: for a schema the
+    driver does not hold, or whose table is over ACTION_TABLE_LIMIT."""
+    subc, subp, dom, rng = (df.select("uri", "anc") for df, _ in layers)
+    # a predicate reaches the domains/ranges of its subp ancestors and
+    # its own (identity pairs over the dom/rng keys)
+    reach = subp.select(F.col("uri").alias("pred"), F.col("anc").alias("q")).unionByName(
+        dom.unionByName(rng).select(F.col("uri").alias("pred"), F.col("uri").alias("q"))
+    )
+    d7 = subp.select(
+        F.col("uri").alias("pred"), F.lit("d7").alias("kind"),
+        F.col("anc").alias("arg"), F.lit("rdfs7").alias("rule"),
+    )
+    d2, d3 = (
+        reach.join(layer.select(F.col("uri").alias("q"), F.col("anc").alias("arg")), "q")
+        .select("pred", F.lit(kind).alias("kind"), "arg", F.lit(rule).alias("rule"))
+        for layer, kind, rule in ((dom, "dom", "rdfs2"), (rng, "rng", "rdfs3"))
+    )
+    types = d2.unionByName(d3)
+    d9 = types.join(
+        subc.select(F.col("uri").alias("arg"), F.col("anc").alias("up")), "arg"
+    ).select("pred", "kind", F.col("up").alias("arg"), F.lit("rdfs9").alias("rule"))
+    return (
+        d7.unionByName(types).unionByName(d9)
+        .groupBy("pred", "kind", "arg")
+        .agg(F.min("rule").alias("rule"))
+    )
+
+
+def _rule_plan(spark, layers: list[tuple]):
+    """-> (action table, subClassOf join side, derivable) for
+    _apply_rules. The table is composed on the driver when every layer's
+    pairs are there and it fits ACTION_TABLE_LIMIT, else by
+    _composed_actions (persisted: the applier and `derivable` both read
+    it). `derivable(df)` narrows a triple frame to the predicates a
+    derived triple can carry (the d7 args and _FIXED_DERIVED_PREDS), so
+    the "already asserted?" anti-join probes a schema-bounded slice."""
+    subc, subc_pairs = layers[0]
+    pairs = [p for _, p in layers]
+    acts = _fused_actions(*pairs) if all(p is not None for p in pairs) else None
+    if acts is not None:
+        act_df = small_local_df(
+            spark, sorted((p, k, a, r) for (p, k, a), r in acts.items()), _ACTION_SCHEMA
+        )
+        preds = sorted({a for (_, k, a) in acts if k == "d7"} | set(_FIXED_DERIVED_PREDS))
+        return (
+            F.broadcast(act_df), F.broadcast(subc),
+            lambda df: df.filter(F.col("pred").isin(preds)),
+        )
+    act_df = scoped_persist(_composed_actions(layers))
+    pred_df = (
+        act_df.filter(F.col("kind") == "d7").select(F.col("arg").alias("pred"))
+        .unionByName(
+            small_local_df(spark, [(p,) for p in _FIXED_DERIVED_PREDS], "pred string")
+        )
+        .distinct()
+    )
+    return (
+        maybe_broadcast(act_df, ACTION_TABLE_LIMIT),
+        F.broadcast(subc) if subc_pairs is not None
+        else maybe_broadcast(subc, SCHEMA_BROADCAST_LIMIT),
+        lambda df: df.join(F.broadcast(pred_df), "pred", "semi"),
+    )
+
+
+def _apply_rules(rows: DataFrame, acts: DataFrame, subc: DataFrame) -> DataFrame:
+    """The instance-side rule applier: rule-tagged derivations of `rows`
+    (subj, pred, obj, obj_is_iri), several per triple where several
+    rules reach it (callers keep the min rule per triple).
+
+    The action table holds, per PREDICATE, every consequence the closed
+    schema gives a triple on it: d7 (rdfs7, the triple under a subp
+    ancestor), dom/rng (rdfs2/rdfs3 through the predicate or an
+    ancestor, typing the subject / IRI object) and their rdfs9 lifts up
+    subC+. So one join on `pred` applies the stratified chain rdfs7 ->
+    rdfs2/3 -> rdfs9 with the tags the chain gives, and an ASSERTED
+    rdf:type climbs `subc` in the second join (rdfs9): the instance rows
+    are read twice, whatever the schema."""
+    d7, rng = F.col("kind") == "d7", F.col("kind") == "rng"
+    d_pred = rows.join(acts, "pred").filter(~rng | F.col("obj_is_iri")).select(
+        F.when(rng, F.col("obj")).otherwise(F.col("subj")).alias("subj"),
+        F.when(d7, F.col("arg")).otherwise(F.lit(TYPE_PROPERTY_URI)).alias("pred"),
+        F.when(d7, F.col("obj")).otherwise(F.col("arg")).alias("obj"),
+        F.when(d7, F.col("obj_is_iri")).otherwise(F.lit(True)).alias("obj_is_iri"),
+        "rule",
+    )
+    d9a = (
+        rows.filter((F.col("pred") == TYPE_PROPERTY_URI) & F.col("obj_is_iri"))
+        .join(subc, rows.obj == subc.uri)
+        .select(*_rule_cols("subj", TYPE_PROPERTY_URI, "rdfs9"))
+    )
+    return d_pred.unionByName(d9a)
+
+
+def _min_rule(rules: DataFrame) -> DataFrame:
+    return rules.groupBy("subj", "pred", "obj", "obj_is_iri").agg(
+        F.min("rule").alias("rule")
+    )
+
+
+def rdfs_entail(triples: DataFrame, max_iter: int = 10) -> DataFrame:
+    """-> (subj, pred, obj, obj_is_iri, rule): the triples RDFS
+    entails but the graph does not assert, tagged with the
+    lexicographically-first rule that derives each (deterministic at
+    any parallelism). Input is the standard triple frame.
+
+    The closed schema layers give the rdfs11/rdfs5 rows; _apply_rules
+    over the whole graph gives the instance rows; what the graph asserts
+    on a derivable predicate is anti-joined away. The instance corpus is
+    read three times: the action join, the asserted-type join and the
+    anti-join probe."""
+    # base feeds the applier's two joins plus the final anti-join:
+    # persist the PROJECTION, not a distinct() of it — the full-corpus
+    # distinct is a shuffle whose only effect (set semantics) the
+    # min-rule groupBy re-establishes anyway; duplicate asserted triples
+    # merely repeat broadcast-join probes (measured: dropping it removes
+    # one ~|corpus| shuffle from the critical path)
+    base = scoped_persist(triples.select("subj", "pred", "obj", "obj_is_iri"))
+    layers = _schema_layers(triples, max_iter)
+    acts, subc_side, derivable = _rule_plan(triples.sparkSession, layers)
+    (subc, _), (subp, _) = layers[:2]
+    derived = _min_rule(
+        _apply_rules(base, acts, subc_side)
+        .unionByName(subc.select(*_rule_cols("uri", SUBCLASS_PROPERTY_URI, "rdfs11")))
+        .unionByName(subp.select(*_rule_cols("uri", SUBPROPERTY_URI, "rdfs5")))
+    )
+    return derived.join(
+        derivable(base).select("subj", "pred", "obj"), ["subj", "pred", "obj"], "anti"
+    )
+
+
 def rdfs_entail_incremental(
     base: DataFrame,
     delta: DataFrame,
@@ -479,14 +450,14 @@ def rdfs_entail_incremental(
 ) -> DataFrame:
     """Semi-naive maintenance of the entailment delta under NEW triples:
     when the delta is instance-only, the closed schema layers are
-    unchanged, so the forward rules (rdfs7 -> 2/3 -> 9) need to run
-    over the DELTA rows only — the rules are per-triple monotone, so
-    entail(base ∪ delta) = entail(base) ∪ forward(delta) and the cost
-    scales with the delta, not the corpus. A delta that touches any
-    schema predicate (subClassOf, subPropertyOf, domain, range)
-    changes the closures themselves and falls back to the full
-    recompute (the incremental_kg probe discipline: a bounded limit(1)
-    existence check, never a full scan of the delta).
+    unchanged, so rdfs_entail's rule applier (rdfs7 -> 2/3 -> 9, one
+    action-table join) needs to run over the DELTA rows only — the rules
+    are per-triple monotone, so entail(base ∪ delta) = entail(base) ∪
+    apply(delta) and the cost scales with the delta, not the corpus. A
+    delta that touches any schema predicate (subClassOf, subPropertyOf,
+    domain, range) changes the closures themselves and falls back to
+    the full recompute (the incremental_kg probe discipline: a bounded
+    limit(1) existence check, never a full scan of the delta).
 
     `entailed_base` is the MAINTAINED derived table (rdfs_entail(base)),
     so the fast path does no base-corpus entailment work (the table is
@@ -496,32 +467,21 @@ def rdfs_entail_incremental(
     source. Exactness contract pytested against the full recompute."""
     both = base.unionByName(delta)
     spo = ["subj", "pred", "obj"]
-    schema_in_delta = (
-        delta.filter(F.col("pred").isin(*SCHEMA_PREDS) & F.col("obj_is_iri"))
-        .limit(1)
-        .count()
-        > 0
-    )
-    if schema_in_delta:
+    schema_edge = F.col("pred").isin(*SCHEMA_PREDS) & F.col("obj_is_iri")
+    if delta.filter(schema_edge).limit(1).count() > 0:
         # schema changed: closures differ — only the full recompute is
         # sound (an entailment can even DISAPPEAR only under deletes,
         # never here, but new schema edges re-derive across the corpus)
-        return rdfs_entail(both, max_iter).join(
-            entailed_base.select(*spo), spo, "anti"
-        )
-    rows = delta.select("subj", "pred", "obj", "obj_is_iri").distinct()
-    derived = (
-        _forward_rules(rows, _schema_layers(base, max_iter))
-        .groupBy("subj", "pred", "obj", "obj_is_iri")
-        .agg(F.min("rule").alias("rule"))
-    )
+        return rdfs_entail(both, max_iter).join(entailed_base.select(*spo), spo, "anti")
+    acts, subc_side, derivable = _rule_plan(base.sparkSession, _schema_layers(base, max_iter))
+    rows = delta.select("subj", "pred", "obj", "obj_is_iri")
+    derived = _min_rule(_apply_rules(rows, acts, subc_side))
     # subtract what base∪delta asserts AND what base already entailed;
     # the maintained table is restricted by semi-join to the rows this
     # delta could re-derive before the anti (slim probe, no full scan
     # shipped)
-    asserted = both.select(*spo).distinct()
     old_derived = entailed_base.join(derived.select(*spo), spo, "semi")
-    return derived.join(asserted, spo, "anti").join(
+    return derived.join(derivable(both).select(*spo), spo, "anti").join(
         old_derived.select(*spo), spo, "anti"
     )
 
@@ -545,10 +505,6 @@ SYNTH_OWL_TRIPLES: list[tuple] = [
 
 
 def synth_owl_schema(spark) -> DataFrame:
-    from rdf2smw_spark.schemas import TRIPLE_SCHEMA
-
-    from rdf2smw_spark.session import small_local_df
-
     return small_local_df(spark, SYNTH_OWL_TRIPLES, TRIPLE_SCHEMA)
 
 

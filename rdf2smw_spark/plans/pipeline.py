@@ -112,10 +112,14 @@ def decontaminate_pages(extracted: DataFrame, benchmark: DataFrame) -> DataFrame
     return extracted.join(clean, "url")
 
 
+# the CLI's --entail choices: each family alone, or both over the same input
+ENTAIL_MODES = ("rdfs", "owl", "rdfs+owl")
+
+
 def entail_triples(triples: DataFrame, mode: str) -> DataFrame:
     """ENTAIL stage: union the schema-implied triples into the stream so
     downstream pages carry the facts the ontology implies, not just the
-    asserted ones. mode ∈ {"rdfs", "owl", "rdfs+owl"} — one pass of
+    asserted ones. mode is one of ENTAIL_MODES — one pass of
     each selected family over the SAME input (rho-df needs no instance
     fixpoint; OWL-lite runs its own bounded one internally; the two
     families are not chained into each other). Derived triples carry
@@ -124,9 +128,12 @@ def entail_triples(triples: DataFrame, mode: str) -> DataFrame:
     documented divergence, the safe default)."""
     from rdf2smw_spark.operators.rdfs import owl_entail, rdfs_entail
 
+    if mode not in ENTAIL_MODES:
+        raise ValueError(f"unknown entailment mode: {mode!r}")
+    families = mode.split("+")
     out = triples
     parts = []
-    if "rdfs" in mode:
+    if "rdfs" in families:
         parts.append(
             rdfs_entail(triples).select(
                 "subj", "pred", "obj", "obj_is_iri",
@@ -134,7 +141,7 @@ def entail_triples(triples: DataFrame, mode: str) -> DataFrame:
                 F.concat(F.lit("entail://"), F.col("rule")).alias("src_url"),
             )
         )
-    if "owl" in mode:
+    if "owl" in families:
         parts.append(
             owl_entail(triples).select(
                 "subj", "pred", "obj", "obj_is_iri",
@@ -142,8 +149,6 @@ def entail_triples(triples: DataFrame, mode: str) -> DataFrame:
                 F.lit("entail://owl").alias("src_url"),
             )
         )
-    if not parts:
-        raise ValueError(f"unknown entailment mode: {mode!r}")
     for p in parts:
         out = out.unionByName(p)
     return out
@@ -334,14 +339,9 @@ def run_web_pipeline(
     if sparql is not None:
         from rdf2smw_spark.sparql import sparql_query
 
-        form, qdf = sparql_query(raw_triples, sparql)
-        qpath = os.path.join(work_dir, "sparql")
-        res["sparql"] = {
-            "form": form,
-            "result": qpath,
-            "n_rows": write_counted(qdf, qpath),
-            "columns": qdf.columns,
-        }
+        res["sparql"] = _write_sparql_result(
+            *sparql_query(raw_triples, sparql), os.path.join(work_dir, "sparql")
+        )
     # every stage is checkpointed and counted: the builders' scoped
     # persists (minhash bands, decontam n-grams, fuzzy-link map,
     # conversion dims) are dead weight now — release them so a
@@ -369,6 +369,31 @@ def read_rdf_any(spark: SparkSession, path: str):
     return read_ntriples(spark, path)
 
 
+def query_rdf(
+    spark: SparkSession, in_path: str, query: str, entail: str | None = None
+):
+    """Read any supported RDF input, optionally ENTAIL it, and plan a
+    SPARQL query over it -> (form, result frame, quarantined bad lines):
+    the one plan the CLI's --sparql writes and --explain prints."""
+    from rdf2smw_spark.sparql import sparql_query
+
+    triples, bad = read_rdf_any(spark, in_path)
+    if entail is not None:
+        triples = entail_triples(triples, entail)
+    form, df = sparql_query(triples, query)
+    return form, df, bad
+
+
+def _write_sparql_result(form: str, df: DataFrame, out_path: str) -> dict:
+    """Write a query result as parquet -> its summary record."""
+    return {
+        "form": form,
+        "result": out_path,
+        "n_rows": write_counted(df, out_path),
+        "columns": df.columns,
+    }
+
+
 def run_sparql(
     spark: SparkSession,
     in_path: str,
@@ -381,20 +406,9 @@ def run_sparql(
     out_dir/sparql plus a result summary. CONSTRUCT and DESCRIBE emit
     TRIPLE_SCHEMA, so their output can be fed straight back through
     --in for conversion to wiki pages."""
-    from rdf2smw_spark.sparql import sparql_query
-
-    triples, bad = read_rdf_any(spark, in_path)
-    if entail is not None:
-        triples = entail_triples(triples, entail)
-    form, df = sparql_query(triples, query)
-    out_path = os.path.join(out_dir, "sparql")
-    res = {
-        "form": form,
-        "result": out_path,
-        "n_rows": write_counted(df, out_path),
-        "columns": df.columns,
-        "bad_lines": bad.count(),
-    }
+    form, df, bad = query_rdf(spark, in_path, query, entail)
+    res = _write_sparql_result(form, df, os.path.join(out_dir, "sparql"))
+    res["bad_lines"] = bad.count()
     release_scoped_caches()
     return res
 

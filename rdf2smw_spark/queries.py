@@ -2227,8 +2227,8 @@ HAVING COUNT(*) > COUNT(DISTINCT cust_uri)
 def q_kg_rdfs_incremental(spark, sf_dir):
     """Semi-naive entailment maintenance: the orderkey%9 slice of the
     KG arrives as a delta; the schema probe finds no schema edge in it,
-    so the forward rules run over the delta only against the base's
-    closed schema — the maintained entailment table is touched by one
+    so rdfs_entail's rule applier runs over the delta only against the
+    base's closed schema — the maintained entailment table is touched by one
     delta-restricted semi+anti join. Oracle computes entail(all) minus
     entail(base) directly, so a green row proves the fast path equals
     the full recompute (operators/rdfs.py rdfs_entail_incremental)."""

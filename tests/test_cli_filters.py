@@ -2,6 +2,8 @@
 
 import json
 
+import pytest
+
 from rdf2smw_spark.operators.filters import filter_pages_by_category
 from rdf2smw_spark.schemas import URI_TYPE_UNDEFINED, WIKI_PAGE_SCHEMA
 
@@ -58,3 +60,15 @@ def test_cli_entail_rdfs_adds_derived_facts(spark, tmp_path, capsys):
     # s rdf:type C derived by rdfs2 -> rendered as a category of S
     assert "Category:C" in ent_xml
     assert res["n_pages"] >= 3
+
+
+@pytest.mark.parametrize("mode", ["nordfs", "xowl", "owl+rdfs", "RDFS"])
+def test_entail_triples_rejects_unknown_modes(spark, mode):
+    """Only the CLI's --entail choices select entailment families: a mode
+    that merely contains "rdfs" or "owl" is an error, not a run."""
+    from rdf2smw_spark.plans.pipeline import entail_triples
+    from rdf2smw_spark.schemas import TRIPLE_SCHEMA
+
+    triples = spark.createDataFrame([], TRIPLE_SCHEMA)
+    with pytest.raises(ValueError, match="unknown entailment mode"):
+        entail_triples(triples, mode)

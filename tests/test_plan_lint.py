@@ -279,6 +279,34 @@ def test_source_lint_one_ivm_parse_and_merge():
     assert src.count(".unionByName(") == 2, "merge deltas through ivm._merge"
 
 
+# --- source lint: one RDFS rule applier ----------------------------------------
+#
+# operators/rdfs.py applies the instance-side rules at one site,
+# _apply_rules (one join against the per-predicate action table plus the
+# asserted-type lift), for the full entailment and the incremental
+# maintenance alike. A second rule chain would need its own proof that
+# it agrees with the first.
+def test_source_lint_one_rdfs_rule_applier():
+    import ast
+    import pathlib
+
+    import rdf2smw_spark
+
+    src = (pathlib.Path(rdf2smw_spark.__file__).parent / "operators" / "rdfs.py").read_text()
+    callers = sorted(
+        fn.name
+        for fn in ast.parse(src).body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_apply_rules"
+    )
+    assert callers == ["rdfs_entail", "rdfs_entail_incremental"], (
+        f"_apply_rules called from {callers} — entail through rdfs_entail"
+    )
+    for gone in ("_forward_rules", "_broadcast_known", "_collect_small"):
+        assert gone not in src, f"{gone} is back in operators/rdfs.py"
+
+
 # --- source lint: one session factory ------------------------------------------
 #
 # session.get_spark is the one place every session is built, so the

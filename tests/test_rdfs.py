@@ -99,25 +99,28 @@ def _entail_set(df):
     return {(r.subj, r.pred, r.obj, r.obj_is_iri, r.rule) for r in df.collect()}
 
 
-# Both sides of the schema-layer guard: the driver closure and the
-# distributed loop (no driver collect at all).
-_COLLECT_LIMITS = pytest.mark.parametrize(
-    "collect_limit", [None, -1], ids=["default", "distributed"]
+# Both sides of the schema-layer guard (the driver closure and the
+# distributed loop, no driver collect at all) and of the action-table
+# guard (the driver composer and the DataFrame composer).
+_LIMITS = pytest.mark.parametrize(
+    "limits",
+    [{}, {"CLOSURE_COLLECT_LIMIT": -1}, {"ACTION_TABLE_LIMIT": -1}],
+    ids=["default", "distributed", "composed"],
 )
 
 
-def _set_collect_limit(monkeypatch, collect_limit):
+def _set_limits(monkeypatch, limits):
     import rdf2smw_spark.operators.rdfs as rdfs_mod
 
-    if collect_limit is not None:
-        monkeypatch.setattr(rdfs_mod, "CLOSURE_COLLECT_LIMIT", collect_limit)
+    for name, value in limits.items():
+        monkeypatch.setattr(rdfs_mod, name, value)
 
 
-@_COLLECT_LIMITS
-def test_incremental_instance_delta_equals_full(spark, monkeypatch, collect_limit):
+@_LIMITS
+def test_incremental_instance_delta_equals_full(spark, monkeypatch, limits):
     """Fast path: instance-only delta — maintained table ∪ incremental
     delta must equal the full recompute, tags included."""
-    _set_collect_limit(monkeypatch, collect_limit)
+    _set_limits(monkeypatch, limits)
     base = spark.createDataFrame(T, TRIPLE_SCHEMA)
     delta = spark.createDataFrame(
         [
@@ -134,15 +137,16 @@ def test_incremental_instance_delta_equals_full(spark, monkeypatch, collect_limi
     d = {(r.subj, r.pred, r.obj) for r in inc.collect()}
     assert ("z", "q", "w") in d and ("w", TYPE, "A") in d
     assert ("z", TYPE, "B") in d  # delta type climbs the closed chain
+    assert ("w", TYPE, "C") in d  # so does the range-derived type
     # base-derived rows never reappear in the incremental output
     assert ("y", TYPE, "A") not in d
 
 
-@_COLLECT_LIMITS
-def test_incremental_schema_delta_falls_back(spark, monkeypatch, collect_limit):
+@_LIMITS
+def test_incremental_schema_delta_falls_back(spark, monkeypatch, limits):
     """A delta carrying a schema edge must take the full-rebuild path
     and still return exactly the added rows."""
-    _set_collect_limit(monkeypatch, collect_limit)
+    _set_limits(monkeypatch, limits)
     base = spark.createDataFrame(T, TRIPLE_SCHEMA)
     delta = spark.createDataFrame(
         [("C", SUBC, "E", True, None, "t")],  # extends the class chain
@@ -238,28 +242,43 @@ def test_cyclic_schema_terminates(spark):
     assert ("A", SUBC, "A") in d and ("B", SUBC, "B") in d
 
 
-def test_fused_equals_generic_formulation(spark, monkeypatch):
-    """The fused action-table plan (schema layers composed on the
-    driver, r6 optimization) must emit exactly the rows + rule tags of
-    the generic join formulation, of the dense-closure fallback and of
-    the fully distributed path, on a fixture where every rule fires."""
+def test_action_table_composers_agree(spark, monkeypatch):
+    """The driver composer and the DataFrame composer build the same
+    (pred, kind, arg) -> rule table on a fixture where every rule fires,
+    from local schema layers and from distributed ones."""
     import rdf2smw_spark.operators.rdfs as rdfs_mod
 
     df = spark.createDataFrame(T, TRIPLE_SCHEMA)
-    fused = _entail_set(rdfs_entail(df))
-    # force the generic join formulation (action table disabled)
-    monkeypatch.setattr(rdfs_mod, "ACTION_TABLE_LIMIT", -1)
-    generic = _entail_set(rdfs_entail(df))
-    # the probe still fits, but every driver closure counts as too dense:
-    # subClassOf/subPropertyOf close in the distributed loop, while
-    # domain/range stay local frames
-    with monkeypatch.context() as m:
-        m.setattr(rdfs_mod, "CLOSURE_PAIR_LIMIT", -1)
-        dense = _entail_set(rdfs_entail(df))
-    # force the fully distributed path (no driver collects at all)
+    local = rdfs_mod._schema_layers(df, 10)
+    driver = rdfs_mod._fused_actions(*(pairs for _, pairs in local))
+    assert {k for _, k, _ in driver} == {"d7", "dom", "rng"}
+
+    def composed(layers):
+        rows = rdfs_mod._composed_actions(layers).collect()
+        return {(r.pred, r.kind, r.arg): r.rule for r in rows}
+
+    assert composed(local) == driver
     monkeypatch.setattr(rdfs_mod, "CLOSURE_COLLECT_LIMIT", -1)
-    distributed = _entail_set(rdfs_entail(df))
-    assert fused == generic == dense == distributed
+    distributed = rdfs_mod._schema_layers(df, 10)
+    assert all(pairs is None for _, pairs in distributed)
+    assert composed(distributed) == driver
+
+
+def test_rule_plan_paths_agree(spark, monkeypatch):
+    """rdfs_entail emits the same rows and rule tags on every side of
+    its guards: the driver-composed action table, the DataFrame-composed
+    one, the dense-closure fallback and the fully distributed path."""
+    import rdf2smw_spark.operators.rdfs as rdfs_mod
+
+    df = spark.createDataFrame(T, TRIPLE_SCHEMA)
+    default = _entail_set(rdfs_entail(df))
+    for name in ("ACTION_TABLE_LIMIT", "CLOSURE_PAIR_LIMIT", "CLOSURE_COLLECT_LIMIT"):
+        # CLOSURE_PAIR_LIMIT: the probe still fits, but every driver
+        # closure counts as too dense, so subClassOf/subPropertyOf close
+        # in the distributed loop while domain/range stay local frames
+        with monkeypatch.context() as m:
+            m.setattr(rdfs_mod, name, -1)
+            assert _entail_set(rdfs_entail(df)) == default, name
 
 
 def test_owl_local_equals_distributed(spark, monkeypatch):

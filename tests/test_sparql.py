@@ -363,6 +363,32 @@ def test_cli_sparql_select_and_construct_roundtrip(spark, tmp_path, capsys):
         "http://e/o", "http://e/from", "http://e/s", True)
 
 
+def test_cli_explain_plans_what_sparql_runs(spark, tmp_path, capsys):
+    """--explain prints the plan --sparql executes, entailment included:
+    same form and columns, and the derived row the run returns."""
+    import json
+
+    from rdf2smw_spark.__main__ import main
+
+    nt = tmp_path / "in.nt"
+    nt.write_text(
+        "<http://e/p> <http://www.w3.org/2000/01/rdf-schema#domain> <http://e/C> .\n"
+        '<http://e/s> <http://e/p> "v" .\n'
+    )
+    args = ["--in", str(nt), "--entail", "rdfs", "--sparql",
+            "SELECT ?s WHERE { ?s <http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+            " <http://e/C> . }"]
+    assert main(args + ["--out", str(tmp_path / "run")]) == 0
+    run = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert run["n_rows"] == 1  # s type C, derived by rdfs2
+    assert main(args + ["--out", str(tmp_path / "explain"), "--explain"]) == 0
+    out = capsys.readouterr().out
+    assert "Physical Plan" in out
+    assert json.loads(out.strip().splitlines()[-1]) == {
+        "form": run["form"], "explained": True, "columns": run["columns"],
+    }
+
+
 # -- property paths -----------------------------------------------------------------
 
 @pytest.fixture(scope="module")
